@@ -40,7 +40,8 @@ object PhaseLab {
       val codes = graft.operators.Pq.encode(res, book, 64, 2)
       val q0 = t("q0 collect") {
         res.filter(col("vec_id") === 0).select(col("embedding"), col("bucket"))
-          .collect().head
+          .collect().headOption.getOrElse(throw new IllegalStateException(
+            "PhaseLab queries vec_id 0, which this embeddings table does not hold"))
       }
       val cands = codes.join(
         res.filter(col("bucket") === q0.getInt(1)).select("vec_id"),

@@ -20,13 +20,15 @@ import org.apache.spark.sql.functions._
   * Scale shape: [[applyDelta]] touches |view| + |delta| rows — the
   * delta partials are grouped BEFORE the merge join (map-side combine
   * applies), and the join keys are the view's own group keys, so with
-  * the view bucketed on them the merge is co-partitioned. [[delta]]
-  * derives a change bag from two table versions via EXCEPT ALL both
-  * ways — the version-log fallback (one shuffle over each side,
-  * delta-sized output); a real CDC feed should hand its changes to
-  * [[applyDelta]] directly and skip that scan entirely
-  * (`streaming.MvSink` does exactly that from the upsert stream's
-  * per-batch winners/pre-image pair).
+  * the view bucketed on them the merge is co-partitioned. A keyed
+  * write hands its own change set to [[changeBag]] (+written,
+  * −replaced, both read off the write's matched-key probe), so its
+  * maintenance never scans the table: `streaming.MvSink` per batch,
+  * and in `server.SqlRouter` ingest, UPSERT and INSERT. [[delta]]
+  * derives a bag from two table versions via EXCEPT ALL both ways —
+  * the version-log fallback (a shuffle over each whole version,
+  * delta-sized output), left to statements that supply no change set:
+  * UPDATE, DELETE, RESTORE and SYNC.
   *
   * Contract: group keys must be non-null — the merge is an equi-join
   * on them, and a null key would group in the aggregate but never
@@ -51,6 +53,15 @@ object Mvm {
     n.exceptAll(o).withColumn(MultCol, lit(1L))
       .unionByName(o.exceptAll(n).withColumn(MultCol, lit(-1L)))
   }
+
+  /** The change bag of one keyed write, read off the write itself:
+    * the rows it wrote at +1, the rows it replaced at −1 (same
+    * columns). Unlike [[delta]] it scans no table version — and a
+    * row rewritten unchanged appears at both signs, which every
+    * aggregate below cancels. */
+  def changeBag(written: DataFrame, replaced: DataFrame): DataFrame =
+    written.withColumn(MultCol, lit(1L))
+      .unionByName(replaced.withColumn(MultCol, lit(-1L)))
 
   /** Compute the view directly — the bootstrap (and the recompute an
     * incremental result must equal). `countCol` maintains COUNT(*);
@@ -94,23 +105,30 @@ object Mvm {
   /** [[applyDelta]]/[[applyDeltaExtrema]] with the AVG layer: backing
     * sums/counts maintain as ordinary distributive columns, visible
     * averages recompute from them afterwards. `base` is required only
-    * when `mins`/`maxs` are present (delete-repair). */
+    * when `mins`/`maxs` are present (delete-repair). `touchedOnly`
+    * returns just the groups the bag touches (surviving ones; dead
+    * groups drop as always) instead of the whole view — the rows a
+    * keyed replace of those groups commits. */
   def applyDeltaAll(mv: DataFrame, deltaBag: DataFrame,
                     base: Option[DataFrame], keys: Seq[String],
                     countCol: String, sums: Seq[(String, Column)],
                     mins: Seq[(String, Column)], maxs: Seq[(String, Column)],
-                    avgs: Seq[(String, Column)]): DataFrame = {
+                    avgs: Seq[(String, Column)],
+                    touchedOnly: Boolean = false): DataFrame = {
     val allSums = sums ++ avgBacking(avgs)
     val core =
       if (mins.isEmpty && maxs.isEmpty)
-        applyDelta(mv, deltaBag, keys, countCol, allSums)
+        applyDelta(mv, deltaBag, keys, countCol, allSums, touchedOnly)
       else
         applyDeltaExtrema(mv, deltaBag,
           base.getOrElse(throw new IllegalArgumentException(
             "MIN/MAX maintenance needs the post-mutation base table")),
-          keys, countCol, allSums, mins, maxs)
+          keys, countCol, allSums, mins, maxs, touchedOnly)
     withAvgs(core, countCol, avgs)
   }
+
+  private def mergeJoin(touchedOnly: Boolean): String =
+    if (touchedOnly) "right_outer" else "full_outer"
 
   /** Merge a change bag into the view: aggregate the delta's partials
     * per group (COUNT -> SUM(mult), SUM(x) -> SUM(mult * x)), full-
@@ -118,9 +136,12 @@ object Mvm {
     * sides (new groups arrive, untouched groups carry), drop groups
     * whose maintained count is 0. The result is row-identical to
     * [[compute]] over the mutated base — MvmSpec pins that identity
-    * and the q141 gate proves it against the DuckDB recompute. */
+    * and the q141 gate proves it against the DuckDB recompute. With
+    * `touchedOnly` the join is right-outer (the view side may then
+    * broadcast) and untouched groups are left out. */
   def applyDelta(mv: DataFrame, deltaBag: DataFrame, keys: Seq[String],
-                 countCol: String, sums: Seq[(String, Column)]): DataFrame = {
+                 countCol: String, sums: Seq[(String, Column)],
+                 touchedOnly: Boolean = false): DataFrame = {
     require(keys.nonEmpty, "at least one group key")
     val outCols = countCol +: sums.map(_._1)
     require(outCols.forall(mv.columns.contains),
@@ -128,7 +149,7 @@ object Mvm {
     val partials = deltaBag.groupBy(keys.map(col): _*)
       .agg(sum(col(MultCol)).as(s"__d_$countCol"),
         sums.map { case (nm, e) => sum(col(MultCol) * e).as(s"__d_$nm") }: _*)
-    mv.join(partials, keys, "full_outer")
+    mv.join(partials, keys, mergeJoin(touchedOnly))
       .select(keys.map(col) ++ outCols.map(c =>
         (coalesce(col(c), lit(0L)) + coalesce(col(s"__d_$c"), lit(0L))).as(c)): _*)
       .filter(col(countCol) > 0)
@@ -154,9 +175,10 @@ object Mvm {
                         keys: Seq[String], countCol: String,
                         sums: Seq[(String, Column)],
                         mins: Seq[(String, Column)],
-                        maxs: Seq[(String, Column)]): DataFrame = {
+                        maxs: Seq[(String, Column)],
+                        touchedOnly: Boolean = false): DataFrame = {
     if (mins.isEmpty && maxs.isEmpty)
-      return applyDelta(mv, deltaBag, keys, countCol, sums)
+      return applyDelta(mv, deltaBag, keys, countCol, sums, touchedOnly)
     val outCols = countCol +: sums.map(_._1)
     val extCols = mins.map(_._1) ++ maxs.map(_._1)
     require((outCols ++ extCols).forall(mv.columns.contains),
@@ -171,7 +193,7 @@ object Mvm {
             min(when(ins, e)).as(s"__i_$nm"), min(when(del, e)).as(s"__x_$nm")) } ++
           maxs.flatMap { case (nm, e) => Seq(
             max(when(ins, e)).as(s"__i_$nm"), max(when(del, e)).as(s"__x_$nm")) }: _*)
-    val joined = mv.join(partials, keys, "full_outer")
+    val joined = mv.join(partials, keys, mergeJoin(touchedOnly))
     // a group is dirty when a deleted value ties-or-beats the stored
     // extremum (a null stored extremum means no live non-null value —
     // inserts alone determine the new one, no repair needed)

@@ -193,29 +193,36 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
   /** Post-DML incremental maintenance: every materialized view over
     * `tbl` absorbs the (preVersion -> newVersion) delta — delta-sized
     * work via the same [[graft.operators.Mvm]] algebra the streaming
-    * sink uses. A mutation that matched nothing returns the CURRENT
-    * snapshot without committing (preVersion == newVersion) — that
-    * must be a maintenance no-op, not a re-applied previous delta
-    * (caught by the SqlRouterSpec fuzz). Columns are the two
-    * versions' intersection, so a metadata-only schema evolution
-    * between reads cannot break the diff (an MV whose expressions
+    * sink uses. `changes` is the statement's own change set, whose
+    * +written/−replaced rows ([[graft.operators.Mvm.changeBag]]) are
+    * the delta: ingest, UPSERT and INSERT supply it, so their
+    * maintenance never scans the table. Statements without one (UPDATE, DELETE,
+    * RESTORE, SYNC) fall back to [[graft.operators.Mvm.delta]] of
+    * the two versions. A mutation that matched nothing returns the
+    * CURRENT snapshot without committing (preVersion == newVersion)
+    * — that must be a maintenance no-op, not a re-applied previous
+    * delta (caught by the SqlRouterSpec fuzz). The fallback diffs the
+    * two versions' shared columns, so a metadata-only schema
+    * evolution between reads cannot break it (an MV whose expressions
     * need the new column fails loudly at resolution — REFRESH it
     * instead). */
-  private def maintainViews(tbl: String, preVersion: Int,
-                            newVersion: Int): Unit = {
+  private def maintainViews(tbl: String, preVersion: Int, newVersion: Int,
+                            changes: Option[ManagedTable.ChangeSet] = None): Unit = {
     val specs = mviews.values.filter(_.members.contains(tbl))
     if (specs.nonEmpty && newVersion > preVersion) {
       val r = root(tbl)
-      val oldV = ManagedTable.read(spark, r, asOf = Some(preVersion))
-      val newV = ManagedTable.read(spark, r, asOf = Some(newVersion))
-      val shared = newV.columns.filter(oldV.columns.contains).toSeq
-      // views share one bag; a FILTERED view diffs its own predicate's
-      // restriction of both versions — a row entering/leaving the
-      // predicate then shows up as an add/remove, which is exactly the
-      // delta its rollup needs. (Join views filter AFTER the delta is
-      // joined — their predicate may reference other members.)
-      lazy val commonBag =
-        graft.operators.Mvm.delta(oldV, newV, shared).localCheckpoint()
+      lazy val oldV = ManagedTable.read(spark, r, asOf = Some(preVersion))
+      lazy val newV = ManagedTable.read(spark, r, asOf = Some(newVersion))
+      lazy val shared = newV.columns.filter(oldV.columns.contains).toSeq
+      // views share one bag; a FILTERED view restricts it to its own
+      // predicate — a row entering/leaving the predicate then shows up
+      // as an add/remove, which is exactly the delta its rollup needs.
+      // (Join views filter AFTER the delta is joined — their predicate
+      // may reference other members.)
+      val changeBag =
+        changes.map(cs => graft.operators.Mvm.changeBag(cs.written, cs.replaced))
+      lazy val commonBag = changeBag.getOrElse(
+        graft.operators.Mvm.delta(oldV, newV, shared).localCheckpoint())
       specs.foreach { mv =>
         def cols(xs: Seq[(String, String)]) =
           xs.map { case (n, e) => (n, parseCol(e)) }
@@ -225,8 +232,9 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
             case None => (commonBag, newV)
             case Some(w) =>
               val pred = parseCol(w)
-              (graft.operators.Mvm.delta(oldV.filter(pred), newV.filter(pred), shared)
-                .localCheckpoint(), newV.filter(pred))
+              (changeBag.map(_.filter(pred)).getOrElse(
+                graft.operators.Mvm.delta(oldV.filter(pred), newV.filter(pred), shared)
+                  .localCheckpoint()), newV.filter(pred))
           }
           graft.streaming.MvSink.mergeBagIntoView(spark, mv.root, bag,
             mv.keys, mv.countCol, cols(mv.sums), mins, maxs,
@@ -261,6 +269,9 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       }
     }
   }
+
+  private def hasViews(tbl: String): Boolean =
+    mviews.values.exists(_.members.contains(tbl))
 
   /** A join view's NORMALIZED input relation: the declared inner-join
     * tree (each member aliased by its table name, so qualified
@@ -308,15 +319,17 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     val pre = ManagedTable.history(spark, r).last
     // no explicit order -> the key columns themselves: an arbitrary
     // but DETERMINISTIC winner for in-batch duplicate keys
+    // materialized once: counted here, then read by the MERGE
     val winners = graft.streaming.ManagedSink.latestPerKey(
-      batch, keys, if (orderCols.nonEmpty) orderCols else keys)
+      batch, keys, if (orderCols.nonEmpty) orderCols else keys).localCheckpoint()
     // in-batch duplicate keys reduce to fewer winners before the MERGE;
     // report what was APPLIED, not what was submitted (HTTP batches are
     // driver-resident and small, so this count is cheap)
     val applied = winners.count()
-    val snap = ManagedTable.upsert(spark, r, align(winners, pre.schema), keys)
+    val cs = ManagedTable.upsertChanges(spark, r, align(winners, pre.schema), keys)
+    val snap = cs.snapshot
     refreshView(name)
-    maintainViews(name, pre.version, snap.version)
+    maintainViews(name, pre.version, snap.version, Some(cs))
     import spark.implicits._
     Seq(("ingest", name, snap.version, applied))
       .toDF("op", "tbl", "version", "n_applied")
@@ -603,9 +616,15 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     case Insert(name, rest) if tables.contains(name) =>
       val r = mutableRoot(name)
       val pre = ManagedTable.history(spark, r).last
-      val snap = ManagedTable.insert(spark, r, align(query(rest), pre.schema))
+      val rows = align(query(rest), pre.schema)
+      // with views to maintain, the inserted rows are read twice (the
+      // write, then the view bag): materialize them once so both see
+      // the same rows
+      val cs = ManagedTable.insertChanges(spark, r,
+        if (hasViews(name)) rows.localCheckpoint() else rows)
+      val snap = cs.snapshot
       refreshView(name)
-      maintainViews(name, pre.version, snap.version)
+      maintainViews(name, pre.version, snap.version, Some(cs))
       summary("insert", name, snap.version)
 
     case Update(name, rest) if tables.contains(name) =>
@@ -858,9 +877,10 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       val r = mutableRoot(name)
       val pre = ManagedTable.history(spark, r).last
       val keyCols = splitTop(keys, ',').map(_.trim)
-      val snap = ManagedTable.upsert(spark, r, align(query(rest), pre.schema), keyCols)
+      val cs = ManagedTable.upsertChanges(spark, r, align(query(rest), pre.schema), keyCols)
+      val snap = cs.snapshot
       refreshView(name)
-      maintainViews(name, pre.version, snap.version)
+      maintainViews(name, pre.version, snap.version, Some(cs))
       summary("merge", name, snap.version)
 
     // CREATE MATERIALIZED VIEW mv OVER t KEY (g) COUNT n

@@ -365,7 +365,15 @@ object ManagedTable {
   /** INSERT: append rows. Pure addition — no existing file is read or
     * rewritten, so insert cost scales with the inserted rows only.
     */
-  def insert(spark: SparkSession, root: String, rows: DataFrame): Snapshot = {
+  def insert(spark: SparkSession, root: String, rows: DataFrame): Snapshot =
+    insertChanges(spark, root, rows).snapshot
+
+  /** [[insert]], returning its [[ChangeSet]]: `written` is the admitted
+    * rows (quarantined ones excluded), `replaced` is empty. Rows that
+    * passed write-time constraints are materialized; an unconstrained
+    * insert's `written` is `rows` itself, so pass a materialized frame
+    * when the change set must read back exactly what landed. */
+  def insertChanges(spark: SparkSession, root: String, rows: DataFrame): ChangeSet = {
     val snap = latest(spark, root)
     requireSchema(rows, snap, "insert")
     // write-time constraints (declared at CREATE): violating rows are
@@ -376,10 +384,12 @@ object ManagedTable {
         Constraints.enforceInsert(spark, root, rows, read(spark, root), spec)
       case _ => rows
     }
-    if ((admitted ne rows) && admitted.isEmpty) return snap // all quarantined
+    val none = emptyFrame(spark, snap)
+    if ((admitted ne rows) && admitted.isEmpty) // all quarantined
+      return ChangeSet(snap, none, none)
     val added = writeData(admitted, root, snap.physical)
-    commit(spark, root, Snapshot(snap.version + 1, "insert", snap.schemaDdl,
-      snap.files ++ added, physical = snap.physical))
+    ChangeSet(commit(spark, root, Snapshot(snap.version + 1, "insert", snap.schemaDdl,
+      snap.files ++ added, physical = snap.physical)), admitted, none)
   }
 
   /** Read a snapshot (latest, or time-travel to `asOf`). The scan is a
@@ -558,14 +568,21 @@ object ManagedTable {
     * table the predicate's parquet min/max pushdown already skips
     * non-matching files, so the probe reads footer-pruned data only.
     */
-  private def affectedFiles(cur: DataFrame, root: String, hit: Column): Seq[String] = {
+  private def affectedFiles(cur: DataFrame, root: String, hit: Column): Seq[String] =
+    fileNames(cur.withColumn("_graft_file", input_file_name()).filter(hit), root)
+
+  /** The distinct `_graft_file` values of `withFile`, as paths
+    * relative to `root`, sorted — the collected end of a probe.
+    * Deduplicated within each partition first (a partition reads few
+    * files), so the collect returns a handful of names per partition
+    * and the probe needs no shuffle. */
+  private def fileNames(withFile: DataFrame, root: String): Seq[String] = {
     val rootUri = new Path(root).toUri.getPath
-    cur.withColumn("_graft_file", input_file_name())
-      .filter(hit)
-      .select("_graft_file").distinct()
-      .collect()
-      .map { r =>
-        val p = new Path(r.getString(0)).toUri.getPath
+    withFile.select("_graft_file").rdd
+      .mapPartitions(_.map(_.getString(0)).toSet.iterator)
+      .collect().distinct
+      .map { f =>
+        val p = new Path(f).toUri.getPath
         val i = p.indexOf(rootUri)
         require(i >= 0, s"data file $p outside table root $root")
         p.substring(i + rootUri.length).stripPrefix("/")
@@ -633,8 +650,9 @@ object ManagedTable {
       }: _*)), "update")
   }
 
-  /** The merge probe's key frame: the source's distinct keys, hinted
-    * for broadcast ONLY when provably small. A localCheckpointed frame
+  /** The merge probe's key frame: the `keys` columns of `keySet`
+    * (which holds `nKeys` DISTINCT key tuples), hinted for broadcast
+    * ONLY when provably small. A localCheckpointed frame
     * reports unknown (maximal) size to the planner, so it will never
     * auto-broadcast on stats — but an UNCONDITIONAL hint (the previous
     * formulation) forced a broadcast at ANY size, an OOM ceiling for
@@ -646,38 +664,83 @@ object ManagedTable {
     * correct shape for a big merge source. `private[graft]` so
     * ManagedTableSpec can assert the actual probe plan both ways.
     */
-  private[graft] def mergeKeyFrame(src: DataFrame, keys: Seq[String],
+  private[graft] def mergeKeyFrame(keySet: DataFrame, keys: Seq[String],
                                    nKeys: Long, keyWidth: Long): DataFrame = {
-    val kf = src.select(keys.map(col): _*).distinct()
-    val threshold = src.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val kf = keySet.select(keys.map(col): _*)
+    val threshold = keySet.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     if (threshold > 0 && nKeys * keyWidth <= threshold) broadcast(kf) else kf
   }
 
-  /** Relative paths (vs `root`) of the data files holding at least one
-    * row whose key tuple appears in `keyFrame` — the matched-file
-    * probe shared by [[upsert]] and [[deleteKeys]]: a distributed
-    * semi-join (keyFrame broadcast only when [[mergeKeyFrame]] measured
-    * it small), collecting file PATHS only — metadata-scale. */
-  private def filesMatchingKeys(cur: DataFrame, root: String,
-                                keyFrame: DataFrame, keys: Seq[String]): Seq[String] = {
-    val rootUri = new Path(root).toUri.getPath
-    cur.withColumn("_graft_file", input_file_name())
-      .join(keyFrame, keys, "left_semi")
-      .select("_graft_file").distinct().collect()
-      .map { r =>
-        val p = new Path(r.getString(0)).toUri.getPath
-        val i = p.indexOf(rootUri)
-        require(i >= 0, s"data file $p outside table root $root")
-        p.substring(i + rootUri.length).stripPrefix("/")
-      }.toSeq.sorted
+  /** The key-replace core shared by [[upsertChanges]] and
+    * [[deleteKeys]]: in ONE commit, drop every current row whose key
+    * tuple is in `keySet` (materialized, its `keys` columns distinct
+    * and null-free, `nKeys` tuples) and add `rows` (already admitted and materialized, their
+    * keys a subset of `keySet`).
+    *
+    * One probe does all the reading: a distributed semi-join of the
+    * snapshot against the key frame (broadcast only when
+    * [[mergeKeyFrame]] measured it small) MATERIALIZES the matched rows
+    * with their file names. Those rows are key-set-sized, not
+    * table-sized; the affected files come from them (only file NAMES
+    * are collected), and they are the replaced rows the returned
+    * [[ChangeSet]] reports — so a caller maintaining something
+    * downstream of this table gets its change set without another
+    * scan. Only affected files are rewritten (left-anti against the
+    * key frame); `rows` append as new files; nothing to drop and
+    * nothing to add commits nothing. */
+  private def replaceKeys(spark: SparkSession, root: String, snap: Snapshot,
+                          rows: Option[DataFrame], keySet: DataFrame, nKeys: Long,
+                          keys: Seq[String], op: String): ChangeSet = {
+    val cols = snap.schema.fieldNames.map(col).toSeq
+    val written = rows.map(_.select(cols: _*)).getOrElse(emptyFrame(spark, snap))
+    if (nKeys == 0) return ChangeSet(snap, written, emptyFrame(spark, snap))
+    // estimated broadcast row width: fixed-size types from the schema
+    // (variable-size defaults are Spark's own per-type estimates) plus
+    // per-row object overhead
+    val keyWidth = keys.map(k => snap.schema(k).dataType.defaultSize.toLong).sum + 16L
+    val kf = mergeKeyFrame(keySet, keys, nKeys, keyWidth)
+    val matched = scanFiles(spark, snap, root, snap.files)
+      .withColumn("_graft_file", input_file_name())
+      .join(kf, keys, "left_semi")
+      .localCheckpoint() // the pre-image: read before anything is rewritten
+    val affected = fileNames(matched, root)
+    // the affected files' survivors and the added rows land in ONE write
+    val survivors =
+      if (affected.isEmpty) None
+      else Some(scanFiles(spark, snap, root, affected)
+        .join(kf, keys, "left_anti").select(cols: _*))
+    val committed = (survivors ++ rows.map(_ => written)).reduceOption(_ unionByName _) match {
+      case None => snap
+      case Some(out) =>
+        commit(spark, root, Snapshot(snap.version + 1, op, snap.schemaDdl,
+          snap.files.filterNot(affected.contains) ++ writeData(out, root, snap.physical),
+          physical = snap.physical))
+    }
+    ChangeSet(committed, written, matched.select(cols: _*))
   }
+
+  /** How many rows of the materialized frame `df` satisfy each of
+    * `conds` — counted per partition, the partition counts collected
+    * and summed: one stage, no shuffle. */
+  private def countWhere(df: DataFrame, conds: Seq[Column]): Seq[Long] = {
+    val n = conds.size
+    df.select(conds.map(c => when(c, 1L).otherwise(0L)): _*).rdd
+      .mapPartitions { it =>
+        val acc = new Array[Long](n)
+        it.foreach(r => (0 until n).foreach(i => acc(i) += r.getLong(i)))
+        Iterator.single(acc)
+      }
+      .collect().foldLeft(Seq.fill(n)(0L))((a, b) => a.zip(b).map { case (x, y) => x + y })
+  }
+
+  private def emptyFrame(spark: SparkSession, snap: Snapshot): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
 
   /** DELETE by key set: drop every current row whose key tuple appears
     * in `keySource` — the apply path for a CDC "removed" delta
     * ([[changes]]), where the doomed rows arrive as a keyed frame, not
-    * a predicate. Copy-on-write like [[upsert]]'s matched-file
-    * rewrite: the semi-join probe finds the files holding matched
-    * keys; only those rewrite (left-anti against the key frame);
+    * a predicate. Copy-on-write through [[upsert]]'s key-replace core
+    * with nothing to add: only files holding matched keys rewrite;
     * everything else carries over untouched. Keys absent from the
     * table are a no-op, so replaying a delta is idempotent; an empty
     * key frame commits nothing.
@@ -689,34 +752,50 @@ object ManagedTable {
     val missing = keys.filterNot(snap.schema.fieldNames.contains)
     require(missing.isEmpty, s"deleteKeys: no such key column(s) ${missing.mkString(", ")}")
     val src = keySource.select(keys.map(col): _*).distinct().localCheckpoint()
-    val nKeys = src.count()
+    val Seq(nKeys, nNullKeys) =
+      countWhere(src, Seq(lit(true), keys.map(col(_).isNull).reduce(_ || _)))
     if (nKeys == 0) return snap
     // loud on NULL key values (same contract as changes()): the
     // left_anti below is null-rejecting, so a null key would silently
     // delete NOTHING — worse than failing
-    val nNullKeys = src.filter(keys.map(col(_).isNull).reduce(_ || _)).count()
     require(nNullKeys == 0,
       s"deleteKeys: $nNullKeys key row(s) with NULL in (${keys.mkString(", ")}) — " +
         "null keys never match (null-rejecting join); filter or fix them first")
-    val keyWidth = keys.map(k => snap.schema(k).dataType.defaultSize.toLong).sum + 16L
-    def kf = mergeKeyFrame(src, keys, nKeys, keyWidth)
-    val affected = filesMatchingKeys(read(spark, root), root, kf, keys)
-    rewrite(spark, root, snap, affected,
-      _.join(kf, keys, "left_anti").select(snap.schema.fieldNames.map(col): _*),
-      "delete")
+    replaceKeys(spark, root, snap, None, src, nKeys, keys, "delete").snapshot
   }
+
+  /** What one write did: the committed `snapshot` (the unchanged
+    * current one when the write committed nothing), the rows
+    * `written` — the admitted source after write-time constraints, so
+    * quarantined rows never appear — and the rows `replaced`: the
+    * pre-image of every matched key. Both frames are materialized and
+    * change-set-sized, in the table's column order; together they are
+    * the write's exact multiset delta (+written, −replaced). */
+  final case class ChangeSet(snapshot: Snapshot, written: DataFrame, replaced: DataFrame)
 
   /** MERGE (upsert): rows of `source` matching on `keys` replace the
     * current rows (whole-row update); unmatched source rows are
-    * inserted. The matched-file probe is a distributed semi-join (the
-    * source's distinct keys broadcast only when measured small — see
-    * [[mergeKeyFrame]]), so only files holding matched keys are
-    * rewritten; inserts append as new files. Source must not contain
-    * duplicate keys (loud check — a dup key would make the merge
-    * result order-dependent).
-    */
+    * inserted. The snapshot-only form of [[upsertChanges]]. */
   def upsert(spark: SparkSession, root: String, source: DataFrame,
-             keys: Seq[String]): Snapshot = {
+             keys: Seq[String]): Snapshot =
+    upsertChanges(spark, root, source, keys).snapshot
+
+  /** [[upsert]], returning its [[ChangeSet]]. The matched-key probe is
+    * a distributed semi-join (the source's distinct keys broadcast only
+    * when measured small — see [[mergeKeyFrame]]) that materializes
+    * the matched rows: only files holding them are rewritten, inserts
+    * append as new files, and the replaced rows come back with no
+    * extra scan. Source must not contain duplicate or NULL keys (loud
+    * checks — a dup key would make the merge result order-dependent).
+    *
+    * `dropKeys`, when given, names further keys whose current rows are
+    * deleted in the SAME commit with no replacement — a keyed
+    * replace: the rows of `dropKeys ∪ keys(source)` become exactly
+    * `source`. Readers see all of it or none of it.
+    */
+  def upsertChanges(spark: SparkSession, root: String, source: DataFrame,
+                    keys: Seq[String],
+                    dropKeys: Option[DataFrame] = None): ChangeSet = {
     val snap = latest(spark, root)
     requireSchema(source, snap, "merge")
     require(keys.nonEmpty, "merge needs at least one key column")
@@ -734,62 +813,33 @@ object ManagedTable {
         Constraints.enforceUpsert(spark, root, source, spec)
       case _ => source
     }
-    if ((admitted ne source) && admitted.isEmpty) return snap // all quarantined
-    val src = admitted.localCheckpoint() // probe + rewrite + insert reuse one materialization
-    // ONE aggregation pass yields both the dup-key guard and the
-    // distinct-key count the broadcast gate needs
-    val keyStats = src.select(keys.map(col): _*)
-      .groupBy(keys.map(col): _*).count()
-      .agg(count(lit(1)).as("n_keys"),
-        count(when(col("count") > 1, 1)).as("n_dup"),
-        count(when(keys.map(col(_).isNull).reduce(_ || _), 1)).as("n_nullkey"))
-      .head()
-    val nKeys = keyStats.getLong(0)
-    val dupKeys = keyStats.getLong(1)
+    val src = admitted.localCheckpoint() // probe + rewrite + insert + change set reuse one materialization
+    // the full key set: the source's keys plus any keys to drop, each
+    // with its multiplicity in the source, grouped ONCE and
+    // materialized — it is the distinct key frame the probe and the
+    // rewrite join, and one pass over it yields the dup-key guard, the
+    // null-key guard, the source's own key count and the distinct-key
+    // count the broadcast gate needs
+    val srcKeys = src.select(keys.map(col) :+ lit(1L).as("_graft_n"): _*)
+    val keySet = dropKeys.fold(srcKeys)(d =>
+      srcKeys.unionByName(d.select(keys.map(col) :+ lit(0L).as("_graft_n"): _*)))
+    val keyCounts = keySet
+      .groupBy(keys.map(col): _*).agg(sum(col("_graft_n")).as("count"))
+      .localCheckpoint()
+    val Seq(nKeys, dupKeys, nullKeys, nSrcKeys) = countWhere(keyCounts, Seq(lit(true),
+      col("count") > 1, keys.map(col(_).isNull).reduce(_ || _), col("count") > 0))
     require(dupKeys == 0,
       s"merge: source has $dupKeys duplicate key group(s) on (${keys.mkString(", ")}) " +
         "— the merge result would be order-dependent; dedup the source first")
     // loud on NULL key values (same contract as changes()/deleteKeys):
     // every merge join is null-rejecting, so a null-key row would never
     // match and re-INSERT on every replay — silent duplicate growth
-    require(keyStats.getLong(2) == 0,
-      s"merge: source has ${keyStats.getLong(2)} key group(s) with NULL in " +
+    require(nullKeys == 0,
+      s"merge: $nullKeys key group(s) with NULL in " +
         s"(${keys.mkString(", ")}) — null keys never match; filter or fix them first")
-    // estimated broadcast row width: fixed-size types from the schema
-    // (variable-size defaults are Spark's own per-type estimates) plus
-    // per-row object overhead
-    val keyWidth = keys.map(k => snap.schema(k).dataType.defaultSize.toLong).sum + 16L
-    val cur = read(spark, root)
-    // matched-file probe: semi-join marks rows whose key exists in source
-    val matchedFiles = {
-      val withFile = cur.withColumn("_graft_file", input_file_name())
-      withFile.join(mergeKeyFrame(src, keys, nKeys, keyWidth), keys, "left_semi")
-        .select("_graft_file").distinct().collect()
-        .map { r =>
-          val rootUri = new Path(root).toUri.getPath
-          val p = new Path(r.getString(0)).toUri.getPath
-          val i = p.indexOf(rootUri)
-          require(i >= 0, s"data file $p outside table root $root")
-          p.substring(i + rootUri.length).stripPrefix("/")
-        }.toSeq.sorted
-    }
-    // rewrite matched files: drop matched rows (they are replaced by source rows)
-    val afterRewrite: Snapshot =
-      if (matchedFiles.isEmpty) snap
-      else {
-        val affectedDf = scanFiles(spark, snap, root, matchedFiles)
-        val survivors = affectedDf.join(
-          mergeKeyFrame(src, keys, nKeys, keyWidth), keys, "left_anti")
-          .select(snap.schema.fieldNames.map(col): _*)
-        val rewritten = writeData(survivors, root, snap.physical)
-        Snapshot(snap.version, "merge", snap.schemaDdl,
-          snap.files.filterNot(matchedFiles.contains) ++ rewritten)
-      }
-    // all source rows land (updates + inserts) as new files
-    val added = writeData(src.select(snap.schema.fieldNames.map(col): _*), root,
-      snap.physical)
-    commit(spark, root, Snapshot(snap.version + 1, "merge", snap.schemaDdl,
-      afterRewrite.files ++ added, physical = snap.physical))
+    // an empty source (all of it quarantined, say) adds no file
+    val rows = if (nSrcKeys == 0) None else Some(src)
+    replaceKeys(spark, root, snap, rows, keyCounts, nKeys, keys, "merge")
   }
 
   /** RESTORE: commit a NEW version whose file list and schema are

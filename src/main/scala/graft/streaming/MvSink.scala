@@ -15,29 +15,33 @@ import graft.sources.ManagedTable
   *
   * Per micro-batch:
   *   1. reduce the batch to its winners per key ([[ManagedSink.latestPerKey]]);
-  *   2. pin the PRE-image: the base table's current rows for the
-  *      batch's keys (the manifest is resolved at read() time and
-  *      copy-on-write keeps superseded files until vacuum, so the
-  *      pre-image stays readable after the upsert; it is still
-  *      checkpointed before mutating — retention must never be a
-  *      correctness hinge);
-  *   3. upsert the winners into the base table;
-  *   4. the view delta is (+winners, −pre-image) — exactly the rows
-  *      the upsert changed; aggregate per group and merge into the
-  *      view's AFFECTED groups only ([[Mvm.applyDelta]]), upserting
-  *      survivors and deleting groups whose maintained count hit 0.
+  *   2. upsert the winners into the base table
+  *      ([[ManagedTable.upsertChanges]]), which hands back its change
+  *      set: the rows it wrote (the winners write-time constraints
+  *      admitted — quarantined rows never count) and the rows it
+  *      replaced (the pre-image of the matched keys, materialized by
+  *      the upsert's own matched-key probe before any file is
+  *      rewritten — no second scan);
+  *   3. the view delta is (+written, −replaced) — exactly the rows the
+  *      upsert changed; aggregate per group and merge into the view's
+  *      AFFECTED groups only ([[Mvm.applyDelta]]);
+  *   4. commit the merged groups as ONE keyed replace of the view:
+  *      the affected groups' rows are dropped and the surviving merged
+  *      rows added in a single commit, so a group whose maintained
+  *      count hit 0 simply is not re-added. The view moves by exactly
+  *      one version per batch, and no reader sees a half-applied merge.
   *
   * Idempotence (the foreachBatch retry contract): a re-applied batch
-  * finds pre-image == winners, the delta bag cancels to zero per
-  * group, the merge rewrites unchanged values, and the dead-group
-  * delete matches nothing — both tables converge to the same state.
+  * replaces each row with itself, the delta bag cancels to zero per
+  * group, and the keyed replace rewrites the affected groups with
+  * unchanged values — both tables converge to the same state.
   *
   * Scale shape: every step is batch- or group-delta-sized — the
-  * pre-image probe is a key semi-join against the base table (file-
-  * pruned by the upsert's own probe machinery), the view merge joins
-  * |affected groups| rows, and only dead-group KEYS (bounded by the
-  * batch's distinct groups) ever reach the driver. Group keys must be
-  * non-null (join-key semantics; same contract as [[Mvm]]).
+  * pre-image comes from the upsert's key semi-join against the base
+  * table, the view merge joins |affected groups| rows, and no row or
+  * group key is collected (only the affected file names of each
+  * keyed write are). Group keys must be non-null (join-key semantics;
+  * same contract as [[Mvm]]).
   */
 object MvSink {
 
@@ -70,25 +74,20 @@ object MvSink {
     val schema = ManagedTable.history(spark, tableRoot).last.schema
     val winners = ManagedSink.latestPerKey(batch, keys, orderCols)
       .select(schema.fieldNames.map(col): _*)
-      .localCheckpoint() // reused by the upsert AND the delta bag
-    val pre = ManagedTable.read(spark, tableRoot)
-      .join(winners.select(keys.map(col): _*), keys, "left_semi")
-      .localCheckpoint() // materialized BEFORE the upsert rewrites files
-    ManagedTable.upsert(spark, tableRoot, winners, keys)
-    val bag = winners.withColumn(Mvm.MultCol, lit(1L))
-      .unionByName(pre.withColumn(Mvm.MultCol, lit(-1L)))
+    val cs = ManagedTable.upsertChanges(spark, tableRoot, winners, keys)
     // extrema delete-repair reads the POST-upsert base (dirty groups only)
     val base = if (mins.isEmpty && maxs.isEmpty) None
                else Some(ManagedTable.read(spark, tableRoot))
-    mergeBagIntoView(spark, viewRoot, bag, viewKeys, countCol, sums,
-      mins, maxs, base, avgs)
+    mergeBagIntoView(spark, viewRoot, Mvm.changeBag(cs.written, cs.replaced),
+      viewKeys, countCol, sums, mins, maxs, base, avgs)
   }
 
   /** Merge a multiset delta bag ([[Mvm.MultCol]]-tagged rows) into the
-    * managed view table: affected groups only — survivors upserted,
-    * dead groups deleted. Shared by the streaming sink and the SQL
-    * router's post-DML maintenance, so every maintenance path applies
-    * the identical algebra. */
+    * managed view table: affected groups only, committed as one keyed
+    * replace (the affected groups' rows out, the surviving merged rows
+    * in). Shared by the streaming sink and the SQL router's post-DML
+    * maintenance, so every maintenance path applies the identical
+    * algebra. An empty bag commits nothing. */
   def mergeBagIntoView(spark: SparkSession, viewRoot: String, bag: DataFrame,
                        viewKeys: Seq[String], countCol: String,
                        sums: Seq[(String, Column)],
@@ -98,29 +97,14 @@ object MvSink {
                        avgs: Seq[(String, Column)] = Nil): Unit = {
     require(mins.isEmpty && maxs.isEmpty || base.nonEmpty,
       "MIN/MAX maintenance needs the post-mutation base table for delete-repair")
-    val affected = bag.select(viewKeys.map(col): _*).distinct()
     val viewSchema = ManagedTable.history(spark, viewRoot).last.schema
-    val affectedView =
-      ManagedTable.read(spark, viewRoot).join(affected, viewKeys, "left_semi")
-    val applied = Mvm.applyDeltaAll(affectedView, bag, base, viewKeys,
-      countCol, sums, mins, maxs, avgs)
-    val merged = applied
+    val merged = Mvm.applyDeltaAll(ManagedTable.read(spark, viewRoot), bag, base,
+      viewKeys, countCol, sums, mins, maxs, avgs, touchedOnly = true)
       .select(viewSchema.fieldNames.map(col): _*)
-      .localCheckpoint() // pinned before the view mutations below
-    // group death: affected groups absent from the merge result; their
-    // KEYS (bounded by the delta's distinct groups) come to the driver
-    // to form the delete predicate — the same metadata-scale boundary
-    // as the upsert's affected-file probe
-    val dead = affected.join(merged.select(viewKeys.map(col): _*),
-      viewKeys, "left_anti").collect()
-    if (dead.nonEmpty)
-      ManagedTable.delete(spark, viewRoot,
-        dead.map(r => viewKeys.zipWithIndex
-            .map { case (k, i) => col(k) === lit(r.get(i)) }
-            .reduce(_ && _))
-          .reduce(_ || _))
-    if (!merged.isEmpty)
-      ManagedTable.upsert(spark, viewRoot, merged, viewKeys)
+    // dead groups (count 0) are absent from `merged`; dropping every
+    // affected key and adding `merged` removes them in the same commit
+    ManagedTable.upsertChanges(spark, viewRoot, merged, viewKeys,
+      dropKeys = Some(bag.select(viewKeys.map(col): _*))): Unit
   }
 
   /** Start the streaming apply: every micro-batch lands as one base

@@ -136,6 +136,102 @@ class ManagedTableSpec extends AnyFunSuite {
     } finally spark.conf.set(key, prev)
   }
 
+  /** Which data files of version `v` hold the given ids. */
+  private def filesHolding(root: String, v: Int, ids: Set[Long]): Set[String] =
+    ManagedTable.read(spark, root, Some(v))
+      .withColumn("f", input_file_name()).filter(col("id").isin(ids.toSeq: _*))
+      .select("f").as[String].collect()
+      .map(f => f.substring(f.indexOf("/data/") + 1)).toSet
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame) =
+    df.as[(Long, String, Double)].collect().toSet
+
+  test("upsertChanges returns the admitted source and the matched keys' pre-image") {
+    val root = freshRoot()
+    ManagedTable.create(spark, root, schema)
+    ManagedTable.insert(spark, root, rows((1L, "a", 1.0), (2L, "a", 2.0)))
+    ManagedTable.insert(spark, root, rows((3L, "b", 3.0), (4L, "b", 4.0)))
+    val pre = ManagedTable.history(spark, root).last
+    val cs = ManagedTable.upsertChanges(spark, root,
+      rows((2L, "c", 20.0), (4L, "c", 40.0), (5L, "c", 5.0)), Seq("id"))
+    assert(cs.snapshot.version == pre.version + 1)
+    assert(cs.snapshot == ManagedTable.history(spark, root).last)
+    assert(rowSet(cs.written) == Set((2L, "c", 20.0), (4L, "c", 40.0), (5L, "c", 5.0)))
+    assert(rowSet(cs.replaced) == Set((2L, "a", 2.0), (4L, "b", 4.0)))
+    assert(cs.written.columns.toSeq == schema.fieldNames.toSeq)
+    assert(cs.replaced.columns.toSeq == schema.fieldNames.toSeq)
+    // only files holding matched keys were rewritten
+    val hit = filesHolding(root, pre.version, Set(2L, 4L))
+    assert(pre.files.filterNot(hit.contains).forall(cs.snapshot.files.contains))
+    assert(hit.forall(f => !cs.snapshot.files.contains(f)))
+    // no match, no replaced row
+    val fresh = ManagedTable.upsertChanges(spark, root, rows((9L, "z", 9.0)), Seq("id"))
+    assert(fresh.replaced.isEmpty)
+    assert(rowSet(fresh.written) == Set((9L, "z", 9.0)))
+  }
+
+  test("upsertChanges under quarantine: written and replaced skip diverted rows") {
+    import graft.sources.Constraints
+    val root = freshRoot()
+    ManagedTable.create(spark, root, schema)
+    ManagedTable.insert(spark, root, rows((1L, "a", 1.0), (2L, "a", 2.0), (3L, "b", 3.0)))
+    Constraints.save(spark, root, Constraints.Spec(
+      primaryKey = Seq("id"), notNull = Nil,
+      checks = Seq(Constraints.Check("check_1", "score >= 0")),
+      onViolation = "quarantine"), schema)
+    // key 2's replacement and new key 7 violate the CHECK and divert:
+    // key 2 keeps its old row, so it is neither written nor replaced
+    val cs = ManagedTable.upsertChanges(spark, root,
+      rows((1L, "b", 10.0), (2L, "b", -2.0), (6L, "b", 6.0), (7L, "b", -7.0)), Seq("id"))
+    assert(rowSet(cs.written) == Set((1L, "b", 10.0), (6L, "b", 6.0)))
+    assert(rowSet(cs.replaced) == Set((1L, "a", 1.0)))
+    assert(rowSet(ManagedTable.read(spark, root)) ==
+      Set((1L, "b", 10.0), (2L, "a", 2.0), (3L, "b", 3.0), (6L, "b", 6.0)))
+    assert(ManagedTable.read(spark, Constraints.quarantineRoot(root)).count() == 2)
+    // every row quarantined: no commit, an empty change set
+    val v = ManagedTable.history(spark, root).last.version
+    val none = ManagedTable.upsertChanges(spark, root, rows((3L, "x", -1.0)), Seq("id"))
+    assert(none.snapshot.version == v && ManagedTable.history(spark, root).last.version == v)
+    assert(none.written.isEmpty && none.replaced.isEmpty)
+  }
+
+  test("upsertChanges with dropKeys replaces a key set in one commit") {
+    val root = freshRoot()
+    ManagedTable.create(spark, root, schema)
+    ManagedTable.insert(spark, root, rows((1L, "a", 1.0), (2L, "a", 2.0), (3L, "b", 3.0)))
+    val v = ManagedTable.history(spark, root).last.version
+    val cs = ManagedTable.upsertChanges(spark, root, rows((2L, "c", 20.0)), Seq("id"),
+      dropKeys = Some(Seq(1L, 2L, 8L).toDF("id")))
+    assert(cs.snapshot.version == v + 1)
+    assert(rowSet(ManagedTable.read(spark, root)) == Set((2L, "c", 20.0), (3L, "b", 3.0)))
+    assert(rowSet(cs.replaced) == Set((1L, "a", 1.0), (2L, "a", 2.0)))
+    intercept[IllegalArgumentException] {
+      ManagedTable.upsertChanges(spark, root, rows((2L, "c", 20.0)), Seq("id"),
+        dropKeys = Some(Seq(Option.empty[Long]).toDF("id")))
+    }
+  }
+
+  test("deleteKeys rewrites exactly the files holding matched keys; empty key frame is a no-op") {
+    val root = freshRoot()
+    ManagedTable.create(spark, root, schema)
+    ManagedTable.insert(spark, root, rows((1L, "a", 1.0), (2L, "a", 2.0)))
+    ManagedTable.insert(spark, root, rows((3L, "b", 3.0), (4L, "b", 4.0)))
+    val pre = ManagedTable.history(spark, root).last
+    val hit = filesHolding(root, pre.version, Set(3L))
+    val post = ManagedTable.deleteKeys(spark, root, Seq(3L, 99L).toDF("id"), Seq("id"))
+    assert(post.version == pre.version + 1 && post.op == "delete")
+    assert(rowSet(ManagedTable.read(spark, root)) ==
+      Set((1L, "a", 1.0), (2L, "a", 2.0), (4L, "b", 4.0)))
+    assert(pre.files.filterNot(hit.contains).forall(post.files.contains))
+    assert(hit.forall(f => !post.files.contains(f)))
+    // absent keys and an empty key frame commit nothing
+    val same = ManagedTable.deleteKeys(spark, root, Seq(99L).toDF("id"), Seq("id"))
+    assert(same.version == post.version)
+    val empty = ManagedTable.deleteKeys(spark, root, Seq.empty[Long].toDF("id"), Seq("id"))
+    assert(empty.version == post.version)
+    assert(ManagedTable.history(spark, root).last.version == post.version)
+  }
+
   test("time travel reads any retained version; history records operations") {
     val root = freshRoot()
     ManagedTable.create(spark, root, schema)

@@ -161,4 +161,30 @@ class MvSinkSpec extends AnyFunSuite {
     assert(ext(v) == rc())
     assert(ext(v) == Set(("a", 3L, 3L, 0L, 2L)))
   }
+  test("quarantined rows never reach the view; each batch is one view version") {
+    import graft.sources.Constraints
+    val (t, v) = fresh(Seq(
+      MvChg(1L, ts("2024-01-01 00:00:01"), "a", 10L),
+      MvChg(2L, ts("2024-01-01 00:00:01"), "b", 5L)))
+    Constraints.save(spark, t, Constraints.Spec(
+      primaryKey = Seq("id"), notNull = Nil,
+      checks = Seq(Constraints.Check("check_1", "v >= 0")),
+      onViolation = "quarantine"), schema)
+    def viewVersion = ManagedTable.history(spark, v).last.version
+    val v0 = viewVersion
+    // key 2's replacement and new key 3 violate the CHECK: both divert,
+    // key 2 keeps its old row, and the view must count neither
+    apply1(Seq(
+      MvChg(1L, ts("2024-01-01 00:00:05"), "b", 4L),
+      MvChg(2L, ts("2024-01-01 00:00:05"), "a", -1L),
+      MvChg(3L, ts("2024-01-01 00:00:05"), "c", -7L)), t, v)
+    assert(ManagedTable.read(spark, Constraints.quarantineRoot(t)).count() == 2)
+    assert(viewSet(v) == recomputeSet(t))
+    assert(viewSet(v) == Set(("b", 2L, 9L)))
+    assert(viewVersion == v0 + 1, "a batch must move the view by one version")
+    // a batch whose every row is quarantined changes nothing
+    apply1(Seq(MvChg(4L, ts("2024-01-01 00:00:06"), "d", -1L)), t, v)
+    assert(viewSet(v) == recomputeSet(t))
+    assert(viewVersion == v0 + 1)
+  }
 }

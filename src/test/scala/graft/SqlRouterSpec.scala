@@ -452,19 +452,57 @@ class SqlRouterSpec extends AnyFunSuite {
   test("materialized view: randomized SQL DML sequences never drift the view from recompute") {
     // the ManagedTableSpec fuzz discipline applied to the router's MV
     // maintenance: seeded-random INSERT/UPDATE/DELETE/UPSERT statements
-    // as SQL TEXT, view == full recompute asserted after EVERY
-    // statement — any delta the maintenance misses (group move, death,
-    // rebirth, overlapping upsert) diverges immediately
+    // as SQL TEXT and ingest batches, over four views of one table (plain,
+    // WHERE-filtered, MIN/MAX, join); every view == full recompute
+    // asserted after EVERY step — any delta the maintenance misses
+    // (group move, death, rebirth, overlapping upsert, replay) diverges
+    // immediately. Ingest batches always carry a row that passes the
+    // filter and joins the dimension, so each must move every view by
+    // exactly one version.
     val rnd = new scala.util.Random(20260814L)
     val dir = Files.createTempDirectory("graft_mv_fuzz").toString
     router.execute(
       s"CREATE MANAGED TABLE mf (id BIGINT, g STRING, v BIGINT) LOCATION '$dir/t'")
+    router.execute(
+      s"CREATE MANAGED TABLE mfd (g STRING, region STRING) LOCATION '$dir/d'")
+    router.execute("INSERT INTO mfd VALUES ('g0', 'north'), ('g1', 'north'), " +
+      "('g2', 'south'), ('g3', 'south')")
     router.execute("INSERT INTO mf VALUES (1, 'g0', 5), (2, 'g1', 7)")
     router.execute(
       s"CREATE MATERIALIZED VIEW mfv OVER mf KEY (g) COUNT n SUM (v AS sv) LOCATION '$dir/v'")
+    router.execute("CREATE MATERIALIZED VIEW mff OVER mf KEY (g) COUNT n SUM (v AS sv) " +
+      s"WHERE v >= 10 LOCATION '$dir/vf'")
+    router.execute("CREATE MATERIALIZED VIEW mfm OVER mf KEY (g) COUNT n " +
+      s"MIN (v AS lo) MAX (v AS hi) LOCATION '$dir/vm'")
+    router.execute("CREATE MATERIALIZED VIEW mfj OVER mf JOIN mfd ON mf.g = mfd.g " +
+      s"KEY (mfd.region) COUNT n SUM (mf.v AS sv) LOCATION '$dir/vj'")
+    def rows(sql: String) = router.execute(sql).collect().map(_.toSeq).toSet
+    val views = Seq(
+      "mfv" -> ("SELECT g, n, sv FROM mfv",
+        "SELECT g, count(*), sum(v) FROM mf GROUP BY g"),
+      "mff" -> ("SELECT g, n, sv FROM mff",
+        "SELECT g, count(*), sum(v) FROM mf WHERE v >= 10 GROUP BY g"),
+      "mfm" -> ("SELECT g, n, lo, hi FROM mfm",
+        "SELECT g, count(*), min(v), max(v) FROM mf GROUP BY g"),
+      "mfj" -> ("SELECT region, n, sv FROM mfj",
+        "SELECT mfd.region, count(*), sum(mf.v) FROM mf JOIN mfd ON mf.g = mfd.g " +
+          "GROUP BY mfd.region"))
+    def check(step: String): Unit = views.foreach { case (name, (got, want)) =>
+      assert(rows(got) == rows(want), s"view $name drifted from recompute after $step")
+    }
+    def versions = views.map { case (name, _) =>
+      router.execute(s"SHOW HISTORY $name").collect().map(_.getInt(0)).max }
+    // ingest `batch` (id, g, v), last writer by v; one version per view
+    def ingest(step: String, batch: Seq[(Long, String, Long)]): Unit = {
+      val before = versions
+      router.ingest("mf", router.batchFrame("mf", Seq("id", "g", "v"),
+        batch.map { case (i, g, v) => Seq(i.toString, g, v.toString) }), Seq("id"), Seq("v"))
+      check(step)
+      assert(versions == before.map(_ + 1), s"$step: a batch must add one version per view")
+    }
     var nextId = 2L
-    for (step <- 1 to 12) {
-      rnd.nextInt(4) match {
+    for (step <- 1 to 16) {
+      rnd.nextInt(5) match {
         case 0 =>
           val vals = (1 to 1 + rnd.nextInt(3)).map { _ =>
             nextId += 1; s"($nextId, 'g${rnd.nextInt(4)}', ${rnd.nextInt(50)})"
@@ -481,10 +519,30 @@ class SqlRouterSpec extends AnyFunSuite {
           router.execute(s"UPSERT INTO mf BY (id) VALUES " +
             s"($hit, 'g${rnd.nextInt(4)}', ${rnd.nextInt(50)}), " +
             s"($nextId, 'g${rnd.nextInt(4)}', ${rnd.nextInt(50)})")
+        case 4 =>
+          // existing and new keys, one of them twice in the batch
+          val hit = rnd.nextInt(nextId.toInt) + 1L
+          nextId += 1
+          ingest(s"ingest step $step", Seq(
+            (hit, s"g${rnd.nextInt(4)}", rnd.nextInt(50).toLong),
+            (nextId, s"g${rnd.nextInt(4)}", 10L + rnd.nextInt(50)),
+            (nextId, s"g${rnd.nextInt(4)}", 70L + rnd.nextInt(50))))
       }
-      assert(mvRows(router, "mfv") == recompute(router, "mf"),
-        s"view drifted from recompute after step $step")
+      check(s"step $step")
     }
+    // in-batch duplicate keys, then the same batch replayed
+    nextId += 1
+    val dupBatch = Seq((1L, "g2", 30L), (1L, "g3", 40L), (nextId, "g0", 12L),
+      (nextId, "g1", 11L))
+    ingest("duplicate-key batch", dupBatch)
+    ingest("replayed batch", dupBatch)
+    // every row of g1 moves to g2 (g1 dies), then g1 is reborn
+    val g1 = router.execute("SELECT id FROM mf WHERE g = 'g1'").collect().map(_.getLong(0))
+    nextId += 1
+    ingest("group death", g1.toSeq.map(i => (i, "g2", 20L)) :+ ((nextId, "g3", 15L)))
+    assert(!rows("SELECT g FROM mfv").contains(Seq("g1")))
+    ingest("group rebirth", Seq((nextId, "g1", 25L)))
+    assert(rows("SELECT g, n FROM mfv").contains(Seq("g1", 1L)))
   }
 
   test("BEGIN...COMMIT publishes multi-table mutations atomically") {
