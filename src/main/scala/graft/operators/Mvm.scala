@@ -105,30 +105,23 @@ object Mvm {
   /** [[applyDelta]]/[[applyDeltaExtrema]] with the AVG layer: backing
     * sums/counts maintain as ordinary distributive columns, visible
     * averages recompute from them afterwards. `base` is required only
-    * when `mins`/`maxs` are present (delete-repair). `touchedOnly`
-    * returns just the groups the bag touches (surviving ones; dead
-    * groups drop as always) instead of the whole view — the rows a
-    * keyed replace of those groups commits. */
+    * when `mins`/`maxs` are present (delete-repair). */
   def applyDeltaAll(mv: DataFrame, deltaBag: DataFrame,
                     base: Option[DataFrame], keys: Seq[String],
                     countCol: String, sums: Seq[(String, Column)],
                     mins: Seq[(String, Column)], maxs: Seq[(String, Column)],
-                    avgs: Seq[(String, Column)],
-                    touchedOnly: Boolean = false): DataFrame = {
+                    avgs: Seq[(String, Column)]): DataFrame = {
     val allSums = sums ++ avgBacking(avgs)
     val core =
       if (mins.isEmpty && maxs.isEmpty)
-        applyDelta(mv, deltaBag, keys, countCol, allSums, touchedOnly)
+        applyDelta(mv, deltaBag, keys, countCol, allSums)
       else
         applyDeltaExtrema(mv, deltaBag,
           base.getOrElse(throw new IllegalArgumentException(
             "MIN/MAX maintenance needs the post-mutation base table")),
-          keys, countCol, allSums, mins, maxs, touchedOnly)
+          keys, countCol, allSums, mins, maxs)
     withAvgs(core, countCol, avgs)
   }
-
-  private def mergeJoin(touchedOnly: Boolean): String =
-    if (touchedOnly) "right_outer" else "full_outer"
 
   /** Merge a change bag into the view: aggregate the delta's partials
     * per group (COUNT -> SUM(mult), SUM(x) -> SUM(mult * x)), full-
@@ -136,12 +129,9 @@ object Mvm {
     * sides (new groups arrive, untouched groups carry), drop groups
     * whose maintained count is 0. The result is row-identical to
     * [[compute]] over the mutated base — MvmSpec pins that identity
-    * and the q141 gate proves it against the DuckDB recompute. With
-    * `touchedOnly` the join is right-outer (the view side may then
-    * broadcast) and untouched groups are left out. */
+    * and the q141 gate proves it against the DuckDB recompute. */
   def applyDelta(mv: DataFrame, deltaBag: DataFrame, keys: Seq[String],
-                 countCol: String, sums: Seq[(String, Column)],
-                 touchedOnly: Boolean = false): DataFrame = {
+                 countCol: String, sums: Seq[(String, Column)]): DataFrame = {
     require(keys.nonEmpty, "at least one group key")
     val outCols = countCol +: sums.map(_._1)
     require(outCols.forall(mv.columns.contains),
@@ -149,7 +139,7 @@ object Mvm {
     val partials = deltaBag.groupBy(keys.map(col): _*)
       .agg(sum(col(MultCol)).as(s"__d_$countCol"),
         sums.map { case (nm, e) => sum(col(MultCol) * e).as(s"__d_$nm") }: _*)
-    mv.join(partials, keys, mergeJoin(touchedOnly))
+    mv.join(partials, keys, "full_outer")
       .select(keys.map(col) ++ outCols.map(c =>
         (coalesce(col(c), lit(0L)) + coalesce(col(s"__d_$c"), lit(0L))).as(c)): _*)
       .filter(col(countCol) > 0)
@@ -175,10 +165,9 @@ object Mvm {
                         keys: Seq[String], countCol: String,
                         sums: Seq[(String, Column)],
                         mins: Seq[(String, Column)],
-                        maxs: Seq[(String, Column)],
-                        touchedOnly: Boolean = false): DataFrame = {
+                        maxs: Seq[(String, Column)]): DataFrame = {
     if (mins.isEmpty && maxs.isEmpty)
-      return applyDelta(mv, deltaBag, keys, countCol, sums, touchedOnly)
+      return applyDelta(mv, deltaBag, keys, countCol, sums)
     val outCols = countCol +: sums.map(_._1)
     val extCols = mins.map(_._1) ++ maxs.map(_._1)
     require((outCols ++ extCols).forall(mv.columns.contains),
@@ -193,7 +182,7 @@ object Mvm {
             min(when(ins, e)).as(s"__i_$nm"), min(when(del, e)).as(s"__x_$nm")) } ++
           maxs.flatMap { case (nm, e) => Seq(
             max(when(ins, e)).as(s"__i_$nm"), max(when(del, e)).as(s"__x_$nm")) }: _*)
-    val joined = mv.join(partials, keys, mergeJoin(touchedOnly))
+    val joined = mv.join(partials, keys, "full_outer")
     // a group is dirty when a deleted value ties-or-beats the stored
     // extremum (a null stored extremum means no live non-null value —
     // inserts alone determine the new one, no repair needed)

@@ -273,6 +273,18 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
   private def hasViews(tbl: String): Boolean =
     mviews.values.exists(_.members.contains(tbl))
 
+  /** Keyed upsert of `rows` into `tbl` (at `r`), with its change set
+    * when views over `tbl` will absorb it. The change set's pre-image
+    * probe reads every column of the table; a table without views
+    * takes [[ManagedTable.upsert]], whose probe reads the key columns
+    * only. */
+  private def upsertInto(tbl: String, r: String, rows: DataFrame, keys: Seq[String])
+      : (ManagedTable.Snapshot, Option[ManagedTable.ChangeSet]) =
+    if (hasViews(tbl)) {
+      val cs = ManagedTable.upsertChanges(spark, r, rows, keys)
+      (cs.snapshot, Some(cs))
+    } else (ManagedTable.upsert(spark, r, rows, keys), None)
+
   /** A join view's NORMALIZED input relation: the declared inner-join
     * tree (each member aliased by its table name, so qualified
     * references in ON/WHERE/aggregates resolve), the view predicate
@@ -319,17 +331,15 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     val pre = ManagedTable.history(spark, r).last
     // no explicit order -> the key columns themselves: an arbitrary
     // but DETERMINISTIC winner for in-batch duplicate keys
-    // materialized once: counted here, then read by the MERGE
     val winners = graft.streaming.ManagedSink.latestPerKey(
-      batch, keys, if (orderCols.nonEmpty) orderCols else keys).localCheckpoint()
+      batch, keys, if (orderCols.nonEmpty) orderCols else keys)
     // in-batch duplicate keys reduce to fewer winners before the MERGE;
     // report what was APPLIED, not what was submitted (HTTP batches are
     // driver-resident and small, so this count is cheap)
     val applied = winners.count()
-    val cs = ManagedTable.upsertChanges(spark, r, align(winners, pre.schema), keys)
-    val snap = cs.snapshot
+    val (snap, changes) = upsertInto(name, r, align(winners, pre.schema), keys)
     refreshView(name)
-    maintainViews(name, pre.version, snap.version, Some(cs))
+    maintainViews(name, pre.version, snap.version, changes)
     import spark.implicits._
     Seq(("ingest", name, snap.version, applied))
       .toDF("op", "tbl", "version", "n_applied")
@@ -877,10 +887,9 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       val r = mutableRoot(name)
       val pre = ManagedTable.history(spark, r).last
       val keyCols = splitTop(keys, ',').map(_.trim)
-      val cs = ManagedTable.upsertChanges(spark, r, align(query(rest), pre.schema), keyCols)
-      val snap = cs.snapshot
+      val (snap, changes) = upsertInto(name, r, align(query(rest), pre.schema), keyCols)
       refreshView(name)
-      maintainViews(name, pre.version, snap.version, Some(cs))
+      maintainViews(name, pre.version, snap.version, changes)
       summary("merge", name, snap.version)
 
     // CREATE MATERIALIZED VIEW mv OVER t KEY (g) COUNT n

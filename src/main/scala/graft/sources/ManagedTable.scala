@@ -478,8 +478,7 @@ object ManagedTable {
 
   private def scanFiles(spark: SparkSession, snap: Snapshot, root: String,
                         files: Seq[String]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
+    if (files.isEmpty) emptyFrame(spark, snap)
     else {
       // feed the data-skipping registry (memoized per version): any
       // session with plans.FileSkipScan installed can then prune THIS
@@ -498,6 +497,9 @@ object ManagedTable {
           col(snap.physicalName(f.name)).as(f.name)): _*)
       }
     }
+
+  private def emptyFrame(spark: SparkSession, snap: Snapshot): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
 
   /** Range read with manifest-level data skipping: scan only the data
     * files whose [[FileStats]] range can intersect `lo <= col <= hi`,
@@ -671,52 +673,54 @@ object ManagedTable {
     if (threshold > 0 && nKeys * keyWidth <= threshold) broadcast(kf) else kf
   }
 
-  /** The key-replace core shared by [[upsertChanges]] and
+  /** The key-replace core shared by [[upsert]], [[upsertChanges]] and
     * [[deleteKeys]]: in ONE commit, drop every current row whose key
     * tuple is in `keySet` (materialized, its `keys` columns distinct
-    * and null-free, `nKeys` tuples) and add `rows` (already admitted and materialized, their
-    * keys a subset of `keySet`).
+    * and null-free, `nKeys` tuples) and add `rows` (already admitted
+    * and materialized, their keys a subset of `keySet`). Returns the
+    * committed snapshot and, when `preImage` is asked for, the rows
+    * replaced.
     *
-    * One probe does all the reading: a distributed semi-join of the
-    * snapshot against the key frame (broadcast only when
-    * [[mergeKeyFrame]] measured it small) MATERIALIZES the matched rows
-    * with their file names. Those rows are key-set-sized, not
-    * table-sized; the affected files come from them (only file NAMES
-    * are collected), and they are the replaced rows the returned
-    * [[ChangeSet]] reports — so a caller maintaining something
+    * One probe finds the affected files: a distributed semi-join of
+    * the snapshot against the key frame (broadcast only when
+    * [[mergeKeyFrame]] measured it small), collecting file NAMES only.
+    * Without `preImage` column pruning reads just the key columns.
+    * With it the probe MATERIALIZES the matched rows, whole, before
+    * anything is rewritten: they are key-set-sized, not table-sized,
+    * and they are the pre-image — so a caller maintaining something
     * downstream of this table gets its change set without another
     * scan. Only affected files are rewritten (left-anti against the
     * key frame); `rows` append as new files; nothing to drop and
     * nothing to add commits nothing. */
   private def replaceKeys(spark: SparkSession, root: String, snap: Snapshot,
                           rows: Option[DataFrame], keySet: DataFrame, nKeys: Long,
-                          keys: Seq[String], op: String): ChangeSet = {
+                          keys: Seq[String], op: String,
+                          preImage: Boolean): (Snapshot, Option[DataFrame]) = {
     val cols = snap.schema.fieldNames.map(col).toSeq
-    val written = rows.map(_.select(cols: _*)).getOrElse(emptyFrame(spark, snap))
-    if (nKeys == 0) return ChangeSet(snap, written, emptyFrame(spark, snap))
+    if (nKeys == 0) return (snap, if (preImage) Some(emptyFrame(spark, snap)) else None)
     // estimated broadcast row width: fixed-size types from the schema
     // (variable-size defaults are Spark's own per-type estimates) plus
     // per-row object overhead
     val keyWidth = keys.map(k => snap.schema(k).dataType.defaultSize.toLong).sum + 16L
     val kf = mergeKeyFrame(keySet, keys, nKeys, keyWidth)
-    val matched = scanFiles(spark, snap, root, snap.files)
+    val probe = scanFiles(spark, snap, root, snap.files)
       .withColumn("_graft_file", input_file_name())
       .join(kf, keys, "left_semi")
-      .localCheckpoint() // the pre-image: read before anything is rewritten
-    val affected = fileNames(matched, root)
+    val matched = if (preImage) Some(probe.localCheckpoint()) else None
+    val affected = fileNames(matched.getOrElse(probe), root)
     // the affected files' survivors and the added rows land in ONE write
     val survivors =
       if (affected.isEmpty) None
       else Some(scanFiles(spark, snap, root, affected)
         .join(kf, keys, "left_anti").select(cols: _*))
-    val committed = (survivors ++ rows.map(_ => written)).reduceOption(_ unionByName _) match {
+    val committed = (survivors ++ rows.map(_.select(cols: _*))).reduceOption(_ unionByName _) match {
       case None => snap
       case Some(out) =>
         commit(spark, root, Snapshot(snap.version + 1, op, snap.schemaDdl,
           snap.files.filterNot(affected.contains) ++ writeData(out, root, snap.physical),
           physical = snap.physical))
     }
-    ChangeSet(committed, written, matched.select(cols: _*))
+    (committed, matched.map(_.select(cols: _*)))
   }
 
   /** How many rows of the materialized frame `df` satisfy each of
@@ -732,9 +736,6 @@ object ManagedTable {
       }
       .collect().foldLeft(Seq.fill(n)(0L))((a, b) => a.zip(b).map { case (x, y) => x + y })
   }
-
-  private def emptyFrame(spark: SparkSession, snap: Snapshot): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
 
   /** DELETE by key set: drop every current row whose key tuple appears
     * in `keySource` — the apply path for a CDC "removed" delta
@@ -761,7 +762,7 @@ object ManagedTable {
     require(nNullKeys == 0,
       s"deleteKeys: $nNullKeys key row(s) with NULL in (${keys.mkString(", ")}) — " +
         "null keys never match (null-rejecting join); filter or fix them first")
-    replaceKeys(spark, root, snap, None, src, nKeys, keys, "delete").snapshot
+    replaceKeys(spark, root, snap, None, src, nKeys, keys, "delete", preImage = false)._1
   }
 
   /** What one write did: the committed `snapshot` (the unchanged
@@ -775,27 +776,36 @@ object ManagedTable {
 
   /** MERGE (upsert): rows of `source` matching on `keys` replace the
     * current rows (whole-row update); unmatched source rows are
-    * inserted. The snapshot-only form of [[upsertChanges]]. */
-  def upsert(spark: SparkSession, root: String, source: DataFrame,
-             keys: Seq[String]): Snapshot =
-    upsertChanges(spark, root, source, keys).snapshot
-
-  /** [[upsert]], returning its [[ChangeSet]]. The matched-key probe is
-    * a distributed semi-join (the source's distinct keys broadcast only
-    * when measured small — see [[mergeKeyFrame]]) that materializes
-    * the matched rows: only files holding them are rewritten, inserts
-    * append as new files, and the replaced rows come back with no
-    * extra scan. Source must not contain duplicate or NULL keys (loud
-    * checks — a dup key would make the merge result order-dependent).
+    * inserted. The matched-file probe is a distributed semi-join (the
+    * source's distinct keys broadcast only when measured small — see
+    * [[mergeKeyFrame]]) that reads only the key columns, so only files
+    * holding matched keys are rewritten; inserts append as new files.
+    * Source must not contain duplicate or NULL keys (loud checks — a
+    * dup key would make the merge result order-dependent).
     *
     * `dropKeys`, when given, names further keys whose current rows are
     * deleted in the SAME commit with no replacement — a keyed
     * replace: the rows of `dropKeys ∪ keys(source)` become exactly
     * `source`. Readers see all of it or none of it.
     */
+  def upsert(spark: SparkSession, root: String, source: DataFrame,
+             keys: Seq[String], dropKeys: Option[DataFrame] = None): Snapshot =
+    merge(spark, root, source, keys, dropKeys, preImage = false)._1
+
+  /** [[upsert]], returning its [[ChangeSet]]: the probe materializes
+    * the matched rows whole (see [[replaceKeys]]), so the replaced
+    * rows come back with no extra scan. */
   def upsertChanges(spark: SparkSession, root: String, source: DataFrame,
-                    keys: Seq[String],
-                    dropKeys: Option[DataFrame] = None): ChangeSet = {
+                    keys: Seq[String]): ChangeSet = {
+    val (snap, written, replaced) = merge(spark, root, source, keys, None, preImage = true)
+    ChangeSet(snap, written, replaced.get)
+  }
+
+  /** [[upsert]]'s body: the committed snapshot, the admitted source
+    * (the rows written) and, with `preImage`, the rows replaced. */
+  private def merge(spark: SparkSession, root: String, source: DataFrame,
+                    keys: Seq[String], dropKeys: Option[DataFrame],
+                    preImage: Boolean): (Snapshot, DataFrame, Option[DataFrame]) = {
     val snap = latest(spark, root)
     requireSchema(source, snap, "merge")
     require(keys.nonEmpty, "merge needs at least one key column")
@@ -839,7 +849,10 @@ object ManagedTable {
         s"(${keys.mkString(", ")}) — null keys never match; filter or fix them first")
     // an empty source (all of it quarantined, say) adds no file
     val rows = if (nSrcKeys == 0) None else Some(src)
-    replaceKeys(spark, root, snap, rows, keyCounts, nKeys, keys, "merge")
+    val (committed, replaced) =
+      replaceKeys(spark, root, snap, rows, keyCounts, nKeys, keys, "merge", preImage)
+    (committed, rows.fold(emptyFrame(spark, snap))(
+      _.select(snap.schema.fieldNames.map(col): _*)), replaced)
   }
 
   /** RESTORE: commit a NEW version whose file list and schema are

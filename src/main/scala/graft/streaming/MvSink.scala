@@ -97,14 +97,16 @@ object MvSink {
                        avgs: Seq[(String, Column)] = Nil): Unit = {
     require(mins.isEmpty && maxs.isEmpty || base.nonEmpty,
       "MIN/MAX maintenance needs the post-mutation base table for delete-repair")
+    val affected = bag.select(viewKeys.map(col): _*)
     val viewSchema = ManagedTable.history(spark, viewRoot).last.schema
-    val merged = Mvm.applyDeltaAll(ManagedTable.read(spark, viewRoot), bag, base,
-      viewKeys, countCol, sums, mins, maxs, avgs, touchedOnly = true)
+    val affectedView =
+      ManagedTable.read(spark, viewRoot).join(affected, viewKeys, "left_semi")
+    val merged = Mvm.applyDeltaAll(affectedView, bag, base, viewKeys,
+      countCol, sums, mins, maxs, avgs)
       .select(viewSchema.fieldNames.map(col): _*)
     // dead groups (count 0) are absent from `merged`; dropping every
     // affected key and adding `merged` removes them in the same commit
-    ManagedTable.upsertChanges(spark, viewRoot, merged, viewKeys,
-      dropKeys = Some(bag.select(viewKeys.map(col): _*))): Unit
+    ManagedTable.upsert(spark, viewRoot, merged, viewKeys, dropKeys = Some(affected)): Unit
   }
 
   /** Start the streaming apply: every micro-batch lands as one base
