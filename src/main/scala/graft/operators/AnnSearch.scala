@@ -91,6 +91,12 @@ object AnnSearch {
     * localCheckpoint per round to keep the plan flat); the driver never
     * holds a vector.
     *
+    * The result is a LAZY checkpoint: the last Lloyd round materializes
+    * on the caller's first action, not inside this call. Run one action
+    * on it (or checkpoint it eagerly) before fanning it into several
+    * concurrent actions — otherwise each recomputes the last round
+    * (deterministically, so the rows agree; only the work repeats).
+    *
     * `sampleBound`: lowercase-hex md5 prefix bound ("4" keeps 4/16 =
     * 25% in expectation); None trains on every vector.
     *

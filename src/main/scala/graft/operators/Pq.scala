@@ -118,7 +118,12 @@ object Pq {
     * centroid, and `"farthest"` init runs the same greedy traversal
     * per subspace (each subspace picks its OWN farthest vector — a
     * grouped min-struct per pass, nulls ordered after NaN after real
-    * distances, exactly kmeansCentroids' asc_nulls_last order). */
+    * distances, exactly kmeansCentroids' asc_nulls_last order).
+    *
+    * Like [[AnnSearch.kmeansCentroids]], the codebook is a LAZY
+    * checkpoint: its last round materializes on the caller's first
+    * action. Run one action on it before fanning it into several
+    * concurrent actions, or each recomputes that round. */
   def train(emb: DataFrame, dims: Int, m: Int, k: Int, iters: Int = 5,
             sampleBound: Option[String] = Some("4"),
             vecIdCol: String = "vec_id", init: String = "md5"): DataFrame = {

@@ -36,16 +36,20 @@ object Graph {
       // +pk, supplier = -sk-1, both injective — the q144 discipline):
       // long hashing/compares beat string keys in the per-iteration
       // joins/aggs; the 'p…'/'s…' labels the oracle sees are minted
-      // only on the final top-20.
+      // only on the final top-20. INVARIANT of this encoding: part ids
+      // (pk >= 1) and supplier ids (-sk-1 <= -2) are DISJOINT domains.
+      // The single distinct over both sides below (and the label
+      // split on id >= 0) rely on it; reuse the pattern only on
+      // domains that cannot overlap.
       val pe = Tables.load(s, dir, "lineitem")
         .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
         // lazy: prepare()'s cache build is the first consumer and
         // materializes it — no separate materialization-only job
         .distinct().localCheckpoint(false)
       // ONE distinct over the exploded id stream instead of a distinct
-      // per side + union: part ids (>= 0) and supplier ids (< 0) are
-      // disjoint domains, so distinct(union) == union(distincts) —
-      // same rows, one exchange instead of two (guide §2.4)
+      // per side + union: by the encoding's disjointness invariant
+      // above, distinct(union) == union(distincts) — same rows, one
+      // exchange instead of two (guide §2.4)
       val nodes = pe.select(explode(array(col("pk"), -col("sk") - 1)).as("id"))
         .distinct()
       val edges = pe.select(col("pk").as("src"), (-col("sk") - 1).as("dst"))

@@ -196,9 +196,13 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     * sink uses. `changes` is the statement's own change set, whose
     * +written/−replaced rows ([[graft.operators.Mvm.changeBag]]) are
     * the delta: ingest, UPSERT and INSERT supply it, so their
-    * maintenance never scans the table. Statements without one (UPDATE, DELETE,
-    * RESTORE, SYNC) fall back to [[graft.operators.Mvm.delta]] of
-    * the two versions. A mutation that matched nothing returns the
+    * maintenance never scans the table; a keyed write's change set
+    * also bounds the bag's rows, so a non-join view merges it with no
+    * count of its own (each view absorbs its bag as one keyed replace,
+    * [[graft.streaming.MvSink.mergeBagIntoView]]). Statements without
+    * one (UPDATE, DELETE, RESTORE, SYNC) fall back to
+    * [[graft.operators.Mvm.delta]] of the two versions, and join views
+    * count their joined bag. A mutation that matched nothing returns the
     * CURRENT snapshot without committing (preVersion == newVersion)
     * — that must be a maintenance no-op, not a re-applied previous
     * delta (caught by the SqlRouterSpec fuzz). The fallback diffs the
@@ -241,7 +245,9 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
             // extrema delete-repair reads the post-mutation base version
             // (restricted to the view's predicate when it has one)
             if (mins.isEmpty && maxs.isEmpty) None else Some(repairBase),
-            cols(mv.avgs))
+            cols(mv.avgs),
+            // a predicate only shrinks the change set's bag
+            bagRows = changes.flatMap(_.rows))
         } else {
           // JOIN view, one member changed: Δ(F ⋈ D1 ⋈ ...) when only
           // T changed is exactly (ΔT) joined with every OTHER member's
@@ -276,14 +282,10 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
   /** Keyed upsert of `rows` into `tbl` (at `r`), with its change set
     * when views over `tbl` will absorb it. The change set's pre-image
     * probe reads every column of the table; a table without views
-    * takes [[ManagedTable.upsert]], whose probe reads the key columns
-    * only. */
-  private def upsertInto(tbl: String, r: String, rows: DataFrame, keys: Seq[String])
-      : (ManagedTable.Snapshot, Option[ManagedTable.ChangeSet]) =
-    if (hasViews(tbl)) {
-      val cs = ManagedTable.upsertChanges(spark, r, rows, keys)
-      (cs.snapshot, Some(cs))
-    } else (ManagedTable.upsert(spark, r, rows, keys), None)
+    * merges with a probe that reads the key columns only. */
+  private def upsertInto(tbl: String, r: String, rows: DataFrame,
+                         keys: Seq[String]): ManagedTable.Merged =
+    ManagedTable.merge(spark, r, rows, keys, preImage = hasViews(tbl))
 
   /** A join view's NORMALIZED input relation: the declared inner-join
     * tree (each member aliased by its table name, so qualified
@@ -334,14 +336,18 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     val winners = graft.streaming.ManagedSink.latestPerKey(
       batch, keys, if (orderCols.nonEmpty) orderCols else keys)
     // in-batch duplicate keys reduce to fewer winners before the MERGE;
-    // report what was APPLIED, not what was submitted (HTTP batches are
-    // driver-resident and small, so this count is cheap)
-    val applied = winners.count()
-    val (snap, changes) = upsertInto(name, r, align(winners, pre.schema), keys)
+    // report what was APPLIED, not what was submitted: the merge counts
+    // its distinct keys anyway. Write-time constraints may quarantine
+    // winners first, and a winner still counts as applied, so a
+    // constrained table counts the winners themselves
+    val constrained =
+      graft.sources.Constraints.load(spark, r).exists(spec => !spec.isEmpty)
+    val counted = if (constrained) Some(winners.count()) else None
+    val m = upsertInto(name, r, align(winners, pre.schema), keys)
     refreshView(name)
-    maintainViews(name, pre.version, snap.version, changes)
+    maintainViews(name, pre.version, m.snapshot.version, m.changes)
     import spark.implicits._
-    Seq(("ingest", name, snap.version, applied))
+    Seq(("ingest", name, m.snapshot.version, counted.getOrElse(m.applied)))
       .toDF("op", "tbl", "version", "n_applied")
   }
 
@@ -887,10 +893,10 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       val r = mutableRoot(name)
       val pre = ManagedTable.history(spark, r).last
       val keyCols = splitTop(keys, ',').map(_.trim)
-      val (snap, changes) = upsertInto(name, r, align(query(rest), pre.schema), keyCols)
+      val m = upsertInto(name, r, align(query(rest), pre.schema), keyCols)
       refreshView(name)
-      maintainViews(name, pre.version, snap.version, changes)
-      summary("merge", name, snap.version)
+      maintainViews(name, pre.version, m.snapshot.version, m.changes)
+      summary("merge", name, m.snapshot.version)
 
     // CREATE MATERIALIZED VIEW mv OVER t KEY (g) COUNT n
     //   [SUM (expr AS name, ...)] [MIN (expr AS name, ...)]

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -571,25 +573,59 @@ object ManagedTable {
     * non-matching files, so the probe reads footer-pruned data only.
     */
   private def affectedFiles(cur: DataFrame, root: String, hit: Column): Seq[String] =
-    fileNames(cur.withColumn("_graft_file", input_file_name()).filter(hit), root)
+    fileNames(cur.withColumn("_graft_file", input_file_name()).filter(hit), root)._1
 
   /** The distinct `_graft_file` values of `withFile`, as paths
-    * relative to `root`, sorted — the collected end of a probe.
+    * relative to `root`, sorted — the collected end of a probe — and
+    * the number of rows `withFile` holds, counted in the same pass.
     * Deduplicated within each partition first (a partition reads few
     * files), so the collect returns a handful of names per partition
     * and the probe needs no shuffle. */
-  private def fileNames(withFile: DataFrame, root: String): Seq[String] = {
+  private def fileNames(withFile: DataFrame, root: String): (Seq[String], Long) = {
     val rootUri = new Path(root).toUri.getPath
-    withFile.select("_graft_file").rdd
-      .mapPartitions(_.map(_.getString(0)).toSet.iterator)
-      .collect().distinct
+    val perPartition = withFile.select("_graft_file").rdd
+      .mapPartitions { it =>
+        val names = scala.collection.mutable.Set.empty[String]
+        var n = 0L
+        it.foreach { r => names += r.getString(0); n += 1 }
+        Iterator.single((names.toSet, n))
+      }
+      .collect()
+    val names = perPartition.flatMap(_._1).distinct
       .map { f =>
         val p = new Path(f).toUri.getPath
         val i = p.indexOf(rootUri)
         require(i >= 0, s"data file $p outside table root $root")
         p.substring(i + rootUri.length).stripPrefix("/")
       }.toSeq.sorted
+    (names, perPartition.map(_._2).sum)
   }
+
+  /** [[writeData]] for a copy-on-write rewrite of the `affected`
+    * files, packed into as few files as its bytes need: n = max(1,
+    * ⌈bytes / `spark.sql.files.maxPartitionBytes`⌉), the bytes being
+    * the affected files' sizes (from the filesystem) plus `newBytes`,
+    * an estimate of the rows added beside them. A rewrite touching one
+    * file leaves one file (written without a shuffle); above that the
+    * rows spread round-robin over n files, so a range-clustered table's
+    * rewritten files widen until the next OPTIMIZE. */
+  private def writePacked(df: DataFrame, root: String, physical: Map[String, String],
+                          affected: Seq[String], newBytes: Long): Seq[String] = {
+    val spark = df.sparkSession
+    val f = fs(spark, root)
+    val bytes = affected.map(rel => f.getFileStatus(new Path(root, rel)).getLen).sum + newBytes
+    val target = math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
+    val n = math.max(1L, (bytes + target - 1) / target).toInt
+    writeData(if (n == 1) df.coalesce(1) else df.repartition(n), root, physical)
+  }
+
+  /** Do the data files `rels` hold no row? Parquet footers only. */
+  private def allEmpty(spark: SparkSession, root: String, rels: Seq[String]): Boolean =
+    rels.forall { rel =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(root, rel),
+        spark.sparkContext.hadoopConfiguration))
+      try r.getRecordCount == 0 finally r.close()
+    }
 
   private def rewrite(spark: SparkSession, root: String, snap: Snapshot,
                       affected: Seq[String], transform: DataFrame => DataFrame,
@@ -598,7 +634,7 @@ object ManagedTable {
     val affectedDf = scanFiles(spark, snap, root, affected)
     val replacement = transform(affectedDf)
     requireSchema(replacement, snap, op)
-    val rewritten = writeData(replacement, root, snap.physical)
+    val rewritten = writePacked(replacement, root, snap.physical, affected, 0L)
     val kept = snap.files.filterNot(affected.contains)
     commit(spark, root, Snapshot(snap.version + 1, op, snap.schemaDdl,
       kept ++ rewritten, physical = snap.physical))
@@ -653,13 +689,13 @@ object ManagedTable {
   }
 
   /** The merge probe's key frame: the `keys` columns of `keySet`
-    * (which holds `nKeys` DISTINCT key tuples), hinted for broadcast
+    * (which holds at most `nKeys` key tuples), hinted for broadcast
     * ONLY when provably small. A localCheckpointed frame
     * reports unknown (maximal) size to the planner, so it will never
     * auto-broadcast on stats — but an UNCONDITIONAL hint (the previous
     * formulation) forced a broadcast at ANY size, an OOM ceiling for
     * large backfill merges (10⁹-key sources exceed every broadcast
-    * limit). The gate uses the measured distinct-key count × a
+    * limit). The gate uses the measured (or bounded) key count × a
     * schema-derived per-row width against the session's own
     * `autoBroadcastJoinThreshold`; above it (or with broadcasting
     * disabled, threshold ≤ 0) the un-hinted join shuffles — the
@@ -673,31 +709,35 @@ object ManagedTable {
     if (threshold > 0 && nKeys * keyWidth <= threshold) broadcast(kf) else kf
   }
 
-  /** The key-replace core shared by [[upsert]], [[upsertChanges]] and
-    * [[deleteKeys]]: in ONE commit, drop every current row whose key
-    * tuple is in `keySet` (materialized, its `keys` columns distinct
-    * and null-free, `nKeys` tuples) and add `rows` (already admitted
-    * and materialized, their keys a subset of `keySet`). Returns the
-    * committed snapshot and, when `preImage` is asked for, the rows
-    * replaced.
+  /** The key-replace core shared by [[upsert]], [[upsertChanges]],
+    * [[deleteKeys]] and [[replaceMatched]]: in ONE commit, drop every
+    * current row whose key tuple is in `keySet` (its `keys` columns
+    * null-free, at most `nKeys` rows) and add `replacement(matched)`,
+    * where `matched` is the rows dropped — the upsert's replacement is
+    * its source whatever matched, a view's is the matched groups merged
+    * with a change bag, and a key delete adds nothing. Returns the
+    * committed snapshot, the matched rows when `readMatched`, and how
+    * many rows matched.
     *
-    * One probe finds the affected files: a distributed semi-join of
-    * the snapshot against the key frame (broadcast only when
-    * [[mergeKeyFrame]] measured it small), collecting file NAMES only.
-    * Without `preImage` column pruning reads just the key columns.
-    * With it the probe MATERIALIZES the matched rows, whole, before
-    * anything is rewritten: they are key-set-sized, not table-sized,
-    * and they are the pre-image — so a caller maintaining something
-    * downstream of this table gets its change set without another
-    * scan. Only affected files are rewritten (left-anti against the
-    * key frame); `rows` append as new files; nothing to drop and
-    * nothing to add commits nothing. */
+    * One probe finds the affected files and counts the matched rows: a
+    * distributed semi-join of the snapshot against the key frame
+    * (broadcast only when [[mergeKeyFrame]] bounds it small), collecting
+    * file NAMES only. Without `readMatched` column pruning reads just
+    * the key columns. With it the probe MATERIALIZES the matched rows,
+    * whole, before anything is rewritten: they are key-set-sized, not
+    * table-sized — the pre-image a caller maintaining something
+    * downstream needs, with no other scan. The affected files'
+    * survivors (left-anti against the key frame) and the replacement
+    * land in ONE write, packed by [[writePacked]] with `newRows`
+    * replacement rows estimated at the schema's default row width.
+    * Nothing matched and no row to add commits nothing. */
   private def replaceKeys(spark: SparkSession, root: String, snap: Snapshot,
-                          rows: Option[DataFrame], keySet: DataFrame, nKeys: Long,
-                          keys: Seq[String], op: String,
-                          preImage: Boolean): (Snapshot, Option[DataFrame]) = {
+                          keySet: DataFrame, nKeys: Long, keys: Seq[String], op: String,
+                          replacement: Option[DataFrame => DataFrame], readMatched: Boolean,
+                          newRows: Long): (Snapshot, Option[DataFrame], Long) = {
     val cols = snap.schema.fieldNames.map(col).toSeq
-    if (nKeys == 0) return (snap, if (preImage) Some(emptyFrame(spark, snap)) else None)
+    if (nKeys == 0)
+      return (snap, if (readMatched) Some(emptyFrame(spark, snap)) else None, 0L)
     // estimated broadcast row width: fixed-size types from the schema
     // (variable-size defaults are Spark's own per-type estimates) plus
     // per-row object overhead
@@ -706,21 +746,27 @@ object ManagedTable {
     val probe = scanFiles(spark, snap, root, snap.files)
       .withColumn("_graft_file", input_file_name())
       .join(kf, keys, "left_semi")
-    val matched = if (preImage) Some(probe.localCheckpoint()) else None
-    val affected = fileNames(matched.getOrElse(probe), root)
-    // the affected files' survivors and the added rows land in ONE write
+    val matched = if (readMatched) probe.localCheckpoint() else probe
+    val (affected, nMatched) = fileNames(matched, root)
     val survivors =
       if (affected.isEmpty) None
       else Some(scanFiles(spark, snap, root, affected)
         .join(kf, keys, "left_anti").select(cols: _*))
-    val committed = (survivors ++ rows.map(_.select(cols: _*))).reduceOption(_ unionByName _) match {
-      case None => snap
-      case Some(out) =>
-        commit(spark, root, Snapshot(snap.version + 1, op, snap.schemaDdl,
-          snap.files.filterNot(affected.contains) ++ writeData(out, root, snap.physical),
-          physical = snap.physical))
-    }
-    (committed, matched.map(_.select(cols: _*)))
+    val added = replacement.map(_(matched.select(cols: _*)))
+    added.foreach(requireSchema(_, snap, op))
+    val written = (survivors ++ added.map(_.select(cols: _*))).reduceOption(_ unionByName _)
+      .fold(Seq.empty[String])(writePacked(_, root, snap.physical,
+        affected, newRows * snap.schema.defaultSize))
+    // with nothing matched the write is the replacement alone; an empty
+    // one (a view's bag that selects nothing) leaves only Spark's
+    // schema-only file, which is deleted, not committed
+    val committed =
+      if (affected.isEmpty && allEmpty(spark, root, written)) {
+        written.foreach(rel => fs(spark, root).delete(new Path(root, rel), false))
+        snap
+      } else commit(spark, root, Snapshot(snap.version + 1, op, snap.schemaDdl,
+        snap.files.filterNot(affected.contains) ++ written, physical = snap.physical))
+    (committed, if (readMatched) Some(matched.select(cols: _*)) else None, nMatched)
   }
 
   /** How many rows of the materialized frame `df` satisfy each of
@@ -762,7 +808,8 @@ object ManagedTable {
     require(nNullKeys == 0,
       s"deleteKeys: $nNullKeys key row(s) with NULL in (${keys.mkString(", ")}) — " +
         "null keys never match (null-rejecting join); filter or fix them first")
-    replaceKeys(spark, root, snap, None, src, nKeys, keys, "delete", preImage = false)._1
+    replaceKeys(spark, root, snap, src, nKeys, keys, "delete",
+      replacement = None, readMatched = false, newRows = 0L)._1
   }
 
   /** What one write did: the committed `snapshot` (the unchanged
@@ -771,41 +818,52 @@ object ManagedTable {
     * quarantined rows never appear — and the rows `replaced`: the
     * pre-image of every matched key. Both frames are materialized and
     * change-set-sized, in the table's column order; together they are
-    * the write's exact multiset delta (+written, −replaced). */
-  final case class ChangeSet(snapshot: Snapshot, written: DataFrame, replaced: DataFrame)
+    * the write's exact multiset delta (+written, −replaced). `rows` is
+    * |written| + |replaced| when the write counted them (a keyed write
+    * does, an insert does not): a bound on any bag derived from the
+    * change set, so its consumer needs no count of its own. */
+  final case class ChangeSet(snapshot: Snapshot, written: DataFrame, replaced: DataFrame,
+                             rows: Option[Long] = None)
 
   /** MERGE (upsert): rows of `source` matching on `keys` replace the
     * current rows (whole-row update); unmatched source rows are
     * inserted. The matched-file probe is a distributed semi-join (the
-    * source's distinct keys broadcast only when measured small — see
+    * source's keys broadcast only when measured small — see
     * [[mergeKeyFrame]]) that reads only the key columns, so only files
-    * holding matched keys are rewritten; inserts append as new files.
-    * Source must not contain duplicate or NULL keys (loud checks — a
-    * dup key would make the merge result order-dependent).
-    *
-    * `dropKeys`, when given, names further keys whose current rows are
-    * deleted in the SAME commit with no replacement — a keyed
-    * replace: the rows of `dropKeys ∪ keys(source)` become exactly
-    * `source`. Readers see all of it or none of it.
+    * holding matched keys are rewritten; the survivors of those files
+    * and the source land together in as few files as their bytes need
+    * (see [[writePacked]]) — an upsert touching one file leaves one
+    * file, and one matching nothing adds one file beside the untouched
+    * rest. Source must not contain duplicate or NULL keys (loud checks
+    * — a dup key would make the merge result order-dependent).
     */
   def upsert(spark: SparkSession, root: String, source: DataFrame,
-             keys: Seq[String], dropKeys: Option[DataFrame] = None): Snapshot =
-    merge(spark, root, source, keys, dropKeys, preImage = false)._1
+             keys: Seq[String]): Snapshot =
+    merge(spark, root, source, keys, preImage = false).snapshot
 
   /** [[upsert]], returning its [[ChangeSet]]: the probe materializes
     * the matched rows whole (see [[replaceKeys]]), so the replaced
     * rows come back with no extra scan. */
   def upsertChanges(spark: SparkSession, root: String, source: DataFrame,
-                    keys: Seq[String]): ChangeSet = {
-    val (snap, written, replaced) = merge(spark, root, source, keys, None, preImage = true)
-    ChangeSet(snap, written, replaced.get)
-  }
+                    keys: Seq[String]): ChangeSet =
+    merge(spark, root, source, keys, preImage = true).changes.get
 
-  /** [[upsert]]'s body: the committed snapshot, the admitted source
-    * (the rows written) and, with `preImage`, the rows replaced. */
-  private def merge(spark: SparkSession, root: String, source: DataFrame,
-                    keys: Seq[String], dropKeys: Option[DataFrame],
-                    preImage: Boolean): (Snapshot, DataFrame, Option[DataFrame]) = {
+  /** What [[merge]] did: the committed snapshot, how many rows it
+    * wrote (the admitted source's distinct keys) and, when the
+    * pre-image was asked for, the change set. */
+  private[graft] final case class Merged(snapshot: Snapshot, applied: Long,
+                                         changes: Option[ChangeSet])
+
+  /** [[upsert]]'s body. The admitted source is grouped by `keys` ONCE
+    * and materialized, each group keeping its row count and its row:
+    * that frame is both the key frame the probe joins and the rows
+    * written, and one per-partition count over it yields the dup-key
+    * guard, the null-key guard and the distinct-key count (the rows
+    * applied, and the broadcast gate's size). A source already
+    * partitioned by `keys` (a last-writer-wins reduce) groups without
+    * another shuffle. */
+  private[graft] def merge(spark: SparkSession, root: String, source: DataFrame,
+                           keys: Seq[String], preImage: Boolean): Merged = {
     val snap = latest(spark, root)
     requireSchema(source, snap, "merge")
     require(keys.nonEmpty, "merge needs at least one key column")
@@ -823,21 +881,15 @@ object ManagedTable {
         Constraints.enforceUpsert(spark, root, source, spec)
       case _ => source
     }
-    val src = admitted.localCheckpoint() // probe + rewrite + insert + change set reuse one materialization
-    // the full key set: the source's keys plus any keys to drop, each
-    // with its multiplicity in the source, grouped ONCE and
-    // materialized — it is the distinct key frame the probe and the
-    // rewrite join, and one pass over it yields the dup-key guard, the
-    // null-key guard, the source's own key count and the distinct-key
-    // count the broadcast gate needs
-    val srcKeys = src.select(keys.map(col) :+ lit(1L).as("_graft_n"): _*)
-    val keySet = dropKeys.fold(srcKeys)(d =>
-      srcKeys.unionByName(d.select(keys.map(col) :+ lit(0L).as("_graft_n"): _*)))
-    val keyCounts = keySet
-      .groupBy(keys.map(col): _*).agg(sum(col("_graft_n")).as("count"))
+    val cols = snap.schema.fieldNames.toSeq
+    // a duplicate group fails below, so which of its rows `first` keeps
+    // never matters
+    val grouped = admitted.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("_graft_n"),
+        cols.filterNot(keys.contains).map(c => first(col(c)).as(c)): _*)
       .localCheckpoint()
-    val Seq(nKeys, dupKeys, nullKeys, nSrcKeys) = countWhere(keyCounts, Seq(lit(true),
-      col("count") > 1, keys.map(col(_).isNull).reduce(_ || _), col("count") > 0))
+    val Seq(nKeys, dupKeys, nullKeys) = countWhere(grouped, Seq(lit(true),
+      col("_graft_n") > 1, keys.map(col(_).isNull).reduce(_ || _)))
     require(dupKeys == 0,
       s"merge: source has $dupKeys duplicate key group(s) on (${keys.mkString(", ")}) " +
         "— the merge result would be order-dependent; dedup the source first")
@@ -847,12 +899,34 @@ object ManagedTable {
     require(nullKeys == 0,
       s"merge: $nullKeys key group(s) with NULL in " +
         s"(${keys.mkString(", ")}) — null keys never match; filter or fix them first")
-    // an empty source (all of it quarantined, say) adds no file
-    val rows = if (nSrcKeys == 0) None else Some(src)
-    val (committed, replaced) =
-      replaceKeys(spark, root, snap, rows, keyCounts, nKeys, keys, "merge", preImage)
-    (committed, rows.fold(emptyFrame(spark, snap))(
-      _.select(snap.schema.fieldNames.map(col): _*)), replaced)
+    val rows = grouped.select(cols.map(col): _*)
+    // an empty source (all of it quarantined, say) commits nothing
+    val (committed, replaced, nReplaced) = replaceKeys(spark, root, snap, grouped, nKeys,
+      keys, "merge", Some(_ => rows), readMatched = preImage, newRows = nKeys)
+    Merged(committed, nKeys, replaced.map(ChangeSet(committed, rows, _,
+      Some(nKeys + nReplaced))))
+  }
+
+  /** A keyed replace whose new rows derive from the rows they replace
+    * — how a materialized view absorbs a change bag: every current row
+    * whose `keys` tuple appears in `keySource` (at most `maxRows` rows,
+    * duplicates allowed) is replaced by `replacement(matched)`, in ONE
+    * commit. `matched` is those rows, materialized by the probe that
+    * finds the affected files, so the replacement (the affected groups
+    * merged with the bag) reads no other copy of the table; a group the
+    * replacement omits is gone. `maxRows` — a bound the caller already
+    * has — gates the key frame's broadcast, and 0 commits nothing with
+    * no Spark job. A NULL key fails the probe in-plan: join keys never
+    * match NULL, so its group would silently never merge. */
+  private[graft] def replaceMatched(spark: SparkSession, root: String, keySource: DataFrame,
+                                    keys: Seq[String], maxRows: Long)
+                                   (replacement: DataFrame => DataFrame): Snapshot = {
+    val snap = latest(spark, root)
+    val kf = keySource.select(keys.map(k => when(col(k).isNull, raise_error(lit(
+      s"keyed replace of $root: NULL in key column '$k' — null keys never match")))
+      .otherwise(col(k)).as(k)): _*)
+    replaceKeys(spark, root, snap, kf, maxRows, keys, "merge", Some(replacement),
+      readMatched = true, newRows = maxRows)._1
   }
 
   /** RESTORE: commit a NEW version whose file list and schema are

@@ -23,13 +23,17 @@ import graft.sources.ManagedTable
   *      the upsert's own matched-key probe before any file is
   *      rewritten — no second scan);
   *   3. the view delta is (+written, −replaced) — exactly the rows the
-  *      upsert changed; aggregate per group and merge into the view's
-  *      AFFECTED groups only ([[Mvm.applyDelta]]);
-  *   4. commit the merged groups as ONE keyed replace of the view:
-  *      the affected groups' rows are dropped and the surviving merged
-  *      rows added in a single commit, so a group whose maintained
-  *      count hit 0 simply is not re-added. The view moves by exactly
-  *      one version per batch, and no reader sees a half-applied merge.
+  *      upsert changed, at most |written| + |replaced| rows, counts the
+  *      upsert already has;
+  *   4. fold it into the view as ONE keyed replace
+  *      ([[ManagedTable.replaceMatched]]): the probe that finds the view
+  *      files holding the bag's groups also materializes those groups'
+  *      rows, [[Mvm.applyDeltaAll]] merges them with the bag, and the
+  *      merged groups replace them in a single commit, so a group whose
+  *      maintained count hit 0 simply is not re-added. The view moves by
+  *      exactly one version per batch, stays in as few files as its
+  *      bytes need, and no reader sees a half-applied merge; an empty
+  *      bag commits nothing.
   *
   * Idempotence (the foreachBatch retry contract): a re-applied batch
   * replaces each row with itself, the delta bag cancels to zero per
@@ -79,34 +83,35 @@ object MvSink {
     val base = if (mins.isEmpty && maxs.isEmpty) None
                else Some(ManagedTable.read(spark, tableRoot))
     mergeBagIntoView(spark, viewRoot, Mvm.changeBag(cs.written, cs.replaced),
-      viewKeys, countCol, sums, mins, maxs, base, avgs)
+      viewKeys, countCol, sums, mins, maxs, base, avgs, bagRows = cs.rows)
   }
 
   /** Merge a multiset delta bag ([[Mvm.MultCol]]-tagged rows) into the
     * managed view table: affected groups only, committed as one keyed
-    * replace (the affected groups' rows out, the surviving merged rows
-    * in). Shared by the streaming sink and the SQL router's post-DML
-    * maintenance, so every maintenance path applies the identical
-    * algebra. An empty bag commits nothing. */
+    * replace ([[ManagedTable.replaceMatched]] — the affected groups'
+    * rows out, the surviving merged rows in). Shared by the streaming
+    * sink and the SQL router's post-DML maintenance, so every
+    * maintenance path applies the identical algebra. `bagRows` bounds
+    * the bag's rows when the caller knows it (a keyed write's change
+    * set does); otherwise the bag is counted. An empty bag commits
+    * nothing, and a NULL group key fails the merge. */
   def mergeBagIntoView(spark: SparkSession, viewRoot: String, bag: DataFrame,
                        viewKeys: Seq[String], countCol: String,
                        sums: Seq[(String, Column)],
                        mins: Seq[(String, Column)] = Nil,
                        maxs: Seq[(String, Column)] = Nil,
                        base: Option[DataFrame] = None,
-                       avgs: Seq[(String, Column)] = Nil): Unit = {
+                       avgs: Seq[(String, Column)] = Nil,
+                       bagRows: Option[Long] = None): Unit = {
     require(mins.isEmpty && maxs.isEmpty || base.nonEmpty,
       "MIN/MAX maintenance needs the post-mutation base table for delete-repair")
-    val affected = bag.select(viewKeys.map(col): _*)
-    val viewSchema = ManagedTable.history(spark, viewRoot).last.schema
-    val affectedView =
-      ManagedTable.read(spark, viewRoot).join(affected, viewKeys, "left_semi")
-    val merged = Mvm.applyDeltaAll(affectedView, bag, base, viewKeys,
-      countCol, sums, mins, maxs, avgs)
-      .select(viewSchema.fieldNames.map(col): _*)
-    // dead groups (count 0) are absent from `merged`; dropping every
-    // affected key and adding `merged` removes them in the same commit
-    ManagedTable.upsert(spark, viewRoot, merged, viewKeys, dropKeys = Some(affected)): Unit
+    ManagedTable.replaceMatched(spark, viewRoot, bag, viewKeys,
+      bagRows.getOrElse(bag.rdd.count())) { affectedView =>
+      // dead groups (count 0) are absent from the merge, so the replace drops them
+      Mvm.applyDeltaAll(affectedView, bag, base, viewKeys,
+        countCol, sums, mins, maxs, avgs)
+        .select(affectedView.columns.map(col): _*)
+    }: Unit
   }
 
   /** Start the streaming apply: every micro-batch lands as one base

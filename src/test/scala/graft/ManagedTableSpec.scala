@@ -195,19 +195,34 @@ class ManagedTableSpec extends AnyFunSuite {
     assert(none.written.isEmpty && none.replaced.isEmpty)
   }
 
-  test("upsert with dropKeys replaces a key set in one commit") {
+  test("replaceMatched swaps the matched rows for their replacement in one commit; NULL keys fail") {
+    // the view-maintenance write: the rows holding the key set go out,
+    // a function of exactly those rows comes in — here key 1's row is
+    // dropped (a dead group), key 2's rewritten, key 8 born
     val root = freshRoot()
     ManagedTable.create(spark, root, schema)
     ManagedTable.insert(spark, root, rows((1L, "a", 1.0), (2L, "a", 2.0), (3L, "b", 3.0)))
     val v = ManagedTable.history(spark, root).last.version
-    val snap = ManagedTable.upsert(spark, root, rows((2L, "c", 20.0)), Seq("id"),
-      dropKeys = Some(Seq(1L, 2L, 8L).toDF("id")))
-    assert(snap.version == v + 1)
-    assert(rowSet(ManagedTable.read(spark, root)) == Set((2L, "c", 20.0), (3L, "b", 3.0)))
-    intercept[IllegalArgumentException] {
-      ManagedTable.upsert(spark, root, rows((2L, "c", 20.0)), Seq("id"),
-        dropKeys = Some(Seq(Option.empty[Long]).toDF("id")))
+    var seen = Set.empty[(Long, String, Double)]
+    val snap = ManagedTable.replaceMatched(spark, root, Seq(1L, 2L, 8L, 2L).toDF("id"),
+      Seq("id"), maxRows = 4L) { matched =>
+      seen = rowSet(matched)
+      matched.filter(col("id") === 2L).withColumn("score", col("score") * 10)
+        .unionByName(rows((8L, "c", 8.0)))
     }
+    assert(seen == Set((1L, "a", 1.0), (2L, "a", 2.0)))
+    assert(snap.version == v + 1 && ManagedTable.history(spark, root).last == snap)
+    assert(rowSet(ManagedTable.read(spark, root)) ==
+      Set((2L, "a", 20.0), (3L, "b", 3.0), (8L, "c", 8.0)))
+    // a NULL key fails in-plan, before anything commits
+    val e = intercept[Exception] {
+      ManagedTable.replaceMatched(spark, root, Seq(Option(3L), Option.empty[Long]).toDF("id"),
+        Seq("id"), maxRows = 2L)(identity)
+    }
+    assert(e.getMessage.contains("NULL in key column 'id'"), e.getMessage)
+    // an empty key source (bound 0) commits nothing
+    ManagedTable.replaceMatched(spark, root, Seq.empty[Long].toDF("id"), Seq("id"), 0L)(identity)
+    assert(ManagedTable.history(spark, root).last.version == snap.version)
   }
 
   test("deleteKeys rewrites exactly the files holding matched keys; empty key frame is a no-op") {
@@ -229,6 +244,121 @@ class ManagedTableSpec extends AnyFunSuite {
     val empty = ManagedTable.deleteKeys(spark, root, Seq.empty[Long].toDF("id"), Seq("id"))
     assert(empty.version == post.version)
     assert(ManagedTable.history(spark, root).last.version == post.version)
+  }
+
+  private def liveFiles(root: String): Seq[String] = ManagedTable.history(spark, root).last.files
+
+  /** Bytes of `root`'s data files `rels`, from the filesystem. */
+  private def bytesOf(root: String, rels: Seq[String]): Long =
+    rels.map(r => java.nio.file.Files.size(java.nio.file.Paths.get(root, r))).sum
+
+  /** Run `body` with `spark.sql.files.maxPartitionBytes` set to `target`. */
+  private def withTarget[T](target: Long)(body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, target.toString)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("packing: ten upserts into a small table keep one data file; reads equal the model") {
+    val root = freshRoot()
+    ManagedTable.create(spark, root, schema)
+    val rnd = new scala.util.Random(41L)
+    var model = (1L to 40L).map(i => i -> (s"g${i % 3}", i.toDouble)).toMap
+    ManagedTable.insert(spark, root,
+      model.toSeq.map { case (i, (g, v)) => (i, g, v) }.toDF("id", "grp", "score").coalesce(1))
+    assert(liveFiles(root).size == 1)
+    var next = 100L
+    for (batch <- 1 to 10) {
+      // a few existing keys (so the one file is affected) and new ones
+      val hits = rnd.shuffle(model.keys.toList).take(1 + rnd.nextInt(4))
+      val fresh = (next until next + rnd.nextInt(4)).toList
+      next += 10
+      val src = (hits ++ fresh).map(k => (k, s"g${rnd.nextInt(3)}", rnd.nextInt(100).toDouble))
+      ManagedTable.upsert(spark, root, src.toDF("id", "grp", "score").repartition(3), Seq("id"))
+      model ++= src.map { case (k, g, v) => k -> (g, v) }
+      assert(liveFiles(root).size == 1, s"batch $batch left ${liveFiles(root)}")
+      assert(rowSet(ManagedTable.read(spark, root)) ==
+        model.toSeq.map { case (i, (g, v)) => (i, g, v) }.toSet, s"batch $batch")
+    }
+  }
+
+  test("packing: an upsert matching no key leaves every file untouched and adds one file") {
+    val root = freshRoot()
+    ManagedTable.create(spark, root, schema)
+    ManagedTable.insert(spark, root, rows((1L, "a", 1.0), (2L, "a", 2.0)))
+    ManagedTable.insert(spark, root, rows((3L, "b", 3.0)))
+    val pre = liveFiles(root)
+    ManagedTable.upsert(spark, root,
+      rows((7L, "c", 7.0), (8L, "c", 8.0), (9L, "d", 9.0)).repartition(3), Seq("id"))
+    val post = liveFiles(root)
+    assert(post.take(pre.size) == pre && post.size == pre.size + 1, s"$pre -> $post")
+    assert(ManagedTable.read(spark, root).count() == 6)
+  }
+
+  test("packing: a view stays one file across ingest batches") {
+    val router = new graft.server.SqlRouter(spark)
+    val dir = Files.createTempDirectory("graft_pack_view").toString
+    router.execute(s"CREATE MANAGED TABLE pv LOCATION '$dir/t' AS " +
+      "SELECT id, concat('s', CAST(id % 3 AS STRING)) AS g, id AS v FROM range(300)")
+    router.execute(
+      s"CREATE MATERIALIZED VIEW pv_by_g OVER pv KEY (g) COUNT n SUM (v AS sv) LOCATION '$dir/v'")
+    def ingest(rows: Seq[(Long, String, Long)]) =
+      router.ingest("pv", router.batchFrame("pv", Seq("id", "g", "v"),
+        rows.map { case (i, g, v) => Seq(i.toString, g, v.toString) }), Seq("id"), Seq("v"))
+    // the first batch touches every group; later ones one group each
+    ingest(Seq((1L, "s0", 5L), (2L, "s1", 6L), (3L, "s2", 7L), (1000L, "s0", 1L)))
+    assert(liveFiles(s"$dir/v").size == 1)
+    for (b <- 1 to 4) {
+      ingest(Seq((10L * b, s"s${b % 3}", b.toLong), (2000L + b, s"s${b % 3}", 1L)))
+      assert(liveFiles(s"$dir/v").size == 1, s"batch $b")
+    }
+    assert(spark.sql("SELECT g, n, sv FROM pv_by_g").collect().map(_.toSeq).toSet ==
+      spark.sql("SELECT g, count(*), sum(v) FROM pv GROUP BY g").collect().map(_.toSeq).toSet)
+  }
+
+  test("packing: a rewrite of N bytes yields ceil(N / maxPartitionBytes) files") {
+    val root = freshRoot()
+    ManagedTable.create(spark, root, schema)
+    ManagedTable.insert(spark, root, (1L to 3000L).map(i => (i, s"grp-$i", i * 1.5))
+      .toDF("id", "grp", "score").coalesce(1))
+    val n = bytesOf(root, liveFiles(root))
+    // 3.5 targets: four files, with room for the one upserted row
+    withTarget(n * 2 / 7) {
+      ManagedTable.upsert(spark, root, rows((5L, "x", 0.0)), Seq("id"))
+      assert(liveFiles(root).size == 4, liveFiles(root))
+    }
+    assert(ManagedTable.read(spark, root).count() == 3000)
+  }
+
+  test("packing: DELETE and UPDATE rewrites pack the same way") {
+    val root = freshRoot()
+    ManagedTable.create(spark, root, schema)
+    (0 until 4).foreach { b =>
+      ManagedTable.insert(spark, root, (1L to 500L).map(i => (b * 1000L + i, s"g$b", i * 1.0))
+        .toDF("id", "grp", "score"))
+    }
+    assert(liveFiles(root).size > 1)
+    // every file affected: one file under the default target
+    ManagedTable.update(spark, root, lit(true), Map("score" -> (col("score") + 1)))
+    assert(liveFiles(root).size == 1)
+    ManagedTable.delete(spark, root, col("id") % 7 === 0)
+    assert(liveFiles(root).size == 1)
+    val ids = (0 until 4).flatMap(b => (1L to 500L).map(b * 1000L + _))
+    assert(ManagedTable.read(spark, root).count() == ids.count(_ % 7 != 0))
+    // a lowered target: ceil(bytes of the affected files / target) files
+    val n = bytesOf(root, liveFiles(root))
+    val target = n / 3 + 1
+    withTarget(target) {
+      ManagedTable.update(spark, root, col("id") > 0L, Map("grp" -> upper(col("grp"))))
+      assert(liveFiles(root).size == 3, liveFiles(root))
+      // every file holds a multiple of 5 (the rows were spread round-robin)
+      val m = bytesOf(root, liveFiles(root))
+      ManagedTable.delete(spark, root, col("id") % 5 === 0)
+      assert(liveFiles(root).size == ((m + target - 1) / target).toInt, liveFiles(root))
+    }
+    assert(rowSet(ManagedTable.read(spark, root)) == ids.filter(i => i % 7 != 0 && i % 5 != 0)
+      .map(i => (i, s"G${i / 1000}", (i % 1000) + 1.0)).toSet)
   }
 
   test("time travel reads any retained version; history records operations") {

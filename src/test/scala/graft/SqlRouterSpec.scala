@@ -548,6 +548,53 @@ class SqlRouterSpec extends AnyFunSuite {
     assert(rows("SELECT g, n FROM mfv").contains(Seq("g1", 1L)))
   }
 
+  test("a 200-row ingest into a table with one COUNT/SUM view runs at most 16 Spark jobs") {
+    // fixed per-job cost dominates a small keyed batch, so the job count
+    // of one ingest (base upsert plus view maintenance) is pinned
+    val dir = Files.createTempDirectory("graft_ingest_jobs").toString
+    router.execute(s"CREATE MANAGED TABLE ij LOCATION '$dir/t' AS SELECT id, " +
+      "concat('s', CAST(id % 3 AS STRING)) AS g, id * 7 AS v FROM range(2000)")
+    router.execute(
+      s"CREATE MATERIALIZED VIEW ij_by_g OVER ij KEY (g) COUNT n SUM (v AS sv) LOCATION '$dir/v'")
+    val rnd = new scala.util.Random(7L)
+    var next = 10000L
+    // 150 updates of existing keys and 50 new keys, as the ingest benchmark sends
+    def batch(): Seq[Seq[String]] =
+      (rnd.shuffle((0L until 2000L).toList).take(150) ++ (next until next + 50)).map(k =>
+        Seq(k.toString, s"s${rnd.nextInt(3)}", rnd.nextInt(1000).toString))
+    def ingest(): Long = {
+      val out = router.ingest("ij", router.batchFrame("ij", Seq("id", "g", "v"), batch()),
+        Seq("id"), Seq("v"))
+      next += 50
+      out.collect().head.getAs[Long]("n_applied")
+    }
+    assert(ingest() == 200L) // the first batch warms the write path
+    val sentinel = "ingest-job-count-sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == sentinel))
+          seen.countDown()
+        else jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(ingest() == 200L)
+      // listener events arrive in order: once the sentinel job is seen,
+      // every job of the ingest has been counted
+      spark.sparkContext.setJobDescription(sentinel)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get <= 16, s"one ingest ran ${jobs.get} Spark jobs")
+    // the recompute goes straight to spark.sql: routed, the view would answer it
+    def rowsOf(sql: String) = spark.sql(sql).collect().map(_.toSeq).toSet
+    assert(rowsOf("SELECT g, n, sv FROM ij_by_g") ==
+      rowsOf("SELECT g, count(*), sum(v) FROM ij GROUP BY g"))
+  }
+
   test("BEGIN...COMMIT publishes multi-table mutations atomically") {
     val r1 = freshRoot(); val r2 = freshRoot()
     router.execute(s"CREATE MANAGED TABLE tx_a (id BIGINT, v DOUBLE) LOCATION '$r1'")
