@@ -195,7 +195,7 @@ class ManagedTableSpec extends AnyFunSuite {
     assert(none.written.isEmpty && none.replaced.isEmpty)
   }
 
-  test("replaceMatched swaps the matched rows for their replacement in one commit; NULL keys fail") {
+  test("replaceMatched swaps the matched rows in one commit, NULL keys fail") {
     // the view-maintenance write: the rows holding the key set go out,
     // a function of exactly those rows comes in — here key 1's row is
     // dropped (a dead group), key 2's rewritten, key 8 born
