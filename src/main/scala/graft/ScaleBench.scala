@@ -499,7 +499,7 @@ object ScaleBench {
           FileSkip.disabled = false
           cell("g_bloom_build") {
             FileBloom.saveConfig(spark, root, Seq("doc_id"))
-            FileBloom.write(spark, root, ManagedTable.history(spark, root).last)
+            FileBloom.write(spark, root, ManagedTable.latest(spark, root))
             FileSkip.invalidate(spark, root)
             64L
           }
@@ -675,7 +675,7 @@ object ScaleBench {
           FileBloom.saveConfig(spark, root, Seq("doc_id"))
           cell(s"g_bseg_backfill_f$nf") {
             FileBloom.write(spark, root,
-              ManagedTable.history(spark, root).last)
+              ManagedTable.latest(spark, root))
             nf.toLong
           }
           cell(s"g_bseg_commit_f$nf") {

@@ -73,7 +73,7 @@ object LakehouseDemo {
     // table a selective range touches a strict subset of the files
     val rr = ManagedTable.readRange(spark, root, "id", 1L, 2L)
     println(s"\n== readRange(id in [1,2]): scans ${rr.inputFiles.length} of " +
-      s"${ManagedTable.history(spark, root).last.files.size} file(s) ==")
+      s"${ManagedTable.latest(spark, root).files.size} file(s) ==")
     rr.orderBy("id").show(false)
 
     println("\n== history ==")

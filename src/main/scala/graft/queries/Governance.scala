@@ -117,7 +117,7 @@ object Governance {
       val cols = docs.columns.toSeq
       val mv0 = Mvm.compute(ManagedTable.read(s, root, asOf = Some(1)),
         keys, "n_docs", sums)
-      val latest = ManagedTable.history(s, root).map(_.version).max
+      val latest = ManagedTable.latest(s, root).version
       // lazy fold: the full chain (3 deltas + 3 merges over k-row
       // views) evaluates ONCE at the sink — a per-step checkpoint
       // would eagerly re-run the whole prefix at every step

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.StructType
 import graft.sources.ManagedTable
+import graft.util.Json
 
 /** SQL statement router: the front door that gives the HTTP surface
   * (and any embedding host) the reference's full SQL UX — DML included
@@ -121,10 +122,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
   catalogFile.foreach { p =>
     val f = catalogFs(p)
     if (f.exists(p)) {
-      val in = f.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      SqlRouter.parseCatalog(text).foreach { case (name, root) =>
+      Json.readFile(f, p)(SqlRouter.parseCatalog).foreach { case (name, root) =>
         require(ManagedTable.history(spark, root).nonEmpty,
           s"catalog entry '$name' -> $root is not a managed table " +
             s"(moved or vacuumed away?) — fix or remove it from $p")
@@ -330,7 +328,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
              orderCols: Seq[String]): DataFrame = {
     val r = mutableRoot(name)
     require(keys.nonEmpty, "ingest needs at least one key column")
-    val pre = ManagedTable.history(spark, r).last
+    val pre = ManagedTable.latest(spark, r)
     // no explicit order -> the key columns themselves: an arbitrary
     // but DETERMINISTIC winner for in-batch duplicate keys
     val winners = graft.streaming.ManagedSink.latestPerKey(
@@ -357,7 +355,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     * — the same behavior VALUES-with-strings has in a query. */
   def batchFrame(name: String, columns: Seq[String],
                  rows: Seq[Seq[String]]): DataFrame = {
-    val schema = ManagedTable.history(spark, root(name)).last.schema
+    val schema = ManagedTable.latest(spark, root(name)).schema
     val unknown = columns.filterNot(schema.fieldNames.contains)
     require(unknown.isEmpty, s"unknown column(s): ${unknown.mkString(", ")}")
     rows.foreach(r => require(r.size == columns.size,
@@ -608,7 +606,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       if (fs.exists(new org.apache.hadoop.fs.Path(qr, "_graft_log")))
         ManagedTable.read(spark, qr)
       else {
-        val hostSchema = ManagedTable.history(spark, root(name)).last.schema
+        val hostSchema = ManagedTable.latest(spark, root(name)).schema
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           hostSchema.add("_violation", org.apache.spark.sql.types.StringType))
@@ -627,11 +625,11 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
 
     case Open(name, path) =>
       register(name, path)
-      summary("open", name, ManagedTable.history(spark, path).last.version)
+      summary("open", name, ManagedTable.latest(spark, path).version)
 
     case Insert(name, rest) if tables.contains(name) =>
       val r = mutableRoot(name)
-      val pre = ManagedTable.history(spark, r).last
+      val pre = ManagedTable.latest(spark, r)
       val rows = align(query(rest), pre.schema)
       // with views to maintain, the inserted rows are read twice (the
       // write, then the view bag): materialize them once so both see
@@ -675,7 +673,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
         a.substring(0, eq).trim -> parseCol(a.substring(eq + 1))
       }.toMap
       val where = wherePart.map(parseCol).getOrElse(lit(true))
-      val preU = ManagedTable.history(spark, r).last.version
+      val preU = ManagedTable.latest(spark, r).version
       val snap = ManagedTable.update(spark, r, where, sets)
       refreshView(name)
       maintainViews(name, preU, snap.version)
@@ -684,7 +682,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     case Delete(name, wherePart) if tables.contains(name) =>
       val r = mutableRoot(name)
       val where = Option(wherePart).map(parseCol).getOrElse(lit(true))
-      val preD = ManagedTable.history(spark, r).last.version
+      val preD = ManagedTable.latest(spark, r).version
       val snap = ManagedTable.delete(spark, r, where)
       refreshView(name)
       maintainViews(name, preD, snap.version)
@@ -786,7 +784,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
         s"'$name' is a materialized view maintained by the engine — " +
           "constrain its base table instead")
       val r = root(name)
-      val schema = ManagedTable.history(spark, r).last.schema
+      val schema = ManagedTable.latest(spark, r).schema
       val cur = graft.sources.Constraints.load(spark, r)
         .getOrElse(graft.sources.Constraints.Spec(Nil, Nil, Nil, "reject"))
       val merged = clause.trim match {
@@ -810,14 +808,14 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       graft.sources.Constraints.requireTableClean(spark, r, spec)
       graft.sources.Constraints.save(spark, r, spec, schema)
       summary("add_constraint", name,
-        ManagedTable.history(spark, r).last.version)
+        ManagedTable.latest(spark, r).version)
 
     case DropConstraintsStmt(name) if tables.contains(name) =>
       require(!mviews.contains(name),
         s"'$name' is a materialized view — it has no declared constraints")
       graft.sources.Constraints.drop(spark, root(name))
       summary("drop_constraints", name,
-        ManagedTable.history(spark, root(name)).last.version)
+        ManagedTable.latest(spark, root(name)).version)
 
     // SYNC TABLE dst FROM src KEY (...): apply every upstream version
     // committed since dst's durable feed cursor as one delta-sized
@@ -842,12 +840,12 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
             s"'$dst' is a materialized view maintained by the engine — " +
               "SYNC into a managed table instead")
           val dstRoot = root(dst)
-          val pre = ManagedTable.history(spark, dstRoot).last.version
+          val pre = ManagedTable.latest(spark, dstRoot).version
           val r = graft.streaming.ChangeFeed.sync(spark, srcRoot, dstRoot, keys)
           graft.sources.TableStatistics.invalidate(dstRoot)
           refreshView(dst)
           maintainViews(dst, pre,
-            ManagedTable.history(spark, dstRoot).last.version)
+            ManagedTable.latest(spark, dstRoot).version)
           r
         }
       Seq(("sync", dst, res.fromVersion, res.toVersion, res.upserted, res.removed))
@@ -858,7 +856,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     // RESTORE makes it current; roll forward by restoring a later one)
     case Restore(name, ver) if tables.contains(name) =>
       val rr = mutableRoot(name)
-      val preR = ManagedTable.history(spark, rr).last.version
+      val preR = ManagedTable.latest(spark, rr).version
       val snap = ManagedTable.restore(spark, rr, ver.toInt)
       refreshView(name)
       maintainViews(name, preR, snap.version)
@@ -877,7 +875,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
         s"table '$name' has dependent materialized view(s) " +
           s"${dependents.mkString(", ")} — DROP those first")
       val r = root(name)
-      val v = ManagedTable.history(spark, r).last.version
+      val v = ManagedTable.latest(spark, r).version
       tables.remove(name)
       spark.catalog.dropTempView(name): Unit
       persist()
@@ -891,7 +889,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
 
     case Upsert(name, keys, rest) if tables.contains(name) =>
       val r = mutableRoot(name)
-      val pre = ManagedTable.history(spark, r).last
+      val pre = ManagedTable.latest(spark, r)
       val keyCols = splitTop(keys, ',').map(_.trim)
       val m = upsertInto(name, r, align(query(rest), pre.schema), keyCols)
       refreshView(name)
@@ -955,7 +953,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
 
     case DropMv(name, purge) if mviews.contains(name) =>
       val r = root(name)
-      val v = ManagedTable.history(spark, r).last.version
+      val v = ManagedTable.latest(spark, r).version
       mviews.remove(name)
       tables.remove(name)
       MvRewrite.invalidatePredCache(name)
@@ -1051,7 +1049,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       // tables, where they live, and how far their logs have moved
       import spark.implicits._
       tables.toSeq.sortBy(_._1).map { case (n, r) =>
-        val snap = ManagedTable.history(spark, r).last
+        val snap = ManagedTable.latest(spark, r)
         (n, r, if (mviews.contains(n)) "materialized_view" else "table",
           snap.version, snap.files.size.toLong)
       }.toDF("name", "location", "kind", "version", "n_files")
@@ -1065,7 +1063,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       // dropped since simply isn't shown).
       import spark.implicits._
       val r = root(name)
-      val snap = ManagedTable.history(spark, r).last
+      val snap = ManagedTable.latest(spark, r)
       val logicalOf = snap.schema.fieldNames
         .map(c => snap.physicalName(c) -> c).toMap
       val (stats, extras) = graft.sources.FileStats.readAll(spark, r, snap.version)
@@ -1096,7 +1094,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       // RENAME, or for a re-added name after a DROP) — one manifest
       // read, never a data scan
       import spark.implicits._
-      val snap = ManagedTable.history(spark, root(name)).last
+      val snap = ManagedTable.latest(spark, root(name))
       snap.schema.fields.map(f =>
         (f.name, f.dataType.simpleString, snap.physicalName(f.name)))
         .toSeq.toDF("col_name", "data_type", "physical_name")
@@ -1109,7 +1107,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     // (full re-backfill).
     case CreateBloomIdx(name, colList) if tables.contains(name) =>
       val r = root(name)
-      val snap = ManagedTable.history(spark, r).last
+      val snap = ManagedTable.latest(spark, r)
       val cols = splitTop(colList, ',').map(_.trim).filter(_.nonEmpty)
       val missing = cols.filterNot(snap.schema.fieldNames.contains)
       require(missing.isEmpty,
@@ -1145,12 +1143,12 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       if (fs.exists(segDir)) fs.delete(segDir, true): Unit
       graft.sources.FileSkip.invalidate(spark, r)
       summary("drop_bloom_index", name,
-        ManagedTable.history(spark, r).last.version)
+        ManagedTable.latest(spark, r).version)
 
     case ShowBloomIdx(name) if tables.contains(name) =>
       import spark.implicits._
       val r = root(name)
-      val snap = ManagedTable.history(spark, r).last
+      val snap = ManagedTable.latest(spark, r)
       val logicalOf = snap.schema.fieldNames
         .map(c => snap.physicalName(c) -> c).toMap
       graft.sources.FileBloom.config(spark, r).map { phys =>
@@ -1594,7 +1592,7 @@ object SqlRouter {
   private def mvSidecarPath(root: String) =
     new org.apache.hadoop.fs.Path(root, "_graft_mv.json")
 
-  private[server] def writeMvSidecar(spark: SparkSession, spec: MvSpec): Unit = {
+  private[graft] def writeMvSidecar(spark: SparkSession, spec: MvSpec): Unit = {
     val p = mvSidecarPath(spec.root)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def j(s: String) = graft.util.Json.escape(s)
@@ -1618,86 +1616,39 @@ object SqlRouter {
 
   /** Load the MV sidecar at `root`, if any — the restart path that
     * turns a reloaded catalog entry back into a maintained view. */
-  private[server] def readMvSidecar(spark: SparkSession,
-                                    root: String): Option[MvSpec] = {
+  private[graft] def readMvSidecar(spark: SparkSession,
+                                   root: String): Option[MvSpec] = {
     val p = mvSidecarPath(root)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      val m = parseFlat(text, "mv").toMap
-      def need(k: String) = m.getOrElse(k, throw new IllegalArgumentException(
-        s"MV sidecar $p missing '$k'"))
-      // mins/maxs default empty so pre-extrema sidecars still load
-      def aggList(k: String): Seq[(String, String)] =
-        m.get(k).filter(_.trim.nonEmpty).map(parseSumList).getOrElse(Nil)
-      // joins default empty so pre-join-view sidecars still load
-      val joins = m.get("joins").filter(_.trim.nonEmpty).map { blob =>
-        val JoinSeg = """(?is)\s*(\w+)\s+ON\s+(.+?)\s*""".r
-        splitAtKeyword(blob, "JOIN").map {
-          case JoinSeg(t, cond) => (t, cond)
-          case other => throw new IllegalArgumentException(
-            s"MV sidecar $p: malformed joins segment '${other.trim.take(40)}'")
-        }
-      }.getOrElse(Nil)
-      Some(MvSpec(need("name"), need("over"), root,
-        need("keys").split(',').map(_.trim).toSeq, need("count"),
-        aggList("sums"), aggList("mins"), aggList("maxs"), aggList("avgs"),
-        m.get("where").map(_.trim).filter(_.nonEmpty), joins))
-    }
+    else Some(Json.readFile(f, p)(parseMvSidecar(root, _)))
   }
 
-  /** Parse the catalog file: exactly what `persist` emits — a flat
-    * `{"tables":{"name":"root",...}}` of JSON strings. Same minimal
-    * same-grammar discipline as ManagedTable's manifest parser (the
-    * engine renders it, the engine reads it); loud on any mismatch.
-    */
+  private def parseMvSidecar(root: String, text: String): MvSpec = {
+    val m = Json.strMap(Json.field(Json.parseObj(text, "MV sidecar"), "mv"), "mv")
+    def need(k: String) = m.getOrElse(k, throw new IllegalArgumentException(
+      s"MV sidecar missing '$k'"))
+    // mins/maxs default empty so pre-extrema sidecars still load
+    def aggList(k: String): Seq[(String, String)] =
+      m.get(k).filter(_.trim.nonEmpty).map(parseSumList).getOrElse(Nil)
+    // joins default empty so pre-join-view sidecars still load
+    val joins = m.get("joins").filter(_.trim.nonEmpty).map { blob =>
+      val JoinSeg = """(?is)\s*(\w+)\s+ON\s+(.+?)\s*""".r
+      splitAtKeyword(blob, "JOIN").map {
+        case JoinSeg(t, cond) => (t, cond)
+        case other => throw new IllegalArgumentException(
+          s"MV sidecar: malformed joins segment '${other.trim.take(40)}'")
+      }
+    }.getOrElse(Nil)
+    MvSpec(need("name"), need("over"), root,
+      need("keys").split(',').map(_.trim).toSeq, need("count"),
+      aggList("sums"), aggList("mins"), aggList("maxs"), aggList("avgs"),
+      m.get("where").map(_.trim).filter(_.nonEmpty), joins)
+  }
+
+  /** The catalog file `{"tables":{"name":"root",...}}` as (name, root)
+    * pairs in name order — the order `persist` writes them. */
   private[server] def parseCatalog(text: String): Seq[(String, String)] =
-    parseFlat(text, "tables")
-
-  /** Flat `{"<field>":{"k":"v",...}}` JSON-string-object parser shared
-    * by the catalog file and the MV sidecar. */
-  private[server] def parseFlat(text: String, field: String): Seq[(String, String)] = {
-    val start = text.indexOf(s""""$field":""")
-    require(start >= 0, s"missing '$field' field: ${text.take(120)}")
-    var i = start + field.length + 3
-    require(text.charAt(i) == '{', s"'$field' must be an object")
-    i += 1
-    def parseStr(from: Int): (String, Int) = {
-      require(text.charAt(from) == '"', s"catalog: expected string at $from")
-      val sb = new StringBuilder
-      var j = from + 1
-      while (text.charAt(j) != '"') {
-        text.charAt(j) match {
-          case '\\' =>
-            text.charAt(j + 1) match {
-              case 'n' => sb.append('\n'); case 't' => sb.append('\t')
-              case 'r' => sb.append('\r'); case 'b' => sb.append('\b')
-              case 'f' => sb.append('\f')
-              case 'u' =>
-                sb.append(Integer.parseInt(text.substring(j + 2, j + 6), 16).toChar)
-                j += 4
-              case c => sb.append(c)
-            }
-            j += 2
-          case c => sb.append(c); j += 1
-        }
-      }
-      (sb.toString, j + 1)
-    }
-    val out = Seq.newBuilder[(String, String)]
-    while (text.charAt(i) != '}') {
-      if (text.charAt(i) == ',') i += 1
-      else {
-        val (name, afterName) = parseStr(i)
-        require(text.charAt(afterName) == ':', s"catalog: expected ':' after '$name'")
-        val (root, afterRoot) = parseStr(afterName + 1)
-        out += name -> root
-        i = afterRoot
-      }
-    }
-    out.result()
-  }
+    Json.strMap(Json.field(Json.parseObj(text, "catalog"), "tables"), "tables")
+      .toSeq.sortBy(_._1)
 }

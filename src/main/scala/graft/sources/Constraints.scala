@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Json
 
 /** Write-time constraint enforcement for [[ManagedTable]]s — the
   * complement of q140's after-the-fact audit: the same PK-uniqueness /
@@ -58,7 +59,7 @@ object Constraints {
   private def specPath(root: String) =
     new Path(root, "_graft_log/constraints.json")
 
-  // -- persistence (flat JSON, same discipline as the stats sidecar) --
+  // -- persistence: JSON written by `render`, read through util.Json --
 
   private def jarr(xs: Seq[String]): String =
     xs.map(graft.util.Json.escape).mkString("[", ",", "]")
@@ -70,25 +71,17 @@ object Constraints {
         .mkString("[", ",", "]")},"on_violation":${graft.util.Json.escape(s.onViolation)}}"""
 
   private[graft] def parse(text: String): Spec = {
-    val doc = graft.util.Json.parse(text) match {
-      case m: Map[String, Any] @unchecked => m
-      case other => throw new IllegalArgumentException(
-        s"constraints sidecar is not a JSON object: $other")
-    }
-    def strs(k: String): Seq[String] = doc.getOrElse(k, Vector.empty) match {
-      case v: Vector[Any @unchecked] => v.map(String.valueOf)
-      case other => throw new IllegalArgumentException(s"'$k' not an array: $other")
-    }
-    val checks = doc.getOrElse("checks", Vector.empty) match {
-      case v: Vector[Any @unchecked] => v.map {
-        case m: Map[String, Any] @unchecked =>
-          Check(String.valueOf(m("name")), String.valueOf(m("sql")))
-        case other => throw new IllegalArgumentException(s"check not an object: $other")
+    val doc = Json.parseObj(text, "constraints sidecar")
+    def strs(k: String): Seq[String] =
+      doc.get(k).map(Json.strs(_, k)).getOrElse(Vector.empty)
+    val checks = doc.get("checks").map(Json.arr(_, "checks")).getOrElse(Vector.empty)
+      .map { c =>
+        val m = Json.obj(c, "check")
+        Check(Json.str(Json.field(m, "name"), "name"),
+          Json.str(Json.field(m, "sql"), "sql"))
       }
-      case other => throw new IllegalArgumentException(s"'checks' not an array: $other")
-    }
     Spec(strs("primary_key"), strs("not_null"), checks,
-      String.valueOf(doc.getOrElse("on_violation", "reject")))
+      doc.get("on_violation").map(Json.str(_, "on_violation")).getOrElse("reject"))
   }
 
   /** Resolve every referenced column and CHECK expression against
@@ -128,12 +121,7 @@ object Constraints {
     val p = specPath(root)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      Some(parse(text))
-    }
+    else Some(Json.readFile(fs, p)(parse))
   }
 
   /** Remove every declared constraint (the sidecar). Quarantined rows
@@ -258,7 +246,7 @@ object Constraints {
         // table was created — without the same evolution here, the
         // wider batch would fail insert's exact-schema check and turn
         // a QUARANTINE divert into a crashed statement
-        val qSchema = ManagedTable.history(spark, qr).last.schema
+        val qSchema = ManagedTable.latest(spark, qr).schema
         bad.schema.fields.filterNot(f => qSchema.fieldNames.contains(f.name))
           .foreach(f => ManagedTable.addColumn(spark, qr, f.name, f.dataType): Unit)
       }
@@ -268,7 +256,7 @@ object Constraints {
       // host RENAMED or DROPPED it since) null-fills — the audit table
       // keeps its history under the old name rather than crashing the
       // divert.
-      val qSchema2 = ManagedTable.history(spark, qr).last.schema
+      val qSchema2 = ManagedTable.latest(spark, qr).schema
       ManagedTable.insert(spark, qr, bad.select(qSchema2.fields.map { f =>
         if (bad.columns.contains(f.name)) col(f.name)
         else lit(null).cast(f.dataType).as(f.name)

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.Path
+import graft.util.Json
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -130,15 +131,10 @@ object FileBloom {
     val p = configPath(root)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Nil
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      val m = text.indexOf("\"cols\":\"")
-      require(m >= 0, s"bad bloom config at $p: ${text.take(120)}")
-      val start = m + 8
-      val end = text.indexOf('"', start)
-      text.substring(start, end).split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    else Json.readFile(fs, p) { text =>
+      val bloom = Json.obj(Json.field(Json.parseObj(text, "bloom config"), "bloom"), "bloom")
+      Json.str(Json.field(bloom, "cols"), "cols")
+        .split(',').map(_.trim).filter(_.nonEmpty).toSeq
     }
   }
 
@@ -177,86 +173,17 @@ object FileBloom {
     s"""{"v":1,"files":$files}"""
   }
 
-  private[graft] def parse(text: String): Blooms = {
-    var i = 0
-    def fail(msg: String): Nothing =
-      throw new IllegalArgumentException(s"bloom sidecar: $msg at offset $i")
-    def expect(c: Char): Unit = {
-      if (i >= text.length || text.charAt(i) != c) fail(s"expected '$c'")
-      i += 1
-    }
-    def parseStr(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (text.charAt(i) != '"') {
-        text.charAt(i) match {
-          case '\\' =>
-            text.charAt(i + 1) match {
-              case 'n' => sb.append('\n'); i += 2
-              case 'r' => sb.append('\r'); i += 2
-              case 't' => sb.append('\t'); i += 2
-              case 'u' =>
-                sb.append(Integer.parseInt(text.substring(i + 2, i + 6), 16).toChar)
-                i += 6
-              case c @ ('"' | '\\') => sb.append(c); i += 2
-              case c => fail(s"unknown escape '\\$c'")
-            }
-          case c => sb.append(c); i += 1
-        }
+  private[graft] def parse(text: String): Blooms =
+    Json.obj(Json.field(Json.parseObj(text, "bloom sidecar"), "files"), "files").map {
+      case (f, cols) => f -> Json.obj(cols, f).map { case (c, b) =>
+        val bloom = Json.obj(b, c)
+        val m = Json.long(Json.field(bloom, "m"), "m").toInt
+        require(m > 0, s"bloom for '$c' without m")
+        c -> Bloom(m, bloom.get("k").map(Json.long(_, "k").toInt).getOrElse(K),
+          java.util.BitSet.valueOf(java.util.Base64.getDecoder.decode(
+            Json.str(Json.field(bloom, "bits"), "bits"))))
       }
-      i += 1
-      sb.toString
     }
-    def parseInt(): Int = {
-      val start = i
-      while (i < text.length && text.charAt(i).isDigit) i += 1
-      if (i == start) fail("expected number")
-      text.substring(start, i).toInt
-    }
-    def parseBloom(): Bloom = {
-      expect('{')
-      var m = 0; var k = K; var bits = new java.util.BitSet()
-      var more = true
-      while (more) {
-        parseStr() match {
-          case "m" => expect(':'); m = parseInt()
-          case "k" => expect(':'); k = parseInt()
-          case "bits" => expect(':')
-            bits = java.util.BitSet.valueOf(
-              java.util.Base64.getDecoder.decode(parseStr()))
-          case other => fail(s"unknown bloom field '$other'")
-        }
-        if (text.charAt(i) == ',') i += 1 else more = false
-      }
-      expect('}')
-      require(m > 0, "bloom without m")
-      Bloom(m, k, bits)
-    }
-    val fi = text.indexOf("\"files\":")
-    if (fi < 0) fail("missing field 'files'")
-    i = fi + 8
-    expect('{')
-    val out = Map.newBuilder[String, Map[String, Bloom]]
-    if (i < text.length && text.charAt(i) == '}') return out.result()
-    var more = true
-    while (more) {
-      val f = parseStr(); expect(':'); expect('{')
-      val cols = Map.newBuilder[String, Bloom]
-      if (text.charAt(i) == '}') { i += 1 }
-      else {
-        var cm = true
-        while (cm) {
-          val c = parseStr(); expect(':'); cols += c -> parseBloom()
-          if (text.charAt(i) == ',') i += 1 else cm = false
-        }
-        expect('}')
-      }
-      out += f -> cols.result()
-      if (text.charAt(i) == ',') i += 1 else more = false
-    }
-    expect('}')
-    out.result()
-  }
 
   // -- segment shards --------------------------------------------------
   //
@@ -278,22 +205,14 @@ object FileBloom {
   private[graft] final case class SegEntry(name: String, cols: Set[String],
                                            files: Seq[String])
 
-  private def renderMeta(e: SegEntry): String =
+  private[graft] def renderMeta(e: SegEntry): String =
     s"""{"cols":${graft.util.Json.escape(e.cols.toSeq.sorted.mkString(","))},"files":[${e.files.map(graft.util.Json.escape).mkString(",")}]}"""
 
-  private val MetaStr = "\"((?:[^\"\\\\]|\\\\.)*)\"".r
-
-  private def parseMeta(name: String, text: String): SegEntry = {
-    val ci = text.indexOf("\"cols\":")
-    require(ci >= 0, s"bloom segment meta $name: missing cols")
-    val colsRaw = MetaStr.findFirstMatchIn(text.substring(ci + 7))
-      .map(_.group(1)).getOrElse("")
-    val fi = text.indexOf("\"files\":[")
-    require(fi >= 0, s"bloom segment meta $name: missing files")
-    val body = text.substring(fi + 9, text.lastIndexOf(']'))
+  private[graft] def parseMeta(name: String, text: String): SegEntry = {
+    val doc = Json.parseObj(text, s"bloom segment meta $name")
     SegEntry(name,
-      colsRaw.split(',').map(_.trim).filter(_.nonEmpty).toSet,
-      MetaStr.findAllMatchIn(body).map(_.group(1)).toSeq)
+      Json.str(Json.field(doc, "cols"), "cols").split(',').map(_.trim).filter(_.nonEmpty).toSet,
+      Json.strs(Json.field(doc, "files"), "files"))
   }
 
   /** List the table's segment names (one FS listing). */
@@ -325,12 +244,8 @@ object FileBloom {
         val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val (seen0, cov0) = prior.getOrElse((Set.empty[String],
           Map.empty[String, Set[String]]))
-        val fresh = (names -- seen0).toSeq.sorted.map { n =>
-          val in = fs.open(new Path(dir, s"$n.meta.json"))
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-          parseMeta(n, text)
-        }
+        val fresh = (names -- seen0).toSeq.sorted.map(n =>
+          Json.readFile(fs, new Path(dir, s"$n.meta.json"))(parseMeta(n, _)))
         val cov = fresh.foldLeft(cov0) { (acc, e) =>
           e.files.foldLeft(acc)((a, f) =>
             a.updated(f, a.getOrElse(f, Set.empty) ++ e.cols))
@@ -368,11 +283,8 @@ object FileBloom {
                           name: String): Blooms = {
     val p = new Path(segDirPath(root), s"$name.seg.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    parse(text)
+    if (!fs.exists(p)) Map.empty
+    else Json.readFile(fs, p)(parse)
   }
 
   /** Column-wise merge (same file may appear in an old narrow segment
@@ -387,11 +299,8 @@ object FileBloom {
                          version: Int): Blooms = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = bloomPath(root, version)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    parse(text)
+    if (!fs.exists(p)) Map.empty
+    else Json.readFile(fs, p)(parse)
   }
 
   /** The full bloom view at `version`: the legacy per-version sidecar

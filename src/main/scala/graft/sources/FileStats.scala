@@ -6,6 +6,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
+import graft.util.Json
 
 /** Per-data-file column statistics for [[ManagedTable]] — the
   * data-skipping index every production lakehouse format keeps in its
@@ -216,7 +217,7 @@ object FileStats {
     } finally r.close()
   }
 
-  // -- sidecar (de)serialization, same minimal discipline as the manifest --
+  // -- sidecar (de)serialization: util.Json --
 
   /** v2 sidecar: `{"v":2,"files":{"<f>":{"cols":{"c":["mn","mx"],...}
     * [,"rows":N,"nulls":{"c":N,...}]},...}}`. `rows`/`nulls` are
@@ -244,170 +245,31 @@ object FileStats {
 
   private[graft] def parseExtras(text: String): Extras = parseAll(text)._2
 
-  private[graft] def parseAll(text: String): (Stats, Extras) =
-    if (text.replaceAll("\\s", "").startsWith("""{"v":2""")) parseV2(text)
-    else (parseV1(text), Map.empty)
-
-  private def parseV2(text: String): (Stats, Extras) = {
-    var i = 0
-    def fail(msg: String): Nothing =
-      throw new IllegalArgumentException(s"stats sidecar v2: $msg at offset $i")
-    def expect(c: Char): Unit = {
-      if (i >= text.length || text.charAt(i) != c) fail(s"expected '$c'")
-      i += 1
-    }
-    def parseStr(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (text.charAt(i) != '"') {
-        text.charAt(i) match {
-          case '\\' =>
-            text.charAt(i + 1) match {
-              case 'n' => sb.append('\n'); i += 2
-              case 'r' => sb.append('\r'); i += 2
-              case 't' => sb.append('\t'); i += 2
-              case 'u' =>
-                sb.append(Integer.parseInt(text.substring(i + 2, i + 6), 16).toChar)
-                i += 6
-              case c @ ('"' | '\\') => sb.append(c); i += 2
-              case c => fail(s"unknown escape '\\$c'")
-            }
-          case c => sb.append(c); i += 1
+  private[graft] def parseAll(text: String): (Stats, Extras) = {
+    val doc = Json.parseObj(text, "stats sidecar")
+    val files = Json.obj(Json.field(doc, "files"), "files")
+    def ranges(v: Any): Map[String, (String, String)] =
+      Json.obj(v, "cols").map { case (c, r) =>
+        Json.strs(r, c) match {
+          case Vector(mn, mx) => c -> ((mn, mx))
+          case other => throw new IllegalArgumentException(
+            s"column '$c': expected [min, max], got $other")
         }
       }
-      i += 1
-      sb.toString
-    }
-    def parseLong(): Long = {
-      val start = i
-      if (i < text.length && text.charAt(i) == '-') i += 1
-      while (i < text.length && text.charAt(i).isDigit) i += 1
-      if (i == start) fail("expected number")
-      text.substring(start, i).toLong
-    }
-    def parseCols(): Map[String, (String, String)] = {
-      expect('{')
-      val m = Map.newBuilder[String, (String, String)]
-      if (text.charAt(i) == '}') { i += 1; return m.result() }
-      var more = true
-      while (more) {
-        val c = parseStr(); expect(':')
-        expect('['); val mn = parseStr(); expect(','); val mx = parseStr(); expect(']')
-        m += c -> ((mn, mx))
-        if (text.charAt(i) == ',') i += 1 else more = false
-      }
-      expect('}')
-      m.result()
-    }
-    def parseNulls(): Map[String, Long] = {
-      expect('{')
-      val m = Map.newBuilder[String, Long]
-      if (text.charAt(i) == '}') { i += 1; return m.result() }
-      var more = true
-      while (more) {
-        val c = parseStr(); expect(':'); m += c -> parseLong()
-        if (text.charAt(i) == ',') i += 1 else more = false
-      }
-      expect('}')
-      m.result()
-    }
-    val fi = text.indexOf("\"files\":")
-    if (fi < 0) fail("missing field 'files'")
-    i = fi + 8
-    expect('{')
-    val stats = Map.newBuilder[String, Map[String, (String, String)]]
-    val extras = Map.newBuilder[String, Extra]
-    if (i < text.length && text.charAt(i) == '}')
-      return (stats.result(), extras.result())
-    var more = true
-    while (more) {
-      val f = parseStr(); expect(':'); expect('{')
-      var cols = Map.empty[String, (String, String)]
-      var rows = Option.empty[Long]
-      var nulls = Map.empty[String, Long]
-      var fields = true
-      while (fields) {
-        parseStr() match {
-          case "cols" => expect(':'); cols = parseCols()
-          case "rows" => expect(':'); rows = Some(parseLong())
-          case "nulls" => expect(':'); nulls = parseNulls()
-          case other => fail(s"unknown file field '$other'")
+    doc.get("v") match {
+      // v1: {"files":{"<f>":{"c":["mn","mx"],...},...}} — no extras
+      case None => (files.map { case (f, cols) => f -> ranges(cols) }, Map.empty)
+      case Some(2L) =>
+        val entries = files.map { case (f, e) => f -> Json.obj(e, f) }
+        // rows and nulls are written together, and only when known
+        val extras = entries.flatMap { case (f, e) =>
+          e.get("rows").map(n => f -> Extra(Json.long(n, "rows"),
+            Json.obj(Json.field(e, "nulls"), "nulls").map { case (c, k) => c -> Json.long(k, c) }))
         }
-        if (text.charAt(i) == ',') i += 1 else fields = false
-      }
-      expect('}')
-      stats += f -> cols
-      rows.foreach(n => extras += f -> Extra(n, nulls))
-      if (text.charAt(i) == ',') i += 1 else more = false
+        (entries.map { case (f, e) => f -> ranges(Json.field(e, "cols")) }, extras)
+      case Some(other) => throw new IllegalArgumentException(
+        s"unknown stats sidecar version $other")
     }
-    expect('}')
-    (stats.result(), extras.result())
-  }
-
-  private def parseV1(text: String): Stats = {
-    var i = 0
-    def fail(msg: String): Nothing =
-      throw new IllegalArgumentException(s"stats sidecar: $msg at offset $i")
-    def expect(c: Char): Unit = {
-      if (i >= text.length || text.charAt(i) != c) fail(s"expected '$c'")
-      i += 1
-    }
-    def parseStr(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (text.charAt(i) != '"') {
-        text.charAt(i) match {
-          // exact inverse of Json.escape: \" \\ \n \r \t \uXXXX. A raw
-          // append of the escaped char would turn a control character
-          // in a file/column name into a DIFFERENT string, silently
-          // desynchronizing sidecar keys from manifest file names
-          // (those files would then never prune and re-harvest forever).
-          case '\\' =>
-            text.charAt(i + 1) match {
-              case 'n' => sb.append('\n'); i += 2
-              case 'r' => sb.append('\r'); i += 2
-              case 't' => sb.append('\t'); i += 2
-              case 'u' =>
-                sb.append(Integer.parseInt(text.substring(i + 2, i + 6), 16).toChar)
-                i += 6
-              case c @ ('"' | '\\') => sb.append(c); i += 2
-              case c => fail(s"unknown escape '\\$c'")
-            }
-          case c => sb.append(c); i += 1
-        }
-      }
-      i += 1
-      sb.toString
-    }
-    def parsePair(): (String, String) = {
-      expect('['); val mn = parseStr(); expect(','); val mx = parseStr(); expect(']')
-      (mn, mx)
-    }
-    def parseCols(): Map[String, (String, String)] = {
-      expect('{')
-      val m = Map.newBuilder[String, (String, String)]
-      if (text.charAt(i) == '}') { i += 1; return m.result() }
-      var more = true
-      while (more) {
-        val c = parseStr(); expect(':'); m += c -> parsePair()
-        if (text.charAt(i) == ',') i += 1 else more = false
-      }
-      expect('}')
-      m.result()
-    }
-    val fi = text.indexOf("\"files\":")
-    if (fi < 0) fail("missing field 'files'")
-    i = fi + 8
-    expect('{')
-    val out = Map.newBuilder[String, Map[String, (String, String)]]
-    if (i < text.length && text.charAt(i) == '}') return out.result()
-    var more = true
-    while (more) {
-      val f = parseStr(); expect(':'); out += f -> parseCols()
-      if (text.charAt(i) == ',') i += 1 else more = false
-    }
-    expect('}')
-    out.result()
   }
 
   /** The stats sidecar for `version`, or empty if never written /
@@ -421,11 +283,8 @@ object FileStats {
   def readAll(spark: SparkSession, root: String, version: Int): (Stats, Extras) = {
     val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = statsPath(root, version)
-    if (!f.exists(p)) return (Map.empty, Map.empty)
-    val in = f.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    parseAll(text)
+    if (!f.exists(p)) (Map.empty, Map.empty)
+    else Json.readFile(f, p)(parseAll)
   }
 
   /** Write the sidecar for a just-committed snapshot: previous

@@ -6,6 +6,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import graft.util.Json
 
 /** Managed mutable tables: the engine's DDL/DML surface (CREATE TABLE /
   * INSERT / UPDATE / DELETE / MERGE), re-expressed for a columnar lake
@@ -85,8 +86,8 @@ object ManagedTable {
   private def manifestPath(root: String, v: Int) =
     new Path(logDir(root), f"v$v%08d.json")
 
-  // -- manifest (de)serialization: flat JSON via the repo's util.Json --
-  private def render(s: Snapshot): String = {
+  // -- manifest (de)serialization: util.Json --
+  private[graft] def render(s: Snapshot): String = {
     val files = s.files.map(graft.util.Json.escape).mkString("[", ",", "]")
     val txn = s.txn.map(m => s""","txn":${graft.util.Json.escape(m)}""").getOrElse("")
     // physical map rendered as a flat string array [log1,phys1,...] —
@@ -100,85 +101,54 @@ object ManagedTable {
       s""""schema":${graft.util.Json.escape(s.schemaDdl)},"files":$files$phys$txn}"""
   }
 
-  private def parse(text: String, v: Int): Snapshot = {
-    // The manifest grammar is exactly what `render` emits (flat object,
-    // string array) — parse with the same minimal discipline rather
-    // than pulling a JSON library into the engine. Loud on mismatch.
-    def field(name: String): Int = {
-      val i = text.indexOf(s""""$name":""")
-      require(i >= 0, s"manifest v$v: missing field '$name'")
-      i + name.length + 3
-    }
-    def parseStr(from: Int): (String, Int) = {
-      require(text.charAt(from) == '"', s"manifest v$v: expected string")
-      val sb = new StringBuilder
-      var i = from + 1
-      while (text.charAt(i) != '"') {
-        text.charAt(i) match {
-          case '\\' =>
-            text.charAt(i + 1) match {
-              case 'n' => sb.append('\n'); case 't' => sb.append('\t')
-              case 'r' => sb.append('\r'); case 'b' => sb.append('\b')
-              case 'f' => sb.append('\f')
-              case 'u' =>
-                sb.append(Integer.parseInt(text.substring(i + 2, i + 6), 16).toChar)
-                i += 4
-              case c => sb.append(c)
-            }
-            i += 2
-          case c => sb.append(c); i += 1
-        }
-      }
-      (sb.toString, i + 1)
-    }
-    def parseStrArray(from: Int): Seq[String] = {
-      var i = from
-      require(text.charAt(i) == '[', s"manifest v$v: expected array")
-      i += 1
-      val out = Seq.newBuilder[String]
-      while (text.charAt(i) != ']') {
-        if (text.charAt(i) == ',') i += 1
-        else { val (s, next) = parseStr(i); out += s; i = next }
-      }
-      out.result()
-    }
-    val op = parseStr(field("op"))._1
-    val schemaDdl = parseStr(field("schema"))._1
-    val files = parseStrArray(field("files"))
-    // optional: staged-transaction marker (absent on ordinary commits
-    // and on every pre-txn manifest — the format stays readable both ways)
-    val txn =
-      if (text.indexOf("\"txn\":") >= 0) Some(parseStr(field("txn"))._1) else None
-    // optional: logical->physical column map as a flat [l1,p1,l2,p2,...]
-    // array (absent = identity, which every pre-evolution manifest is)
-    val physical =
-      if (text.indexOf("\"physical\":") < 0) Map.empty[String, String]
-      else parseStrArray(field("physical")).grouped(2)
-        .map { case Seq(l, p) => l -> p }.toMap
-    Snapshot(v, op, schemaDdl, files, txn, physical)
+  private[graft] def parse(text: String, v: Int): Snapshot = {
+    val doc = Json.obj(Json.parse(text), "manifest")
+    def strField(k: String) = Json.str(Json.field(doc, k), k)
+    Snapshot(v, strField("op"), strField("schema"),
+      Json.strs(Json.field(doc, "files"), "files"),
+      // optional: staged-transaction marker (absent on ordinary commits
+      // and on every pre-txn manifest)
+      doc.get("txn").map(Json.str(_, "txn")),
+      // optional: logical->physical column map as a flat
+      // [l1,p1,l2,p2,...] array (absent = identity)
+      doc.get("physical").map(Json.strs(_, "physical")).getOrElse(Vector.empty)
+        .grouped(2).map {
+          case Seq(l, p) => l -> p
+          case odd => throw new IllegalArgumentException(
+            s"manifest v$v: unpaired physical entry $odd")
+        }.toMap)
   }
 
-  /** All committed versions, ascending. Empty if not a managed table.
-    * A manifest staged by a transaction ([[Txn]]) is visible only once
-    * its marker is published — or to the staging transaction itself
-    * (read-your-own-writes). The marker probe is one `exists` per
-    * DISTINCT marker among still-tagged manifests, memoized per call. */
-  def history(spark: SparkSession, root: String): Seq[Snapshot] = {
-    val f = fs(spark, root)
+  private def readManifest(f: FileSystem, root: String, v: Int): Snapshot =
+    Json.readFile(f, manifestPath(root, v))(parse(_, v))
+
+  private val ManifestName = """v(\d{8})\.json""".r
+
+  /** Every manifest version on disk, ascending — visible or not. */
+  private def versions(f: FileSystem, root: String): Seq[Int] = {
     val dir = logDir(root)
-    if (!f.exists(dir)) return Nil
+    if (!f.exists(dir)) Nil
+    else f.listStatus(dir).toSeq.map(_.getPath.getName)
+      .collect { case ManifestName(v) => v.toInt }.sorted
+  }
+
+  /** Reader visibility: a manifest staged by a transaction ([[Txn]])
+    * is visible only once its marker is published — or to the staging
+    * transaction itself (read-your-own-writes). The marker probe is
+    * one `exists` per DISTINCT marker, memoized per predicate. */
+  private def visibility(spark: SparkSession): Snapshot => Boolean = {
     val own = Txn.current.map(_.markerPath)
     val committed = scala.collection.mutable.Map.empty[String, Boolean]
-    f.listStatus(dir).map(_.getPath).filter(_.getName.matches("v\\d{8}\\.json"))
-      .sortBy(_.getName).toSeq.map { p =>
-        val v = p.getName.stripPrefix("v").stripSuffix(".json").toInt
-        val in = f.open(p)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        parse(text, v)
-      }
-      .filter(s => s.txn.isEmpty || own.contains(s.txn.get) ||
-        committed.getOrElseUpdate(s.txn.get, Txn.isCommitted(spark, s.txn.get)))
+    s => s.txn.forall(m =>
+      own.contains(m) || committed.getOrElseUpdate(m, Txn.isCommitted(spark, m)))
+  }
+
+  /** All committed (visible) versions, ascending. Empty if not a
+    * managed table. Opens every manifest; [[latest]] and time-travel
+    * reads open only the one they need. */
+  def history(spark: SparkSession, root: String): Seq[Snapshot] = {
+    val f = fs(spark, root)
+    versions(f, root).map(readManifest(f, root, _)).filter(visibility(spark))
   }
 
   /** (version, marker path) of every still-tagged manifest at `root` —
@@ -186,22 +156,26 @@ object ManagedTable {
   private[sources] def pendingManifests(spark: SparkSession,
                                         root: String): Seq[(Int, String)] = {
     val f = fs(spark, root)
-    val dir = logDir(root)
-    if (!f.exists(dir)) return Nil
-    f.listStatus(dir).map(_.getPath).filter(_.getName.matches("v\\d{8}\\.json"))
-      .sortBy(_.getName).toSeq.flatMap { p =>
-        val v = p.getName.stripPrefix("v").stripSuffix(".json").toInt
-        val in = f.open(p)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        parse(text, v).txn.map(v -> _)
-      }
+    versions(f, root).flatMap(v => readManifest(f, root, v).txn.map(v -> _))
   }
 
-  private def latest(spark: SparkSession, root: String): Snapshot = {
-    val h = history(spark, root)
-    require(h.nonEmpty, s"$root is not a managed table (no _graft_log)")
-    h.last
+  /** Version `v`, if its manifest is on disk and visible — opens only
+    * that manifest. */
+  def snapshotAt(spark: SparkSession, root: String, v: Int): Option[Snapshot] = {
+    val f = fs(spark, root)
+    if (v < 0 || !f.exists(manifestPath(root, v))) None
+    else Some(readManifest(f, root, v)).filter(visibility(spark))
+  }
+
+  /** The newest visible snapshot: walks the manifests newest-first and
+    * stops at the first visible one. Fails loudly if `root` is not a
+    * managed table. */
+  def latest(spark: SparkSession, root: String): Snapshot = {
+    val f = fs(spark, root)
+    val head = versions(f, root).reverseIterator.map(readManifest(f, root, _))
+      .find(visibility(spark))
+    require(head.isDefined, s"$root is not a managed table (no _graft_log)")
+    head.get
   }
 
   /** Commit `s` as the next version. Optimistic: EXCLUSIVE creation
@@ -229,11 +203,7 @@ object ManagedTable {
       // slot never frees on its own (Txn.rollbackStale is the remedy)
       val detail =
         try {
-          val f = fs(spark, root)
-          val in = f.open(p)
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-          parse(text, s.version).txn match {
+          readManifest(fs(spark, root), root, s.version).txn match {
             case Some(m) if !Txn.isCommitted(spark, m) =>
               s" (slot held by an unpublished transaction, marker $m — " +
                 "Txn.rollbackStale clears it if that writer crashed)"
@@ -472,9 +442,8 @@ object ManagedTable {
   private def resolve(spark: SparkSession, root: String, asOf: Option[Int]): Snapshot =
     asOf match {
       case Some(v) =>
-        history(spark, root).find(_.version == v)
-          .getOrElse(throw new IllegalArgumentException(
-            s"no version $v at $root (have ${history(spark, root).map(_.version).mkString(",")})"))
+        snapshotAt(spark, root, v).getOrElse(throw new IllegalArgumentException(
+          s"no version $v at $root (have ${history(spark, root).map(_.version).mkString(",")})"))
       case None => latest(spark, root)
     }
 
@@ -939,17 +908,14 @@ object ManagedTable {
     * (the probe is |files| existence checks — metadata-scale).
     */
   def restore(spark: SparkSession, root: String, toVersion: Int): Snapshot = {
-    val h = history(spark, root)
-    require(h.nonEmpty, s"$root is not a managed table")
-    val target = h.find(_.version == toVersion).getOrElse(
-      throw new IllegalArgumentException(
-        s"no version $toVersion at $root (have ${h.map(_.version).mkString(",")})"))
+    val head = latest(spark, root)
+    val target = resolve(spark, root, Some(toVersion))
     val f = fs(spark, root)
     val missing = target.files.filterNot(rel => f.exists(new Path(root, rel)))
     require(missing.isEmpty,
       s"cannot restore v$toVersion: ${missing.size} data file(s) vacuumed away " +
         s"(first: ${missing.headOption.getOrElse("")}) — the version is outside the retention window")
-    commit(spark, root, Snapshot(h.last.version + 1, s"restore(v$toVersion)",
+    commit(spark, root, Snapshot(head.version + 1, s"restore(v$toVersion)",
       target.schemaDdl, target.files, physical = target.physical))
   }
 

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import scala.collection.concurrent.TrieMap
+import graft.util.Json
 
 /** Optimizer-grade table statistics for [[ManagedTable]]s — the
   * ANALYZE side of the q112/q143/q147/q149 arc. Those queries REPORT
@@ -205,7 +206,7 @@ object TableStatistics {
 
   /** Collect + register + persist statistics for the CURRENT snapshot. */
   def analyze(spark: SparkSession, root: String): TableStats = {
-    val snap = ManagedTable.history(spark, root).last
+    val snap = ManagedTable.latest(spark, root)
     val df = ManagedTable.read(spark, root)
     val fsys = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = snap.files.map(f => fsys.getFileStatus(new Path(root, f)).getLen).sum
@@ -314,10 +315,7 @@ object TableStatistics {
     baseSnap match {
       case None => (analyze(spark, root), cur.files.size, "full(no_prior_stats)")
       case Some(bs) =>
-        val in = fsys.open(statsPath(root, bs.version))
-        val base = parse(
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close())
+        val base = Json.readFile(fsys, statsPath(root, bs.version))(parse)
         val baseFiles = bs.files.toSet
         val removed = baseFiles -- cur.files.toSet
         val added = cur.files.filterNot(baseFiles)
@@ -494,23 +492,19 @@ object TableStatistics {
   /** Reload persisted stats IF they describe the current snapshot
     * version (stale stats mislead the planner — skip them). */
   def load(spark: SparkSession, root: String): Option[TableStats] = {
-    val snap = ManagedTable.history(spark, root).last
+    val snap = ManagedTable.latest(spark, root)
     val p = statsPath(root, snap.version)
     val fsys = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fsys.exists(p)) None
     else {
-      val in = fsys.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      val ts = parse(text)
+      val ts = Json.readFile(fsys, p)(parse)
       if (ts.version == snap.version) { registry.put(norm(root), ts); Some(ts) }
       else None
     }
   }
 
-  // -- (de)serialization: one flat string->string map, the catalog
-  //    discipline (util.Json escaping; a bespoke value mini-format
-  //    keeps the parser ~20 lines instead of a JSON AST) --
+  // -- (de)serialization: one flat JSON string->string map; each
+  //    column's value is an `ndv=…;min=…` mini-format --
 
   private[graft] def render(ts: TableStats): String = {
     def esc(s: String) = graft.util.Json.escape(s)
@@ -535,49 +529,7 @@ object TableStatistics {
   }
 
   private[graft] def parse(text: String): TableStats = {
-    // flat {"k":"v",...} pairs inside "table_stats" — same minimal
-    // shape as the router catalog; keys/values were Json.escape'd but
-    // contain no exotic characters (digits, column names, ';|=')
-    val start = text.indexOf("\"table_stats\":{") match {
-      case -1 => throw new IllegalArgumentException(s"bad stats: $text")
-      case i => i + "\"table_stats\":{".length
-    }
-    var i = start
-    val m = Map.newBuilder[String, String]
-    def str(): String = {
-      require(text.charAt(i) == '"', s"expected string at $i"); i += 1
-      val sb = new StringBuilder
-      while (text.charAt(i) != '"') {
-        // exact inverse of Json.escape (the FileStats.parse discipline):
-        // a verbatim append would round-trip a control or non-ASCII
-        // character in a column name to a different key, silently
-        // detaching that column's stats on reload.
-        if (text.charAt(i) == '\\') {
-          text.charAt(i + 1) match {
-            case 'n' => sb.append('\n'); i += 2
-            case 'r' => sb.append('\r'); i += 2
-            case 't' => sb.append('\t'); i += 2
-            case 'u' =>
-              sb.append(Integer.parseInt(text.substring(i + 2, i + 6), 16).toChar)
-              i += 6
-            case c @ ('"' | '\\') => sb.append(c); i += 2
-            case c =>
-              throw new IllegalArgumentException(s"bad stats escape '\\$c' at $i")
-          }
-        } else { sb.append(text.charAt(i)); i += 1 }
-      }
-      i += 1; sb.toString
-    }
-    if (text.charAt(i) != '}') {
-      var more = true
-      while (more) {
-        val k = str()
-        require(text.charAt(i) == ':', s"expected ':' at $i"); i += 1
-        m += k -> str()
-        if (text.charAt(i) == ',') i += 1 else more = false
-      }
-    }
-    val kv = m.result()
+    val kv = Json.strMap(Json.field(Json.parseObj(text, "stats"), "table_stats"), "table_stats")
     val cols = kv.collect { case (k, v) if k.startsWith("col:") =>
       val fields = v.split(';').map { p =>
         val eq = p.indexOf('='); p.substring(0, eq) -> p.substring(eq + 1)

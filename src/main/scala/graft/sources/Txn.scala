@@ -41,8 +41,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Scale: staging adds ZERO data work — the same files are written
   * either way; the only additions are one marker create at publish and
-  * one `exists` probe per pending manifest per reader (cached per
-  * history() call, and only for manifests still tagged).
+  * one `exists` probe per pending manifest a reader opens (cached per
+  * snapshot lookup, and only for manifests still tagged).
   */
 object Txn {
 

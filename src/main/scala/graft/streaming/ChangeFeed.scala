@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.ManagedTable
+import graft.util.Json
 
 /** Table-follows-table incremental replication: the consumer side of
   * the CDC arc. `ManagedTable.changes` reads what a version transition
@@ -50,17 +51,12 @@ object ChangeFeed {
     val p = cursorPath(downstreamRoot)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      "\"applied_version\"\\s*:\\s*(\\d+)".r
-        .findFirstMatchIn(text).map(_.group(1).toInt)
-    }
+    else Some(Json.readFile(fs, p)(text => Json.long(
+      Json.field(Json.parseObj(text, "feed cursor"), "applied_version"), "applied_version").toInt))
   }
 
-  private def writeCursor(spark: SparkSession, downstreamRoot: String,
-                          upstreamRoot: String, v: Int): Unit = {
+  private[graft] def writeCursor(spark: SparkSession, downstreamRoot: String,
+                                 upstreamRoot: String, v: Int): Unit = {
     val p = cursorPath(downstreamRoot)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // write-then-rename: a reader (or a crash) never sees a torn cursor
@@ -79,7 +75,7 @@ object ChangeFeed {
     * starts from (full copy once, deltas forever after). */
   def init(spark: SparkSession, upstreamRoot: String,
            downstreamRoot: String): SyncResult = {
-    val snap = ManagedTable.history(spark, upstreamRoot).last
+    val snap = ManagedTable.latest(spark, upstreamRoot)
     ManagedTable.create(spark, downstreamRoot, snap.schema)
     // pinned to snap.version: a commit landing between history() and an
     // unpinned read() would copy rows newer than the cursor we record
@@ -104,7 +100,7 @@ object ChangeFeed {
     val from = cursor(spark, downstreamRoot).getOrElse(
       throw new IllegalStateException(
         s"no feed cursor at $downstreamRoot — bootstrap with ChangeFeed.init"))
-    val upSnap = ManagedTable.history(spark, upstreamRoot).last
+    val upSnap = ManagedTable.latest(spark, upstreamRoot)
     if (upSnap.version <= from) return SyncResult(from, from, 0L, 0L)
 
     // Evolve the downstream first so the upsert's schema check passes.
@@ -130,11 +126,11 @@ object ChangeFeed {
     //   - a mirrored column the FOLLOWER declared constraints on would
     //     throw mid-way, leaving it partially evolved — surfaced here,
     //     before any mutation, with the remedy.
-    ManagedTable.history(spark, upstreamRoot).find(_.version == from)
+    ManagedTable.snapshotAt(spark, upstreamRoot, from)
       .foreach { oldSnap =>
         val newByPhys = upSnap.schema.fieldNames
           .map(c => upSnap.physicalName(c) -> c).toMap
-        val downSchema0 = ManagedTable.history(spark, downstreamRoot).last.schema
+        val downSchema0 = ManagedTable.latest(spark, downstreamRoot).schema
         val renames = Seq.newBuilder[(String, String)]
         val drops = Seq.newBuilder[String]
         oldSnap.schema.fieldNames.foreach { oldName =>
@@ -203,7 +199,7 @@ object ChangeFeed {
         ordered.result().foreach { case (from0, to) =>
           ManagedTable.renameColumn(spark, downstreamRoot, from0, to): Unit }
       }
-    val downSchema = ManagedTable.history(spark, downstreamRoot).last.schema
+    val downSchema = ManagedTable.latest(spark, downstreamRoot).schema
     upSnap.schema.fields.filterNot(f => downSchema.fieldNames.contains(f.name))
       .foreach(f => ManagedTable.addColumn(spark, downstreamRoot, f.name, f.dataType): Unit)
     // mirror type WIDENINGS (int-family up, float->double): the
@@ -215,7 +211,7 @@ object ChangeFeed {
     // NEITHER side widens to the other is unreplayable, and that gets
     // a sync-specific loud failure (not alterColumnType's misleading
     // "narrowing" refusal).
-    val downTyped = ManagedTable.history(spark, downstreamRoot).last.schema
+    val downTyped = ManagedTable.latest(spark, downstreamRoot).schema
     upSnap.schema.fields.foreach { f =>
       downTyped.fields.find(_.name == f.name)
         .filter(_.dataType != f.dataType)
@@ -233,7 +229,7 @@ object ChangeFeed {
     }
     // the schema the apply must match: downstream's, post-mirroring
     // (identical to upstream's except for downstream-wider columns)
-    val applySchema = ManagedTable.history(spark, downstreamRoot).last.schema
+    val applySchema = ManagedTable.latest(spark, downstreamRoot).schema
 
     val delta = ManagedTable.changes(spark, upstreamRoot, from,
       Some(upSnap.version), keys).localCheckpoint() // read once, apply twice

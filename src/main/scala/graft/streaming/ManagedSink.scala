@@ -58,7 +58,7 @@ object ManagedSink {
     require(orderCols.nonEmpty, "need at least one ordering column for last-writer-wins")
     if (!df.isEmpty) {
       val winner = latestPerKey(df, keys, orderCols)
-      val schema = ManagedTable.history(df.sparkSession, root).last.schema
+      val schema = ManagedTable.latest(df.sparkSession, root).schema
       ManagedTable.upsert(df.sparkSession, root,
         winner.select(schema.fieldNames.map(col): _*), keys)
     }

@@ -75,7 +75,7 @@ object MvSink {
                  avgs: Seq[(String, Column)] = Nil): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    val schema = ManagedTable.history(spark, tableRoot).last.schema
+    val schema = ManagedTable.latest(spark, tableRoot).schema
     val winners = ManagedSink.latestPerKey(batch, keys, orderCols)
       .select(schema.fieldNames.map(col): _*)
     val cs = ManagedTable.upsertChanges(spark, tableRoot, winners, keys)

@@ -209,6 +209,8 @@ class BenchSpec extends AnyFunSuite {
     assert(!Json.isValid("""{"a":}"""))      // missing value
     assert(!Json.isValid("""{"a":"unterminated}"""))
     assert(!Json.isValid("""{'a':1}"""))     // single quotes
+    assert(Json.isValid("""{"big":12345678901234567890}""")) // beyond Long
+    assert(!Json.isValid("""{"a":"\q"}"""))  // unknown escape
   }
 
   test("every contract query also has an oracle entry (or is knowingly exempt)") {

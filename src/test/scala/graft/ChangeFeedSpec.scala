@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,7 +24,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   test("downstream follows q121's mutation sequence version by version") {
     val dir = sys.env.getOrElse("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
     val docs: DataFrame = Tables.load(spark, dir, "documents")
-    val base = Files.createTempDirectory("graft_feed").toString
+    val base = TestSpark.tempDir("graft_feed").toString
     val up = s"$base/up"
     val down = s"$base/down"
     val keys = Seq("doc_id")
@@ -91,7 +90,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   }
 
   test("sync without a bootstrap fails loudly") {
-    val base = Files.createTempDirectory("graft_feed2").toString
+    val base = TestSpark.tempDir("graft_feed2").toString
     val up = s"$base/up"
     ManagedTable.create(spark, up,
       org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, v STRING"))
@@ -102,7 +101,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   }
 
   test("deleteKeys rewrites only files holding doomed keys; misses are no-ops") {
-    val base = Files.createTempDirectory("graft_delkeys").toString
+    val base = TestSpark.tempDir("graft_delkeys").toString
     val root = s"$base/t"
     import spark.implicits._
     val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, v STRING")
@@ -132,7 +131,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   }
 
   test("follow: a streaming follower converges to every upstream commit") {
-    val base = Files.createTempDirectory("graft_follow").toString
+    val base = TestSpark.tempDir("graft_follow").toString
     val (up, down) = (s"$base/up", s"$base/down")
     import spark.implicits._
     val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, v STRING")
@@ -173,7 +172,7 @@ class ChangeFeedSpec extends AnyFunSuite {
     // A pure rename's row diff is EMPTY, so skipping the mirror would
     // diverge the follower permanently with no signal; the sync must
     // throw instead (remedy: re-bootstrap).
-    val base = Files.createTempDirectory("graft_feed_swap").toString
+    val base = TestSpark.tempDir("graft_feed_swap").toString
     val (up, down) = (s"$base/up", s"$base/down")
     import spark.implicits._
     ManagedTable.create(spark, up,
@@ -196,7 +195,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   test("sync replays a rename CHAIN in dependency order; a swap still fails loudly") {
     // upstream: b->c then a->b — replayable by applying b->c first
     // (rejecting it would force an unnecessary full re-bootstrap)
-    val base = Files.createTempDirectory("graft_feed_chain").toString
+    val base = TestSpark.tempDir("graft_feed_chain").toString
     val (up, down) = (s"$base/up", s"$base/down")
     import spark.implicits._
     ManagedTable.create(spark, up,
@@ -215,7 +214,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   }
 
   test("sync surfaces follower-declared constraints on mirrored columns before mutating") {
-    val base = Files.createTempDirectory("graft_feed_cons").toString
+    val base = TestSpark.tempDir("graft_feed_cons").toString
     val (up, down) = (s"$base/up", s"$base/down")
     import spark.implicits._
     val schema =

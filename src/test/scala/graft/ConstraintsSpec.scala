@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.server.SqlRouter
@@ -14,7 +13,7 @@ class ConstraintsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private lazy val router = new SqlRouter(spark)
 
-  private def fresh() = Files.createTempDirectory("graft_cons").toString
+  private def fresh() = TestSpark.tempDir("graft_cons").toString
 
   test("sidecar round-trips, validates at CREATE, and rejects unknown columns") {
     val spec = Constraints.Spec(Seq("id"), Seq("name"),

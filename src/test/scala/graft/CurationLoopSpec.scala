@@ -36,7 +36,7 @@ class CurationLoopSpec extends AnyFunSuite {
   private def sql(stmt: String): HttpResponse[String] = post("/query", stmt)
 
   test("ingest -> quarantine -> MV rewrite -> follower: the loop holds together") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_loop").toString
+    val dir = TestSpark.tempDir("graft_loop").toString
     val t = "loop_docs"
 
     // 1. a constrained corpus table, violations diverted not refused

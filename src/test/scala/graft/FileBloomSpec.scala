@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -17,7 +16,7 @@ import graft.sources.FileBloom
 class FileBloomSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def fresh() = Files.createTempDirectory("graft_bl").toString
+  private def fresh() = TestSpark.tempDir("graft_bl").toString
 
   private def scannedFiles(df: DataFrame): Seq[Int] =
     df.queryExecution.optimizedPlan.collect {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -29,7 +28,7 @@ import graft.server.SqlRouter
 class LakeIndexSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def fresh() = Files.createTempDirectory("graft_lake").toString
+  private def fresh() = TestSpark.tempDir("graft_lake").toString
 
   private def planned(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.collect {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types._
@@ -27,7 +26,7 @@ class ManagedSinkSpec extends AnyFunSuite {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   private def freshTable(): String = {
-    val root = Files.createTempDirectory("graft_sink").toString + "/t"
+    val root = TestSpark.tempDir("graft_sink").toString + "/t"
     ManagedTable.create(spark, root, schema)
     root
   }
@@ -48,7 +47,7 @@ class ManagedSinkSpec extends AnyFunSuite {
     val root = freshTable()
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Chg]
-    val ckpt = Files.createTempDirectory("graft_sink_ckpt").toString
+    val ckpt = TestSpark.tempDir("graft_sink_ckpt").toString
     val q = ManagedSink.upsertStream(mem.toDF(), root,
       keys = Seq("id"), orderCols = Seq("ts"), checkpointDir = ckpt,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
@@ -69,7 +68,7 @@ class ManagedSinkSpec extends AnyFunSuite {
 
   test("a constrained target enforces at the stream's choke point: violators quarantine") {
     import graft.sources.Constraints
-    val root = Files.createTempDirectory("graft_sink_c").toString + "/t"
+    val root = TestSpark.tempDir("graft_sink_c").toString + "/t"
     ManagedTable.create(spark, root, schema)
     // declare after create, the way a table gains rules post-hoc:
     // PK = the sink's merge keys, plus a domain rule with quarantine
@@ -79,7 +78,7 @@ class ManagedSinkSpec extends AnyFunSuite {
       onViolation = "quarantine"), schema)
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Chg]
-    val ckpt = Files.createTempDirectory("graft_sink_c_ckpt").toString
+    val ckpt = TestSpark.tempDir("graft_sink_c_ckpt").toString
     val q = ManagedSink.upsertStream(mem.toDF(), root,
       keys = Seq("id"), orderCols = Seq("ts"), checkpointDir = ckpt,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))

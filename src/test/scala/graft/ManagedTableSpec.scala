@@ -20,7 +20,7 @@ class ManagedTableSpec extends AnyFunSuite {
     StructField("score", DoubleType)))
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_mt").toString + "/t"
+    TestSpark.tempDir("graft_mt").toString + "/t"
 
   private def rows(r: (Long, String, Double)*) =
     r.toSeq.toDF("id", "grp", "score")
@@ -298,7 +298,7 @@ class ManagedTableSpec extends AnyFunSuite {
 
   test("packing: a view stays one file across ingest batches") {
     val router = new graft.server.SqlRouter(spark)
-    val dir = Files.createTempDirectory("graft_pack_view").toString
+    val dir = TestSpark.tempDir("graft_pack_view").toString
     router.execute(s"CREATE MANAGED TABLE pv LOCATION '$dir/t' AS " +
       "SELECT id, concat('s', CAST(id % 3 AS STRING)) AS g, id AS v FROM range(300)")
     router.execute(
@@ -375,6 +375,22 @@ class ManagedTableSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       ManagedTable.read(spark, root, asOf = Some(99))
     }
+  }
+
+  test("the head and VERSION AS OF open only their own manifest") {
+    val root = freshRoot()
+    ManagedTable.create(spark, root, schema)
+    (1L to 5L).foreach(i => ManagedTable.insert(spark, root, rows((i, "a", i.toDouble))))
+    // an unreadable oldest manifest: only a reader that opens it fails
+    Files.writeString(java.nio.file.Paths.get(root, "_graft_log", "v00000000.json"), "{not json")
+    assert(ManagedTable.latest(spark, root).version == 5)
+    assert(ManagedTable.read(spark, root).count() == 5)
+    assert(ManagedTable.read(spark, root, asOf = Some(3)).count() == 3)
+    ManagedTable.insert(spark, root, rows((6L, "b", 6.0)))
+    assert(ManagedTable.latest(spark, root).version == 6)
+    // a reader that does open it is loud and names the file
+    val e = intercept[IllegalArgumentException](ManagedTable.history(spark, root))
+    assert(e.getMessage.contains("v00000000.json"), e.getMessage)
   }
 
   test("randomized DML sequences agree with the relational model, at every version") {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -19,7 +18,7 @@ import graft.server.SqlRouter
 class MvJoinSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def fresh() = Files.createTempDirectory("graft_mvj").toString
+  private def fresh() = TestSpark.tempDir("graft_mvj").toString
 
   private def scanRoots(df: DataFrame): Seq[String] =
     df.queryExecution.analyzed.collect {
@@ -139,7 +138,7 @@ class MvJoinSpec extends AnyFunSuite {
     val id = s"jr${System.nanoTime()}"
     val (f, d) = (s"f_$id", s"d_$id")
     val base = fresh()
-    val catRoot = Files.createTempDirectory("graft_mvj_cat").toString
+    val catRoot = TestSpark.tempDir("graft_mvj_cat").toString
     val r = new SqlRouter(spark, Some(catRoot))
     r.execute(s"CREATE MANAGED TABLE $f (k BIGINT, sk BIGINT, " +
       s"amount BIGINT, price DOUBLE) LOCATION '$base/fact_$id'")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -18,7 +17,7 @@ import graft.server.SqlRouter
 class MvRewriteSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def fresh() = Files.createTempDirectory("graft_mvr").toString
+  private def fresh() = TestSpark.tempDir("graft_mvr").toString
 
   /** Managed roots scanned by the plan — which table actually serves
     * the query. */

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -29,7 +28,7 @@ class MvSinkSpec extends AnyFunSuite {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   private def fresh(rows: Seq[MvChg]): (String, String) = {
-    val dir = Files.createTempDirectory("graft_mv").toString
+    val dir = TestSpark.tempDir("graft_mv").toString
     val tableRoot = dir + "/t"
     val viewRoot = dir + "/v"
     ManagedTable.create(spark, tableRoot, schema)
@@ -102,7 +101,7 @@ class MvSinkSpec extends AnyFunSuite {
     val (t, v) = fresh(Seq(MvChg(1L, ts("2024-01-01 00:00:01"), "a", 10L)))
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[MvChg]
-    val ckpt = Files.createTempDirectory("graft_mv_ckpt").toString
+    val ckpt = TestSpark.tempDir("graft_mv_ckpt").toString
     val q = MvSink.upsertStreamWithView(mem.toDF(), t, v,
       keys = Seq("id"), orderCols = Seq("ts"), viewKeys = Seq("g"),
       countCol = "n", sums = sums, checkpointDir = ckpt,
@@ -122,7 +121,7 @@ class MvSinkSpec extends AnyFunSuite {
 
   test("MIN/MAX view: a CDC replacement that removes the extremum repairs") {
     val mins = Seq("lo" -> col("v")); val maxs = Seq("hi" -> col("v"))
-    val dir = Files.createTempDirectory("graft_mv_ext").toString
+    val dir = TestSpark.tempDir("graft_mv_ext").toString
     val (t, v) = (dir + "/t", dir + "/v")
     ManagedTable.create(spark, t, schema)
     ManagedTable.insert(spark, t, Seq(

@@ -407,7 +407,7 @@ class PlanSpec extends AnyFunSuite {
     // actually reads fewer files than the full scan.
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val dir = java.nio.file.Files.createTempDirectory("events-partitioned").toString
+    val dir = TestSpark.tempDir("events-partitioned").toString
     val ev = graft.sources.Tables.load(spark, TestSpark.sf0001, "events")
       .withColumn("day", to_date(col("ts")))
     graft.sources.Tables.writeAs(ev, dir, partitionBy = Seq("day"))

@@ -54,7 +54,7 @@ class QueryServerSpec extends AnyFunSuite {
   }
 
   test("DML statements run over HTTP: create, insert, update, select") {
-    val root = java.nio.file.Files.createTempDirectory("graft_httpdml").toString + "/t"
+    val root = TestSpark.tempDir("graft_httpdml").toString + "/t"
     val c = post("/query",
       s"CREATE MANAGED TABLE http_t (id BIGINT, v DOUBLE) LOCATION '$root'")
     assert(c.statusCode() == 200 && c.body().contains("\"create\""), c.body())
@@ -83,7 +83,7 @@ class QueryServerSpec extends AnyFunSuite {
   }
 
   test("managed table detail carries location, version and history") {
-    val root = java.nio.file.Files.createTempDirectory("graft_httpmeta").toString + "/m"
+    val root = TestSpark.tempDir("graft_httpmeta").toString + "/m"
     assert(post("/query",
       s"CREATE MANAGED TABLE http_meta (id BIGINT) LOCATION '$root'").statusCode() == 200)
     assert(post("/query", "INSERT INTO http_meta VALUES (1)").statusCode() == 200)
@@ -97,8 +97,8 @@ class QueryServerSpec extends AnyFunSuite {
   }
 
   test("managed tables survive a server restart via the durable catalog") {
-    val catRoot = java.nio.file.Files.createTempDirectory("graft_httpcat").toString
-    val root = java.nio.file.Files.createTempDirectory("graft_httpdur").toString + "/t"
+    val catRoot = TestSpark.tempDir("graft_httpcat").toString
+    val root = TestSpark.tempDir("graft_httpdur").toString + "/t"
     def send(port: Int, sql: String): HttpResponse[String] =
       client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/query"))
         .POST(HttpRequest.BodyPublishers.ofString(sql)).build(),
@@ -127,7 +127,7 @@ class QueryServerSpec extends AnyFunSuite {
   }
 
   test("streaming ingest: batches merge, views stay equal to recompute, replay is a no-op") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_httping").toString
+    val dir = TestSpark.tempDir("graft_httping").toString
     assert(post("/query",
       s"CREATE MANAGED TABLE ing (id BIGINT, ts TIMESTAMP, g STRING, v BIGINT) LOCATION '$dir/t'")
       .statusCode() == 200)
@@ -215,7 +215,7 @@ class AuthServerSpec extends AnyFunSuite {
   test("reader can SELECT but not mutate; writer can do both") {
     val read = post("/query", "SELECT count(*) AS n FROM region", Some("read-secret"))
     assert(read.statusCode() == 200 && read.body().contains("[5]"), read.body())
-    val root = java.nio.file.Files.createTempDirectory("graft_authdml").toString + "/t"
+    val root = TestSpark.tempDir("graft_authdml").toString + "/t"
     val denied = post("/query",
       s"CREATE MANAGED TABLE auth_t (id BIGINT) LOCATION '$root'", Some("read-secret"))
     assert(denied.statusCode() == 403, denied.body())
@@ -240,7 +240,7 @@ class AuthServerSpec extends AnyFunSuite {
   }
 
   test("round-8 statements over the socket: SYNC is writer-gated, SHOW CONSTRAINTS is a read") {
-    val base2 = java.nio.file.Files.createTempDirectory("graft_authcdc").toString
+    val base2 = TestSpark.tempDir("graft_authcdc").toString
     val (up, down) = (s"$base2/up", s"$base2/down")
     assert(post("/query",
       s"""CREATE MANAGED TABLE auth_up (id BIGINT, v STRING,
@@ -265,7 +265,7 @@ class AuthServerSpec extends AnyFunSuite {
   }
 
   test("store persists hashed at rest and loads back") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_auth").toString + "/tokens"
+    val dir = TestSpark.tempDir("graft_auth").toString + "/tokens"
     AuthStore.save(spark, dir, Map("s3cret" -> Principal("svc", AuthStore.Writer)))
     // no plaintext token anywhere in the written files
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))

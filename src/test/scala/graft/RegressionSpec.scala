@@ -24,7 +24,7 @@ class RegressionSpec extends AnyFunSuite {
   }
 
   test("q48 fingerprint survives docs with fewer than 4 shingles (ANSI element_at)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_shortdocs").toString
+    val tmp = TestSpark.tempDir("graft_shortdocs").toString
     Seq((1L, "only three tokens here"),   // 2 shingles
         (2L, "a b c"),                    // 1 shingle
         (3L, "plenty of tokens to make at least four shingles easily"))
@@ -43,7 +43,7 @@ class RegressionSpec extends AnyFunSuite {
 
   test("Graft.sql is the full engine surface: DML, MV rewrite, EXPLAIN") {
     val g = new Graft(spark, TestSpark.sf0001, stopOnClose = false)
-    val base = java.nio.file.Files.createTempDirectory("graft_facade").toString
+    val base = TestSpark.tempDir("graft_facade").toString
     val t = s"f${System.nanoTime()}"
     g.sql(s"CREATE MANAGED TABLE $t (k BIGINT, x BIGINT) LOCATION '$base/$t'")
     g.sql(s"INSERT INTO $t VALUES (1, 10), (1, 20), (2, 5)")

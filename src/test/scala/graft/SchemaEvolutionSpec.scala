@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -27,7 +26,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     StructField("score", DoubleType)))
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_evo").toString + "/t"
+    TestSpark.tempDir("graft_evo").toString + "/t"
 
   private def seed(root: String, n: Int = 100): Unit = {
     ManagedTable.create(spark, root, schema)
@@ -162,7 +161,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
   test("router: rename/drop statements, view re-pin, MV dependency refusal") {
     val r = new SqlRouter(spark)
     val t = s"evr${System.nanoTime()}"
-    val base = Files.createTempDirectory("graft_evo").toString
+    val base = TestSpark.tempDir("graft_evo").toString
     r.execute(s"CREATE MANAGED TABLE $t (k BIGINT, region STRING, amount BIGINT) " +
       s"LOCATION '$base/$t'")
     r.execute(s"INSERT INTO $t SELECT id % 3, concat('r', id % 2), id FROM range(30)")
@@ -201,7 +200,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     val r = new SqlRouter(spark)
     val up = s"evu${System.nanoTime()}"
     val dn = s"evd${System.nanoTime()}"
-    val base = Files.createTempDirectory("graft_evo").toString
+    val base = TestSpark.tempDir("graft_evo").toString
     r.execute(s"CREATE MANAGED TABLE $up (k BIGINT, v STRING, x DOUBLE) " +
       s"LOCATION '$base/$up'")
     r.execute(s"INSERT INTO $up SELECT id AS k, concat('v', id) AS v, " +
@@ -268,7 +267,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
   test("float->double widening keeps boundary pruning sound (refloated sidecar)") {
     val r = new SqlRouter(spark)
     val t = s"wf${System.nanoTime()}"
-    val base = Files.createTempDirectory("graft_evo").toString
+    val base = TestSpark.tempDir("graft_evo").toString
     r.execute(s"CREATE MANAGED TABLE $t (id BIGINT, x FLOAT) LOCATION '$base/$t'")
     // x = id * 0.1f: many values (0.1f, 0.2f, ...) whose shortest-float
     // strings differ from their exact double expansions
@@ -307,7 +306,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     val up = s"wu${System.nanoTime()}"
     val dn = s"wd${System.nanoTime()}"
     val mv = s"wm${System.nanoTime()}"
-    val base = Files.createTempDirectory("graft_evo").toString
+    val base = TestSpark.tempDir("graft_evo").toString
     r.execute(s"CREATE MANAGED TABLE $up (k BIGINT, n INT, u INT) LOCATION '$base/$up'")
     r.execute(s"INSERT INTO $up SELECT id AS k, CAST(id AS INT) AS n, " +
       s"CAST(id AS INT) AS u FROM range(20)")

@@ -17,7 +17,7 @@ class SourcesSpec extends AnyFunSuite {
     StructField("score", DoubleType)))
 
   test("csv ingestion with declared schema") {
-    val dir = Files.createTempDirectory("graft_csv").toFile
+    val dir = TestSpark.tempDir("graft_csv").toFile
     val f = new java.io.File(dir, "t.csv")
     Files.writeString(f.toPath, "id,name,score\n1,alpha,1.5\n2,beta,2.5\n")
     val df = Tables.loadAs(spark, f.getPath, "csv", schema)
@@ -27,7 +27,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("json-lines ingestion with declared schema") {
-    val dir = Files.createTempDirectory("graft_json").toFile
+    val dir = TestSpark.tempDir("graft_json").toFile
     val f = new java.io.File(dir, "t.json")
     Files.writeString(f.toPath, """{"id":1,"name":"alpha","score":1.5}""" + "\n" +
       """{"id":2,"name":"beta","score":2.5}""" + "\n")
@@ -37,7 +37,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("orc round-trip: writeAs orc, loadAs orc with declared schema") {
-    val dir = Files.createTempDirectory("graft_orc").toString + "/t"
+    val dir = TestSpark.tempDir("graft_orc").toString + "/t"
     val src = Tables.load(spark, TestSpark.sf0001, "nation")
     Tables.writeAs(src, dir, format = "orc")
     val back = Tables.loadAs(spark, dir, "orc", src.schema)
@@ -57,7 +57,7 @@ class SourcesSpec extends AnyFunSuite {
       .requiredBoolean("ok")
       .requiredLong("ts_us") // timestamp-micros payload
       .endRecord()
-    val dir = Files.createTempDirectory("graft_avro").toFile
+    val dir = TestSpark.tempDir("graft_avro").toFile
     def writeFile(name: String, rows: Seq[(Long, String, Double, Boolean, Long)]): Unit = {
       val w = new DataFileWriter[org.apache.avro.generic.GenericRecord](
         new GenericDatumWriter(avroSchema))
@@ -97,7 +97,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("compact bounds file count and keeps files key-disjoint and sorted") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_compact").toString + "/t"
+    val dir = TestSpark.tempDir("graft_compact").toString + "/t"
     // fragment: 50 tiny input partitions
     val orders = Tables.load(spark, TestSpark.sf0001, "orders").repartition(50)
     Tables.compact(orders, dir, numFiles = 4, clusterCols = Seq("o_orderkey"))
@@ -124,7 +124,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("compact refuses in-place overwrite of its own input") {
-    val dir = Files.createTempDirectory("graft_inplace").toString + "/t"
+    val dir = TestSpark.tempDir("graft_inplace").toString + "/t"
     val src = Tables.load(spark, TestSpark.sf0001, "region")
     Tables.writeAs(src, dir)
     val e = intercept[IllegalArgumentException] {
@@ -151,7 +151,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("partitioned write prunes directories on read") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = TestSpark.tempDir("graft_part").toString
     val docs = Tables.load(spark, TestSpark.sf0001, "documents")
     Tables.writeAs(docs, dir, partitionBy = Seq("lang"))
     val back = spark.read.parquet(dir).filter(org.apache.spark.sql.functions.col("lang") === "en")
@@ -174,7 +174,7 @@ class SourcesSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(1), r.getLong(2)))
     def avgSpan(rs: Array[(Long, Long)]): Double =
       rs.map { case (lo, hi) => (hi - lo).toDouble }.sum / rs.length
-    val zdir = Files.createTempDirectory("graft_z").toString + "/t"
+    val zdir = TestSpark.tempDir("graft_z").toString + "/t"
     Tables.zorder(df, zdir, numFiles = 16, cols = Seq("x", "y"))
     val zx = avgSpan(fileRanges(zdir, "x"))
     val zy = avgSpan(fileRanges(zdir, "y"))
@@ -182,7 +182,7 @@ class SourcesSpec extends AnyFunSuite {
     // under half of EACH dimension's global range (uniform data)
     assert(zx < 50000 && zy < 50000, s"z-order spans x=$zx y=$zy")
     // control: the 1-D clustered rewrite narrows x but leaves y global
-    val cdir = Files.createTempDirectory("graft_z1").toString + "/t"
+    val cdir = TestSpark.tempDir("graft_z1").toString + "/t"
     Tables.compact(df, cdir, numFiles = 16, clusterCols = Seq("x"))
     val cx = avgSpan(fileRanges(cdir, "x"))
     val cy = avgSpan(fileRanges(cdir, "y"))
@@ -198,7 +198,7 @@ class SourcesSpec extends AnyFunSuite {
   test("zorder rejects bad shapes loudly") {
     import org.apache.spark.sql.functions._
     val df = spark.range(10L).select(col("id").as("x"), col("id").as("y"))
-    val dir = Files.createTempDirectory("graft_zbad").toString + "/t"
+    val dir = TestSpark.tempDir("graft_zbad").toString + "/t"
     intercept[IllegalArgumentException] { Tables.zorder(df, dir, 2, Seq("x")) }
     intercept[IllegalArgumentException] { Tables.zorder(df, dir, 2, Seq("x", "y"), bits = 40) }
     intercept[IllegalArgumentException] {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.server.SqlRouter
 import graft.sources.ManagedTable
@@ -15,7 +14,7 @@ class SqlRouterSpec extends AnyFunSuite {
   private lazy val router = new SqlRouter(spark)
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_sqlr").toString + "/t"
+    TestSpark.tempDir("graft_sqlr").toString + "/t"
 
   test("create + insert VALUES + select round-trip through SQL text") {
     val root = freshRoot()
@@ -204,7 +203,7 @@ class SqlRouterSpec extends AnyFunSuite {
   }
 
   test("durable catalog: a new router over the same root reattaches every table") {
-    val catRoot = Files.createTempDirectory("graft_cat").toString
+    val catRoot = TestSpark.tempDir("graft_cat").toString
     val t1 = freshRoot(); val t2 = freshRoot()
     val first = new SqlRouter(spark, Some(catRoot))
     first.execute(
@@ -221,7 +220,7 @@ class SqlRouterSpec extends AnyFunSuite {
     restarted.execute("DELETE FROM d1 WHERE id = 1")
     assert(restarted.execute("SELECT count(*) n FROM d1").collect().head.getLong(0) == 1)
     // hostile names/paths survive the JSON round-trip
-    val weird = Files.createTempDirectory("graft_cat_w").toString + "/we\"ird\\t"
+    val weird = TestSpark.tempDir("graft_cat_w").toString + "/we\"ird\\t"
     first.execute(
       s"CREATE MANAGED TABLE d3 (id BIGINT, name STRING, score DOUBLE) LOCATION '$weird'")
     assert(new SqlRouter(spark, Some(catRoot)).registered("d3") == weird)
@@ -230,7 +229,7 @@ class SqlRouterSpec extends AnyFunSuite {
   }
 
   test("DROP MANAGED TABLE detaches; PURGE deletes; both persist to the catalog") {
-    val catRoot = Files.createTempDirectory("graft_cat3").toString
+    val catRoot = TestSpark.tempDir("graft_cat3").toString
     val t1 = freshRoot(); val t2 = freshRoot()
     val r = new SqlRouter(spark, Some(catRoot))
     r.execute(s"CREATE MANAGED TABLE dr1 (id BIGINT, name STRING, score DOUBLE) LOCATION '$t1'")
@@ -290,7 +289,7 @@ class SqlRouterSpec extends AnyFunSuite {
   }
 
   test("durable catalog fails loudly on an entry whose table vanished") {
-    val catRoot = Files.createTempDirectory("graft_cat2").toString
+    val catRoot = TestSpark.tempDir("graft_cat2").toString
     val t = freshRoot()
     val first = new SqlRouter(spark, Some(catRoot))
     first.execute(
@@ -312,7 +311,7 @@ class SqlRouterSpec extends AnyFunSuite {
       .map(x => (x.getAs[String]("g"), x.getAs[Long]("n"), x.getAs[Long]("sv"))).toSet
 
   test("materialized view: bootstrap, auto-maintenance through every DML, refuse direct writes") {
-    val dir = Files.createTempDirectory("graft_mv_sql").toString
+    val dir = TestSpark.tempDir("graft_mv_sql").toString
     router.execute(
       s"CREATE MANAGED TABLE mb (id BIGINT, g STRING, v BIGINT) LOCATION '$dir/t'")
     router.execute("INSERT INTO mb VALUES (1, 'a', 10), (2, 'b', 5), (3, 'a', 2)")
@@ -344,8 +343,8 @@ class SqlRouterSpec extends AnyFunSuite {
   }
 
   test("materialized view: RESTORE maintains, restart resumes maintenance, SHOW lists, REFRESH resyncs") {
-    val dir = Files.createTempDirectory("graft_mv_sql2").toString
-    val catRoot = Files.createTempDirectory("graft_mv_cat").toString
+    val dir = TestSpark.tempDir("graft_mv_sql2").toString
+    val catRoot = TestSpark.tempDir("graft_mv_cat").toString
     val r1 = new SqlRouter(spark, Some(catRoot))
     r1.execute(
       s"CREATE MANAGED TABLE mr (id BIGINT, g STRING, v BIGINT) LOCATION '$dir/t'")
@@ -378,8 +377,8 @@ class SqlRouterSpec extends AnyFunSuite {
     def mv(r: SqlRouter) = rowsExt(r, "SELECT * FROM mve")
     def rc(r: SqlRouter) = rowsExt(r,
       "SELECT g, count(*) n, sum(v) sv, min(v) lo, max(v) hi FROM me GROUP BY g")
-    val dir = Files.createTempDirectory("graft_mv_ext").toString
-    val catRoot = Files.createTempDirectory("graft_mv_ext_cat").toString
+    val dir = TestSpark.tempDir("graft_mv_ext").toString
+    val catRoot = TestSpark.tempDir("graft_mv_ext_cat").toString
     val r1 = new SqlRouter(spark, Some(catRoot))
     r1.execute(
       s"CREATE MANAGED TABLE me (id BIGINT, g STRING, v BIGINT) LOCATION '$dir/t'")
@@ -414,7 +413,7 @@ class SqlRouterSpec extends AnyFunSuite {
     def mv(r: SqlRouter) = rows(r, "SELECT g, n, mv FROM mva")
     def rc(r: SqlRouter) = rows(r,
       "SELECT g, count(*) n, avg(v) mv FROM ma GROUP BY g")
-    val dir = Files.createTempDirectory("graft_mv_avg").toString
+    val dir = TestSpark.tempDir("graft_mv_avg").toString
     val r1 = new SqlRouter(spark)
     r1.execute(
       s"CREATE MANAGED TABLE ma (id BIGINT, g STRING, v BIGINT) LOCATION '$dir/t'")
@@ -460,7 +459,7 @@ class SqlRouterSpec extends AnyFunSuite {
     // filter and joins the dimension, so each must move every view by
     // exactly one version.
     val rnd = new scala.util.Random(20260814L)
-    val dir = Files.createTempDirectory("graft_mv_fuzz").toString
+    val dir = TestSpark.tempDir("graft_mv_fuzz").toString
     router.execute(
       s"CREATE MANAGED TABLE mf (id BIGINT, g STRING, v BIGINT) LOCATION '$dir/t'")
     router.execute(
@@ -551,7 +550,7 @@ class SqlRouterSpec extends AnyFunSuite {
   test("a 200-row ingest into a table with one COUNT/SUM view runs at most 16 Spark jobs") {
     // fixed per-job cost dominates a small keyed batch, so the job count
     // of one ingest (base upsert plus view maintenance) is pinned
-    val dir = Files.createTempDirectory("graft_ingest_jobs").toString
+    val dir = TestSpark.tempDir("graft_ingest_jobs").toString
     router.execute(s"CREATE MANAGED TABLE ij LOCATION '$dir/t' AS SELECT id, " +
       "concat('s', CAST(id % 3 AS STRING)) AS g, id * 7 AS v FROM range(2000)")
     router.execute(

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -16,7 +15,7 @@ import graft.sources.TableStatistics
 class StatsPlannerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def fresh() = Files.createTempDirectory("graft_sp").toString
+  private def fresh() = TestSpark.tempDir("graft_sp").toString
 
   /** Managed-table roots of the scan leaves, in optimized-plan order —
     * the join order the planner actually chose. */

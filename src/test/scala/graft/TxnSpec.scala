@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{ManagedTable, Txn}
@@ -14,7 +13,7 @@ class TxnSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def fresh(): (String, String) = {
-    val base = Files.createTempDirectory("graft_txn").toString
+    val base = TestSpark.tempDir("graft_txn").toString
     val (a, b) = (s"$base/a", s"$base/b")
     val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, v STRING")
     ManagedTable.create(spark, a, schema)
