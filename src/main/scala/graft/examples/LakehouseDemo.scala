@@ -61,7 +61,7 @@ object LakehouseDemo {
     mem.addData((5L, "annie", "infra", 55.0, 3L))
     q.processAllAvailable()
     q.stop()
-    router.execute(s"OPEN MANAGED TABLE users2 LOCATION '$root'") // refresh view
+    router.execute(s"OPEN MANAGED TABLE users2 LOCATION '$root'") // a second name
     show("after CDC", "SELECT * FROM users2 ORDER BY id")
 
     show("evolve", "ALTER TABLE users2 ADD COLUMN tier STRING")

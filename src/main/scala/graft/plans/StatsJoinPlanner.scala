@@ -483,7 +483,7 @@ class StatsJoinPlanner extends Rule[LogicalPlan] with PredicateHelper {
                       conditions: Seq[Expression]): Option[LogicalPlan] = {
     val ests = plans.map(estimate)
     if (ests.exists(_.isEmpty)) return None // only act on full knowledge
-    val useDp = plans.size <= DpMaxRelations && !StatsJoinPlanner.dpDisabled
+    val useDp = plans.size <= DpMaxRelations
     val built =
       if (useDp) buildDp(plans, ests.map(_.get), conditions)
       else buildGreedy(plans, ests.map(_.get), conditions)
@@ -526,11 +526,6 @@ class StatsJoinPlanner extends Rule[LogicalPlan] with PredicateHelper {
 }
 
 object StatsJoinPlanner {
-  /** Measurement-only switch: force the GREEDY builder even for small
-    * chains (the DP-vs-greedy battery A/B, graft.DpAudit). The shipped
-    * default is always DP for chains ≤ DpMaxRelations. */
-  @volatile private[graft] var dpDisabled: Boolean = false
-
   /** Add the rule to `spark.experimental.extraOptimizations`
     * (idempotent) — the public hook that works on an already-built
     * session. */

@@ -109,7 +109,7 @@ object Composite {
     "q121_dml_roundtrip" -> ((s, dir) => {
       import graft.sources.ManagedTable
       val docs = Tables.load(s, dir, "documents")
-      val root = java.nio.file.Files.createTempDirectory("graft_q121").toString + "/t"
+      val root = graft.util.Scratch.tempDir("graft_q121").toString + "/t"
       ManagedTable.create(s, root, docs.schema)
       ManagedTable.insert(s, root, docs)
       ManagedTable.delete(s, root, col("lang") === "de")
@@ -143,7 +143,7 @@ object Composite {
     "q133_time_travel" -> ((s, dir) => {
       import graft.sources.ManagedTable
       val docs = Tables.load(s, dir, "documents")
-      val root = java.nio.file.Files.createTempDirectory("graft_q133").toString + "/t"
+      val root = graft.util.Scratch.tempDir("graft_q133").toString + "/t"
       ManagedTable.create(s, root, docs.schema)
       ManagedTable.insert(s, root, docs)
       ManagedTable.delete(s, root, col("lang") === "de")

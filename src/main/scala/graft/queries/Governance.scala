@@ -102,7 +102,7 @@ object Governance {
       import graft.operators.Mvm
       import graft.sources.ManagedTable
       val docs = Tables.load(s, dir, "documents")
-      val root = java.nio.file.Files.createTempDirectory("graft_q141").toString + "/t"
+      val root = graft.util.Scratch.tempDir("graft_q141").toString + "/t"
       ManagedTable.create(s, root, docs.schema)
       ManagedTable.insert(s, root, docs)
       ManagedTable.delete(s, root, col("lang") === "de")

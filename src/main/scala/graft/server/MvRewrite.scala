@@ -1,12 +1,11 @@
 package graft.server
 
 import scala.annotation.tailrec
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project, SubqueryAlias, View}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -50,37 +49,37 @@ import graft.operators.Mvm
   * rewritten Aggregate keep resolving unchanged.
   *
   * Consistency contract: the router maintains every MV synchronously
-  * inside the same statement that mutates its base, and the base's
-  * SELECT-visible temp view is re-pinned at the same moments — so for
-  * every query the router serves, view and base agree by
-  * construction. (Out-of-band ManagedTable mutations make the base
-  * view itself stale in exactly the same way; the rewrite introduces
-  * no new staleness class.) Floating-point SUM/AVG may differ from a
-  * cold recompute in last-ulp addition order — inherent to
-  * incremental maintenance, same class as AQE re-partitioning.
-  *
-  * Disabled with `GRAFT_MV_REWRITE=0`.
+  * inside the same statement that mutates its base, and a query reads
+  * the view and its base at the snapshots its own statement resolved
+  * (`snapshot`, the router's per-statement binding) — so for every
+  * query the router serves, view and base agree by construction. The
+  * rewrite fires only when the query's scan IS that statement's latest
+  * snapshot of the base: a `VERSION AS OF` read or a shadowing CTE of
+  * the same name never matches. (An out-of-band ManagedTable mutation
+  * of the base, bypassing the router, leaves the view behind it;
+  * REFRESH resyncs it.) Floating-point SUM/AVG may differ from a cold
+  * recompute in last-ulp addition order — inherent to incremental
+  * maintenance, same class as AQE re-partitioning.
   */
 object MvRewrite {
 
-  /** Measurement-only kill switch (ScaleBench A/B cells; the
-    * GRAFT_MV_REWRITE env opt-out is fixed at JVM start, an in-process
-    * A/B needs a runtime toggle). */
+  /** Measurement-only kill switch (ScaleBench's in-process A/B cells). */
   @volatile private[graft] var disabled: Boolean = false
 
   /** Rewrite `df` if some Aggregate in it matches a view; returns the
     * new frame plus (viewName, "exact"|"rollup") for the router's log
-    * line. Never throws — an unmatched or unexpected shape returns
-    * None and the original plan runs. */
+    * line. `snapshot` is the statement's binding of a managed name to
+    * its latest snapshot frame. Never throws — an unmatched or
+    * unexpected shape returns None and the original plan runs. */
   def maybe(spark: SparkSession, df: DataFrame, views: Seq[SqlRouter.MvSpec],
-            rootOf: String => Option[String]): Option[(DataFrame, String, String)] =
+            snapshot: String => Option[DataFrame]): Option[(DataFrame, String, String)] =
     try {
       if (views.isEmpty) return None
       var hit: Option[(String, String)] = None
       val plan = df.queryExecution.analyzed
       val out = plan.transformUp {
         case agg: Aggregate if hit.isEmpty =>
-          rewriteAgg(spark, agg, views, rootOf) match {
+          rewriteAgg(agg, views, snapshot) match {
             case Some((p, name, mode)) => hit = Some((name, mode)); p
             case None => agg
           }
@@ -95,34 +94,30 @@ object MvRewrite {
     }
 
   /** The base-table name a plan subtree scans, if it is EXACTLY a
-    * (possibly aliased) table reference: peel SubqueryAlias/View down
-    * to a file relation, keeping the INNERMOST alias — `FROM t` yields
-    * t, `FROM other AS t` yields other. */
+    * (possibly aliased) table reference: peel SubqueryAlias down to a
+    * file relation, keeping the INNERMOST alias — `FROM t` yields t,
+    * `FROM other AS t` yields other. */
   @tailrec
   private def baseScan(p: LogicalPlan, name: Option[String])
       : Option[(String, LogicalRelation)] = p match {
     case SubqueryAlias(id, child) => baseScan(child, Some(id.name))
-    case v: View => baseScan(v.child, name)
     case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
       name.map((_, l))
     case _ => None
   }
 
-  /** All scan files live under `root` — the name matched; this pins
-    * the RELATION to the registered table (a temp view shadowed by
-    * something else must not rewrite). */
-  private def underRoot(spark: SparkSession, l: LogicalRelation,
-                        root: String): Boolean = {
-    val rp = new Path(root)
-    val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prefix = fs.makeQualified(rp).toString + "/"
-    l.relation.asInstanceOf[HadoopFsRelation]
-      .location.rootPaths.forall(_.toString.startsWith(prefix))
-  }
+  /** The scan IS the statement's latest snapshot of table `name` —
+    * the name matched; this pins the RELATION (a CTE of the same name,
+    * or the table at another version, must not rewrite). */
+  private def isSnapshot(l: LogicalRelation, name: String,
+                         snapshot: String => Option[DataFrame]): Boolean =
+    snapshot(name).exists(_.queryExecution.analyzed.exists {
+      case s: LogicalRelation => s.relation eq l.relation
+      case _ => false
+    })
 
-  private def rewriteAgg(spark: SparkSession, agg: Aggregate,
-                         views: Seq[SqlRouter.MvSpec],
-                         rootOf: String => Option[String])
+  private def rewriteAgg(agg: Aggregate, views: Seq[SqlRouter.MvSpec],
+                         snapshot: String => Option[DataFrame])
       : Option[(LogicalPlan, String, String)] = {
     // an optional WHERE between the Aggregate and the scan: kept and
     // re-applied over the view IF it only touches view keys (checked
@@ -133,7 +128,7 @@ object MvRewrite {
     }
     scanChild match {
       case j: Join =>
-        rewriteJoinAgg(spark, agg, where, j, views.filter(_.joins.nonEmpty), rootOf)
+        rewriteJoinAgg(agg, where, j, views.filter(_.joins.nonEmpty), snapshot)
       case _ =>
         val scan = baseScan(scanChild, None)
         if (scan.isEmpty) return None
@@ -147,8 +142,8 @@ object MvRewrite {
 
         views.iterator
           .filter(v => v.joins.isEmpty && v.over.equalsIgnoreCase(tbl) &&
-            rootOf(v.over).exists(underRoot(spark, rel, _)))
-          .flatMap(v => tryView(spark, agg, groupNames, where, v))
+            isSnapshot(rel, v.over, snapshot))
+          .flatMap(v => tryView(agg, groupNames, where, v, snapshot))
           .nextOption()
     }
   }
@@ -243,17 +238,17 @@ object MvRewrite {
     * across view churn). */
   private[server] def invalidatePredCache(view: String): Unit = {
     predCanonCache.keys.filter(_._1 == view).foreach(predCanonCache.remove)
-    joinInfoCache.keys.filter(_.startsWith(view + " "))
+    joinInfoCache.keys.filter(_.startsWith(view + "\u0000"))
       .foreach(joinInfoCache.remove)
   }
 
-  /** The view's declared predicate, resolved against the registered
-    * base table and canonicalized per conjunct (memoized). */
-  private def viewPredCanon(spark: SparkSession,
+  /** The view's declared predicate, resolved against the base table's
+    * snapshot and canonicalized per conjunct (memoized). */
+  private def viewPredCanon(base: DataFrame,
                             v: SqlRouter.MvSpec): Seq[Expression] =
     predCanonCache.getOrElseUpdate((v.name, v.over, v.where.get), {
-      val parsed = spark.sessionState.sqlParser.parseExpression(v.where.get)
-      val analyzed = spark.table(v.over).filter(ColumnBridge.column(parsed))
+      val parsed = base.sparkSession.sessionState.sqlParser.parseExpression(v.where.get)
+      val analyzed = base.filter(ColumnBridge.column(parsed))
         .queryExecution.analyzed
       val cond = analyzed.collectFirst { case Filter(c, _) => c }
         .getOrElse(throw new IllegalStateException(
@@ -270,9 +265,9 @@ object MvRewrite {
     else None
   }
 
-  private def tryView(spark: SparkSession, agg: Aggregate,
-                      groupNames: Set[String], where: Option[Expression],
-                      v: SqlRouter.MvSpec)
+  private def tryView(agg: Aggregate, groupNames: Set[String],
+                      where: Option[Expression], v: SqlRouter.MvSpec,
+                      snapshot: String => Option[DataFrame])
       : Option[(LogicalPlan, String, String)] = {
     val keySet = v.keys.map(_.toLowerCase).toSet
     val exact = groupNames == keySet
@@ -286,7 +281,7 @@ object MvRewrite {
     val leftover: Seq[Expression] = v.where match {
       case None => qconjs
       case Some(_) =>
-        val vc = viewPredCanon(spark, v)
+        val vc = viewPredCanon(snapshot(v.over).getOrElse(return None), v)
         var remaining = qconjs.map(c => (c, canon(c)))
         val allMatched = vc.forall { vcon =>
           remaining.indexWhere(_._2 == vcon) match {
@@ -299,7 +294,7 @@ object MvRewrite {
     }
     if (leftover.exists(!keyOnlyPredicate(_, keySet))) return None
 
-    val mvDf = leftover.foldLeft(spark.table(v.name))(overView)
+    val mvDf = leftover.foldLeft(snapshot(v.name).getOrElse(return None))(overView)
     val mvCols = mvDf.columns.map(_.toLowerCase).toSet
     def find(xs: Seq[(String, String)], colName: String): Option[String] =
       xs.collectFirst { case (n, e) if bare(e).contains(colName) => n }
@@ -425,23 +420,25 @@ object MvRewrite {
   private val joinInfoCache =
     scala.collection.concurrent.TrieMap.empty[String, Option[JoinViewInfo]]
 
-  private def joinViewInfo(spark: SparkSession,
-                           v: SqlRouter.MvSpec): Option[JoinViewInfo] = {
-    val fp = (Seq(v.name + " ", v.over) ++
+  private def joinViewInfo(v: SqlRouter.MvSpec,
+                           snapshot: String => Option[DataFrame]): Option[JoinViewInfo] = {
+    val fp = (Seq(v.name, v.over) ++
       v.joins.flatMap { case (t, c) => Seq(t, c) } ++ v.keys ++
       Seq(v.where.getOrElse(""), v.countCol) ++
       (v.sums ++ v.mins ++ v.maxs ++ v.avgs).flatMap { case (n, e) => Seq(n, e) })
-      .mkString(" ")
-    joinInfoCache.getOrElseUpdate(fp, buildJoinViewInfo(spark, v))
+      .mkString("\u0000")
+    joinInfoCache.getOrElseUpdate(fp, buildJoinViewInfo(v, snapshot))
   }
 
-  private def buildJoinViewInfo(spark: SparkSession,
-                                v: SqlRouter.MvSpec): Option[JoinViewInfo] =
+  private def buildJoinViewInfo(v: SqlRouter.MvSpec,
+                                snapshot: String => Option[DataFrame]): Option[JoinViewInfo] =
     try {
+      def member(t: String) = snapshot(t).get.alias(t)
+      val base = member(v.over)
       def pcol(t: String) = ColumnBridge.column(
-        spark.sessionState.sqlParser.parseExpression(t))
-      val frame = v.joins.foldLeft(spark.table(v.over).alias(v.over)) {
-        case (acc, (t, c)) => acc.join(spark.table(t).alias(t), pcol(c), "inner")
+        base.sparkSession.sessionState.sqlParser.parseExpression(t))
+      val frame = v.joins.foldLeft(base) {
+        case (acc, (t, c)) => acc.join(member(t), pcol(c), "inner")
       }
       val full = v.where.map(w => frame.filter(pcol(w))).getOrElse(frame)
       @tailrec def peel(p: LogicalPlan, acc: Seq[Expression])
@@ -479,10 +476,9 @@ object MvRewrite {
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  private def rewriteJoinAgg(spark: SparkSession, agg: Aggregate,
-                             where: Option[Expression], join: Join,
-                             views: Seq[SqlRouter.MvSpec],
-                             rootOf: String => Option[String])
+  private def rewriteJoinAgg(agg: Aggregate, where: Option[Expression],
+                             join: Join, views: Seq[SqlRouter.MvSpec],
+                             snapshot: String => Option[DataFrame])
       : Option[(LogicalPlan, String, String)] = {
     if (views.isEmpty) return None
     val tree = collectTree(join) match {
@@ -502,28 +498,27 @@ object MvRewrite {
     val qcanon = (tree.onConds ++ where.toSeq.flatMap(conjuncts))
       .map(c => (c, canonId(c, attrTable)))
     views.iterator
-      .flatMap(v => tryJoinView(spark, agg, groupIds.toSet, qcanon,
-        tree, attrTable, v, rootOf, where.nonEmpty))
+      .flatMap(v => tryJoinView(agg, groupIds.toSet, qcanon,
+        tree, attrTable, v, snapshot, where.nonEmpty))
       .nextOption()
   }
 
-  private def tryJoinView(spark: SparkSession, agg: Aggregate,
+  private def tryJoinView(agg: Aggregate,
                           groupIds: Set[(String, String)],
                           qcanon: Seq[(Expression, Expression)],
                           tree: JoinTree, attrTable: Map[ExprId, String],
                           v: SqlRouter.MvSpec,
-                          rootOf: String => Option[String],
+                          snapshot: String => Option[DataFrame],
                           hadWhere: Boolean)
       : Option[(LogicalPlan, String, String)] = {
-    val info = joinViewInfo(spark, v) match {
+    val info = joinViewInfo(v, snapshot) match {
       case Some(i) => i
       case None => return None
     }
     if (info.members != tree.leaves.map(_._1.toLowerCase).toSet) return None
-    // pin every leaf relation to its registered root (a shadowing temp
-    // view must not rewrite)
-    if (!tree.leaves.forall { case (t, rel, _) =>
-      rootOf(t).exists(underRoot(spark, rel, _)) }) return None
+    // pin every leaf relation to its member's latest snapshot
+    if (!tree.leaves.forall { case (t, rel, _) => isSnapshot(rel, t, snapshot) })
+      return None
     val exact = groupIds == info.keyIds.keySet
     if (!exact && !groupIds.subsetOf(info.keyIds.keySet)) return None
     // every view conjunct (ON and WHERE) must appear in the query's
@@ -547,7 +542,7 @@ object MvRewrite {
     if (!keyOnly) return None
 
     // leftover predicates re-target the view's storage-named keys
-    val mvDf = leftover.foldLeft(spark.table(v.name)) { (df, cond) =>
+    val mvDf = leftover.foldLeft(snapshot(v.name).getOrElse(return None)) { (df, cond) =>
       val rebound = normalize(cond).transform {
         case a: AttributeReference =>
           org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(

@@ -222,7 +222,7 @@ final class QueryServer(engine: Graft, port: Int,
 
   // --- metadata surface (the reference keeps table metadata alongside
   // auth in its RDBMS; here it is served straight from the session
-  // catalog + managed-table manifests) -------------------------------
+  // catalog, the router's managed names and their manifests) ---------
 
   private def columnsJson(schema: org.apache.spark.sql.types.StructType): String =
     schema.fields.map(f =>
@@ -233,9 +233,12 @@ final class QueryServer(engine: Graft, port: Int,
     val managedRoot = router.registered.get(name)
     val base = s"""{"name":${jsonStr(name)},"managed":${managedRoot.isDefined}"""
     val cols =
-      if (withColumns)
-        s""","columns":${columnsJson(engine.spark.table(name).schema)}"""
-      else ""
+      if (withColumns) {
+        val schema = managedRoot
+          .map(graft.sources.ManagedTable.latest(engine.spark, _).schema)
+          .getOrElse(engine.spark.table(name).schema)
+        s""","columns":${columnsJson(schema)}"""
+      } else ""
     val managed = managedRoot.map { root =>
       val hist = graft.sources.ManagedTable.history(engine.spark, root)
       val versions = hist.map(s =>
@@ -257,12 +260,13 @@ final class QueryServer(engine: Graft, port: Int,
           // listing stays cheap: names only; schemas come from the
           // per-table endpoint (resolving every relation per listing
           // call would re-analyze the whole catalog each poll)
-          val names = engine.spark.catalog.listTables().collect()
-            .map(_.name).sorted
+          val names = (engine.spark.catalog.listTables().collect().map(_.name) ++
+            router.registered.keys).distinct.sorted
           val body = names.map(tableJson(_, withColumns = false))
             .mkString("[", ",", "]")
           respond(ex, 200, s"""{"tables":$body,"n":${names.length}}""")
-        } else if (engine.spark.catalog.tableExists(rest)) {
+        } else if (router.registered.contains(rest) ||
+            engine.spark.catalog.tableExists(rest)) {
           respond(ex, 200, tableJson(rest, withColumns = true))
         } else {
           respond(ex, 404, s"""{"error":${jsonStr(s"no table '$rest'")}}""")

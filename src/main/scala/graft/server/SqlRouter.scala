@@ -2,6 +2,10 @@ package graft.server
 
 import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation, UnresolvedTableOrView}
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{DescribeRelation, LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.execution.command.DescribeQueryCommand
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.StructType
@@ -12,10 +16,11 @@ import graft.util.Json
   * (and any embedding host) the reference's full SQL UX — DML included
   * — without teaching Spark's parser new statements. DML on managed
   * tables is routed to [[ManagedTable]]'s copy-on-write operations;
-  * everything else goes to `spark.sql` unchanged, with every managed
-  * table kept visible to SELECTs as a temp view that refreshes after
-  * each mutation (views are snapshot-pinned, so a refresh is a cheap
-  * re-register, not a data copy).
+  * everything else is parsed by Spark's own parser, once per
+  * statement, and every relation that names a registered managed
+  * table is bound to that table's snapshot at statement time (see
+  * [[Snapshots]]). The `tables` map is the only record of the managed
+  * names: nothing is registered in the session catalog.
   *
   * Statement forms (leading keywords case-insensitive, the embedded
   * query/expressions are full Spark SQL):
@@ -63,13 +68,11 @@ import graft.util.Json
   * pin filesystem state to one HTTP connection across requests.
   * Registration metadata (CREATE/OPEN's name→root entry) is catalog
   * state, not table data — a rolled-back CREATE keeps the name
-  * registered but the table stays empty/versionless. Isolation caveat:
-  * temp views refresh after each inner statement so the batch's own
-  * SELECTs read their writes, and Spark temp views are session-scoped
-  * — a concurrent reader sharing this session can glimpse staged rows
-  * mid-batch (the views are re-pinned to the published outcome at the
-  * end). Snapshot readers going through ManagedTable directly, or any
-  * other session, never see an unpublished version.
+  * registered but the table stays empty/versionless. Isolation: each
+  * statement reads its snapshots through [[ManagedTable]]'s visibility
+  * rule, which is per thread — the batch's own statements read their
+  * staged writes, and every other reader, in this session or any
+  * other, sees only published versions.
   * Mutations return a one-row summary frame `(op, tbl, version)` —
   * JSON-friendly for the HTTP layer. Exceptions that carry extra
   * accounting widen it: ingest adds `n_applied` (post-dedup winners
@@ -94,6 +97,7 @@ import graft.util.Json
   * the embedded/test mode.
   */
 final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
+  import SqlRouter.splitTopLevel
 
   // every SELECT through this router benefits from ANALYZE statistics:
   // the rule reorders inner-join chains and injects broadcast hints
@@ -123,11 +127,13 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     val f = catalogFs(p)
     if (f.exists(p)) {
       Json.readFile(f, p)(SqlRouter.parseCatalog).foreach { case (name, root) =>
-        require(ManagedTable.history(spark, root).nonEmpty,
-          s"catalog entry '$name' -> $root is not a managed table " +
-            s"(moved or vacuumed away?) — fix or remove it from $p")
+        try ManagedTable.latest(spark, root)
+        catch { case scala.util.control.NonFatal(e) =>
+          throw new IllegalArgumentException(
+            s"catalog entry '$name' -> $root is not a managed table " +
+              s"(moved or vacuumed away?) — fix or remove it from $p", e)
+        }
         tables.put(name, root)
-        refreshView(name)
         graft.sources.TableStatistics.load(spark, root): Unit
         SqlRouter.readMvSidecar(spark, root).foreach(spec =>
           mviews.put(spec.name, spec))
@@ -152,10 +158,8 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
   /** Attach an existing managed table under `name` (also done by the
     * OPEN/CREATE statements). */
   def register(name: String, root: String): Unit = {
-    require(ManagedTable.history(spark, root).nonEmpty,
-      s"$root is not a managed table")
+    ManagedTable.latest(spark, root) // fails loudly on a non-table
     tables.put(name, root)
-    refreshView(name)
     // restore durable ANALYZE statistics (only if they describe the
     // current snapshot — TableStatistics.load enforces the version)
     graft.sources.TableStatistics.load(spark, root): Unit
@@ -164,8 +168,27 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
 
   def registered: Map[String, String] = tables.toMap
 
-  private def refreshView(name: String): Unit =
-    ManagedTable.read(spark, tables(name)).createOrReplaceTempView(name)
+  // each table's head snapshot with its frame, reused while that
+  // snapshot is still the head: building a frame (file index,
+  // analysis) costs several times what finding the head does. The key
+  // is the whole snapshot, so a version slot that a rolled-back batch
+  // freed and another commit refilled, or a head staged by another
+  // thread's batch, never matches
+  private val heads = TrieMap.empty[String, (ManagedTable.Snapshot, DataFrame)]
+
+  private def head(root: String): DataFrame = {
+    val snap = ManagedTable.latest(spark, root)
+    heads.get(root) match {
+      case Some((s, df)) if s == snap =>
+        // memoized per version; re-registers after a bloom index change
+        graft.sources.FileSkip.register(spark, root, snap)
+        df
+      case _ =>
+        val df = ManagedTable.read(spark, root, snap)
+        heads.put(root, (snap, df))
+        df
+    }
+  }
 
   private def root(name: String): String =
     tables.getOrElse(name, throw new IllegalArgumentException(
@@ -269,7 +292,6 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
             mvFlatAggs(mv.avgs))
         }
         graft.sources.TableStatistics.invalidate(mv.root)
-        refreshView(mv.name)
       }
     }
   }
@@ -342,7 +364,6 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       graft.sources.Constraints.load(spark, r).exists(spec => !spec.isEmpty)
     val counted = if (constrained) Some(winners.count()) else None
     val m = upsertInto(name, r, align(winners, pre.schema), keys)
-    refreshView(name)
     maintainViews(name, pre.version, m.snapshot.version, m.changes)
     import spark.implicits._
     Seq(("ingest", name, m.snapshot.version, counted.getOrElse(m.applied)))
@@ -372,29 +393,6 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
   private def summary(op: String, tbl: String, version: Int): DataFrame = {
     import spark.implicits._
     Seq((op, tbl, version)).toDF("op", "tbl", "version")
-  }
-
-  /** Split `s` on top-level `sep` (ignores separators inside (), ''
-    * and "" — enough for argument lists whose elements are SQL
-    * expressions; quote escaping is SQL-style doubled quotes, which
-    * re-enter quote state and stay harmless to depth tracking). */
-  private def splitTop(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    for (c <- s) {
-      if (quote != 0) { if (c == quote) quote = 0; cur += c }
-      else c match {
-        case '\'' | '"' => quote = c; cur += c
-        case '(' => depth += 1; cur += c
-        case ')' => depth -= 1; cur += c
-        case `sep` if depth == 0 => out += cur.toString; cur.clear()
-        case _ => cur += c
-      }
-    }
-    out += cur.toString
-    out.result()
   }
 
   private def parseCol(exprText: String): Column =
@@ -512,33 +510,71 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     """(?is)\s*BEGIN\s*;(.+);\s*(COMMIT|ROLLBACK)\s*;?\s*""".r
   private val BareTxnKw = """(?is)\s*(BEGIN|COMMIT|ROLLBACK)\b.*""".r
 
-  // SELECT-side time travel: `t VERSION AS OF n` pins a registered
-  // managed table to snapshot n through a version-named temp view
-  // (so the SAME version everywhere it appears in the query — a live
-  // `t` elsewhere in the statement still reads current). Names that
-  // are not registered managed tables are left untouched (Spark's
-  // parser then reports them as it always did). The rewrite is
-  // textual, so the phrase inside a string LITERAL would be rewritten
-  // too — the standard caveat of this router's statement regexes.
-  private val VersionAsOf = """(?i)\b(\w+)\s+VERSION\s+AS\s+OF\s+(\d+)\b""".r
-  private def rewriteTimeTravel(sql: String): String =
-    VersionAsOf.replaceAllIn(sql, m => {
-      val name = m.group(1)
-      if (!tables.contains(name)) scala.util.matching.Regex.quoteReplacement(m.matched)
-      else {
-        val v = m.group(2).toInt
-        val alias = s"${name}__v$v"
-        ManagedTable.read(spark, root(name), asOf = Some(v))
-          .createOrReplaceTempView(alias)
-        alias
-      }
-    })
+  /** One statement's binding of managed names to snapshots. Every
+    * relation the parsed statement reads — in FROM clauses, subqueries
+    * and CTE bodies — that names a registered table (single-part and
+    * case-insensitive, as the session catalog resolves names) becomes
+    * `SubqueryAlias(name, <snapshot plan>)`; `t VERSION AS OF n`, which
+    * Spark's grammar parses to a `RelationTimeTravel`, becomes the same
+    * over snapshot n. A CTE of the same name shadows the table. Each
+    * (table, version) is read once, at its first use, so a self-join
+    * reads one snapshot, and the read applies ManagedTable's per-thread
+    * transaction visibility. Any other name is left to Spark's
+    * analyzer, which resolves or rejects it as before. */
+  private final class Snapshots {
+    private val read = scala.collection.mutable.Map.empty[(String, Option[Int]), DataFrame]
 
-  private def query(text: String): DataFrame = {
-    val t = rewriteTimeTravel(text.trim)
-    if (t.toUpperCase.startsWith("VALUES")) spark.sql(s"SELECT * FROM $t")
-    else spark.sql(t)
+    /** The registered (name, root) that `name` names. */
+    private def lookup(name: String): Option[(String, String)] =
+      tables.get(name).map(name -> _).orElse(tables.find(_._1.equalsIgnoreCase(name)))
+
+    /** The snapshot of the registered table `name` names, at `asOf`
+      * (latest when None). */
+    def frame(name: String, asOf: Option[Int] = None): Option[DataFrame] =
+      lookup(name).map { case (n, r) =>
+        read.getOrElseUpdate((n, asOf),
+          if (asOf.isEmpty) head(r) else ManagedTable.read(spark, r, asOf)) }
+
+    def plan(text: String): DataFrame =
+      ColumnBridge.ofRows(spark, bind(spark.sessionState.sqlParser.parsePlan(text), Set.empty))
+
+    private def bind(p: LogicalPlan, ctes: Set[String]): LogicalPlan = {
+      // a one-part name of a registered table that no CTE in scope shadows
+      object Managed {
+        def unapply(parts: Seq[String]): Option[String] = parts match {
+          case Seq(n) if !ctes.contains(n.toLowerCase) && lookup(n).isDefined => Some(n)
+          case _ => None
+        }
+      }
+      def snapshot(n: String, asOf: Option[Int]): LogicalPlan =
+        SubqueryAlias(n, frame(n, asOf).getOrElse(unknownTable(n)).queryExecution.analyzed)
+      p match {
+        case w: UnresolvedWith =>
+          // a definition sees the ones before it (all of them when RECURSIVE)
+          val names = w.cteRelations.map(_._1.toLowerCase)
+          val defs = w.cteRelations.zipWithIndex.map { case ((n, body, depth), i) =>
+            val seen = ctes ++ (if (w.allowRecursion) names else names.take(i))
+            (n, bind(body, seen).asInstanceOf[SubqueryAlias], depth)
+          }
+          w.copy(child = bind(w.child, ctes ++ names), cteRelations = defs)
+        case RelationTimeTravel(UnresolvedRelation(Managed(n), _, _), ts, version) =>
+          require(ts.isEmpty, s"managed table '$n' travels by VERSION AS OF <n>, not TIMESTAMP AS OF")
+          snapshot(n, Some(version.flatMap(_.toIntOption).getOrElse(
+            throw new IllegalArgumentException(
+              s"VERSION AS OF on '$n' needs a version number, got '${version.getOrElse("")}'"))))
+        case UnresolvedRelation(Managed(n), _, false) => snapshot(n, None)
+        case DescribeRelation(UnresolvedTableOrView(Managed(n), _, _), spec, _, _) if spec.isEmpty =>
+          DescribeQueryCommand(s"DESCRIBE $n", snapshot(n, None))
+        case other =>
+          other.mapChildren(bind(_, ctes)).transformExpressions {
+            case sq: SubqueryExpression => sq.withNewPlan(bind(sq.plan, ctes))
+          }
+      }
+    }
   }
+
+  /** A query text with its managed tables bound to their snapshots. */
+  private def query(text: String): DataFrame = new Snapshots().plan(text)
 
   /** Whether `sql` has a state-mutating statement shape (managed
     * DDL/DML, catalog registration, or any non-SELECT-shaped statement
@@ -572,7 +608,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     case Create(name, ddl, path, onViolation) =>
       // split column defs from table-level constraint clauses: the
       // clauses come out, the rest is the schema DDL as before
-      val parts = splitTop(ddl, ',').map(_.trim).filter(_.nonEmpty)
+      val parts = splitTopLevel(ddl, ',').map(_.trim).filter(_.nonEmpty)
       var pk = Seq.empty[String]
       var nn = Seq.empty[String]
       var checks = Seq.empty[graft.sources.Constraints.Check]
@@ -637,7 +673,6 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       val cs = ManagedTable.insertChanges(spark, r,
         if (hasViews(name)) rows.localCheckpoint() else rows)
       val snap = cs.snapshot
-      refreshView(name)
       maintainViews(name, pre.version, snap.version, Some(cs))
       summary("insert", name, snap.version)
 
@@ -667,7 +702,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       val (setPart, wherePart) =
         if (whereIdx < 0) (rest, None)
         else (rest.substring(0, whereIdx), Some(rest.substring(whereIdx + 5)))
-      val sets = splitTop(setPart, ',').map { a =>
+      val sets = splitTopLevel(setPart, ',').map { a =>
         val eq = a.indexOf('=')
         require(eq > 0, s"malformed assignment '$a' — expected col = expr")
         a.substring(0, eq).trim -> parseCol(a.substring(eq + 1))
@@ -675,7 +710,6 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       val where = wherePart.map(parseCol).getOrElse(lit(true))
       val preU = ManagedTable.latest(spark, r).version
       val snap = ManagedTable.update(spark, r, where, sets)
-      refreshView(name)
       maintainViews(name, preU, snap.version)
       summary("update", name, snap.version)
 
@@ -684,7 +718,6 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       val where = Option(wherePart).map(parseCol).getOrElse(lit(true))
       val preD = ManagedTable.latest(spark, r).version
       val snap = ManagedTable.delete(spark, r, where)
-      refreshView(name)
       maintainViews(name, preD, snap.version)
       summary("delete", name, snap.version)
 
@@ -692,7 +725,6 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       val r = mutableRoot(name)
       val dt = org.apache.spark.sql.types.DataType.fromDDL(typeDdl)
       val snap = ManagedTable.addColumn(spark, r, colName, dt)
-      refreshView(name)
       summary("add_column", name, snap.version)
 
     // metadata-only schema evolution: RENAME remaps the logical name
@@ -704,14 +736,12 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       val r = mutableRoot(name)
       requireNoMvReference(name, from, "rename")
       val snap = ManagedTable.renameColumn(spark, r, from, to)
-      refreshView(name)
       summary("rename_column", name, snap.version)
 
     case DropColStmt(name, colName) if tables.contains(name) =>
       val r = mutableRoot(name)
       requireNoMvReference(name, colName, "drop")
       val snap = ManagedTable.dropColumn(spark, r, colName)
-      refreshView(name)
       summary("drop_column", name, snap.version)
 
     // type WIDENING (int-family up, float->double): metadata-only —
@@ -724,17 +754,15 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       requireNoMvReference(name, colName, "alter type of")
       val dt = org.apache.spark.sql.types.DataType.fromDDL(typeDdl)
       val snap = ManagedTable.alterColumnType(spark, r, colName, dt)
-      refreshView(name)
       summary("alter_column_type", name, snap.version)
 
     case Optimize(name, nFiles, zorder, byCols) if tables.contains(name) =>
       val r = root(name)
-      val cols = Option(byCols).map(splitTop(_, ',').map(_.trim)).getOrElse(Nil)
+      val cols = Option(byCols).map(splitTopLevel(_, ',').map(_.trim)).getOrElse(Nil)
       val snap =
         if (zorder != null)
           ManagedTable.compactTable(spark, r, nFiles.toInt, zorderCols = cols)
         else ManagedTable.compactTable(spark, r, nFiles.toInt, cols)
-      refreshView(name)
       summary("compact", name, snap.version)
 
     // VACUUM expires old manifests and sweeps unreferenced data files
@@ -758,7 +786,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     case ShowChanges(name, fromV, toV, keyList) if tables.contains(name) =>
       ManagedTable.changes(spark, root(name), fromV.toInt,
         Option(toV).map(_.toInt),
-        splitTop(keyList, ',').map(_.trim).filter(_.nonEmpty))
+        splitTopLevel(keyList, ',').map(_.trim).filter(_.nonEmpty))
 
     // the declared write-time rules of a constrained table, one row
     // per rule (empty result, same shape, for an unconstrained one)
@@ -825,7 +853,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     // Dependent materialized views fold the synced delta like any DML.
     case SyncStmt(dst, srcName, keyList, loc) if tables.contains(srcName) =>
       import spark.implicits._
-      val keys = splitTop(keyList, ',').map(_.trim).filter(_.nonEmpty)
+      val keys = splitTopLevel(keyList, ',').map(_.trim).filter(_.nonEmpty)
       val srcRoot = root(srcName)
       val res =
         if (!tables.contains(dst)) {
@@ -843,7 +871,6 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
           val pre = ManagedTable.latest(spark, dstRoot).version
           val r = graft.streaming.ChangeFeed.sync(spark, srcRoot, dstRoot, keys)
           graft.sources.TableStatistics.invalidate(dstRoot)
-          refreshView(dst)
           maintainViews(dst, pre,
             ManagedTable.latest(spark, dstRoot).version)
           r
@@ -858,7 +885,6 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       val rr = mutableRoot(name)
       val preR = ManagedTable.latest(spark, rr).version
       val snap = ManagedTable.restore(spark, rr, ver.toInt)
-      refreshView(name)
       maintainViews(name, preR, snap.version)
       summary("restore", name, snap.version)
 
@@ -877,7 +903,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       val r = root(name)
       val v = ManagedTable.latest(spark, r).version
       tables.remove(name)
-      spark.catalog.dropTempView(name): Unit
+      heads.remove(r)
       persist()
       val purged = purge != null
       if (purged) {
@@ -890,9 +916,8 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     case Upsert(name, keys, rest) if tables.contains(name) =>
       val r = mutableRoot(name)
       val pre = ManagedTable.latest(spark, r)
-      val keyCols = splitTop(keys, ',').map(_.trim)
+      val keyCols = splitTopLevel(keys, ',').map(_.trim)
       val m = upsertInto(name, r, align(query(rest), pre.schema), keyCols)
-      refreshView(name)
       maintainViews(name, pre.version, m.snapshot.version, m.changes)
       summary("merge", name, m.snapshot.version)
 
@@ -916,7 +941,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
         s"OVER join tree repeats a table (${memberNames.mkString(", ")}) — " +
           "self-joins are not maintainable incrementally")
       memberNames.foreach(t => root(t): Unit) // every member must be registered
-      val keyCols = splitTop(keys, ',').map(_.trim)
+      val keyCols = splitTopLevel(keys, ',').map(_.trim)
       val (aggBlob, where, path) = SqlRouter.splitMvTail(tail)
       val (sums, mins, maxs, avgs) = SqlRouter.parseAggClauses(aggBlob)
       def cols(xs: Seq[(String, String)]) =
@@ -956,8 +981,8 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       val v = ManagedTable.latest(spark, r).version
       mviews.remove(name)
       tables.remove(name)
+      heads.remove(r)
       MvRewrite.invalidatePredCache(name)
-      spark.catalog.dropTempView(name): Unit
       persist()
       val purged = purge != null
       if (purged) {
@@ -988,7 +1013,6 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       ManagedTable.delete(spark, mv.root, lit(true))
       val snap = ManagedTable.insert(spark, mv.root, fresh)
       graft.sources.TableStatistics.invalidate(mv.root)
-      refreshView(name)
       summary("refresh_mview", name, snap.version)
 
     // ANALYZE collects optimizer statistics for the current snapshot
@@ -1044,9 +1068,9 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       }
 
     case ShowTablesStmt() =>
-      // the managed catalog as rows: what Spark's own SHOW TABLES (a
-      // flat temp-view list) cannot say — which names are engine
-      // tables, where they live, and how far their logs have moved
+      // the managed catalog as rows (Spark's own SHOW TABLES lists the
+      // session catalog only): which names are engine tables, where
+      // they live, and how far their logs have moved
       import spark.implicits._
       tables.toSeq.sortBy(_._1).map { case (n, r) =>
         val snap = ManagedTable.latest(spark, r)
@@ -1108,7 +1132,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     case CreateBloomIdx(name, colList) if tables.contains(name) =>
       val r = root(name)
       val snap = ManagedTable.latest(spark, r)
-      val cols = splitTop(colList, ',').map(_.trim).filter(_.nonEmpty)
+      val cols = splitTopLevel(colList, ',').map(_.trim).filter(_.nonEmpty)
       val missing = cols.filterNot(snap.schema.fieldNames.contains)
       require(missing.isEmpty,
         s"bloom index: no such column(s) ${missing.mkString(", ")} " +
@@ -1125,7 +1149,6 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       graft.sources.FileBloom.write(spark, r, snap) // backfill at current version
       // cached registry entries predate the new sidecar — re-register
       graft.sources.FileSkip.invalidate(spark, r)
-      refreshView(name)
       summary("create_bloom_index", name, snap.version)
 
     case DropBloomIdx(name) if tables.contains(name) =>
@@ -1171,7 +1194,7 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
 
     case TxnBatch(inner, term) =>
       import graft.sources.Txn
-      val stmts = splitTop(inner, ';').map(_.trim).filter(_.nonEmpty)
+      val stmts = splitTopLevel(inner, ';').map(_.trim).filter(_.nonEmpty)
       require(stmts.nonEmpty, "empty transaction: BEGIN; <statements>; COMMIT")
       // SYNC advances a durable feed cursor OUTSIDE the manifest-marker
       // protocol — a rolled-back batch would still advance it and the
@@ -1185,29 +1208,14 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
       val anchor = txnAnchor(stmts)
       val wantCommit = term.trim.equalsIgnoreCase("COMMIT")
       var staged: Seq[(String, Int)] = Nil
-      try {
-        try Txn.transaction(spark, anchor) {
-          // capture the staged list after EVERY statement (not once at
-          // the end): a mid-batch failure must still know which tables
-          // were touched so their views can be un-pinned below
-          stmts.foreach { s =>
-            try execute(s): Unit
-            finally staged = graft.sources.Txn.currentStaged
-          }
-          // ROLLBACK terminator = stage-and-discard (the dry-run
-          // shape): unwinding through Txn.transaction aborts every
-          // staged manifest, exactly like a failing statement would
-          if (!wantCommit) throw new SqlRouter.RollbackRequested
-        } catch { case _: SqlRouter.RollbackRequested => }
-      } finally {
-        // per-statement handlers refreshed views against STAGED state;
-        // re-pin every touched table's view to the published outcome
-        // (commit: the new versions; rollback/failure: the old ones —
-        // without this, an aborted manifest's view would keep serving
-        // the orphaned data files)
-        val nameOf = tables.toMap.map(_.swap)
-        staged.foreach { case (r, _) => nameOf.get(r).foreach(refreshView) }
-      }
+      try Txn.transaction(spark, anchor) {
+        stmts.foreach(s => execute(s): Unit)
+        staged = Txn.currentStaged
+        // ROLLBACK terminator = stage-and-discard (the dry-run
+        // shape): unwinding through Txn.transaction aborts every
+        // staged manifest, exactly like a failing statement would
+        if (!wantCommit) throw new SqlRouter.RollbackRequested
+      } catch { case _: SqlRouter.RollbackRequested => }
       val nameOf = tables.toMap.map(_.swap)
       import spark.implicits._
       val op = if (wantCommit) "commit" else "rollback"
@@ -1320,13 +1328,14 @@ final class SqlRouter(spark: SparkSession, catalogRoot: Option[String] = None) {
     * served from the incrementally-maintained view instead of
     * re-scanning the base — sound here because this router maintains
     * every view synchronously inside the statement that mutates its
-    * base. GRAFT_MV_REWRITE=0 opts out; non-matching plans pass
-    * through untouched. */
+    * base, and because the view and its base are read at the same
+    * statement's snapshots. Non-matching plans pass through
+    * untouched. */
   private def selectWithRewrite(text: String): DataFrame = {
-    val df = spark.sql(rewriteTimeTravel(text))
-    if (mviews.isEmpty || MvRewrite.disabled ||
-        sys.env.get("GRAFT_MV_REWRITE").contains("0")) df
-    else MvRewrite.maybe(spark, df, mviews.values.toSeq, tables.get) match {
+    val snapshots = new Snapshots
+    val df = snapshots.plan(text)
+    if (mviews.isEmpty || MvRewrite.disabled) df
+    else MvRewrite.maybe(spark, df, mviews.values.toSeq, snapshots.frame(_)) match {
       case Some((df2, mvName, mode)) =>
         System.err.println(s"[mv-rewrite] served from materialized view " +
           s"'$mvName' ($mode)")
@@ -1408,13 +1417,17 @@ object SqlRouter {
     val base = segs.head.trim
     require(base.matches("\\w+"),
       s"OVER must start with a table name, got '${base.take(40)}'")
-    val JoinSeg = """(?is)\s*(\w+)\s+ON\s+(.+?)\s*""".r
-    val joins = segs.tail.map {
-      case JoinSeg(t, cond) => (t, cond)
-      case other => throw new IllegalArgumentException(
-        s"malformed JOIN clause '${other.trim.take(40)}' — expected 'table ON condition'")
-    }
-    (base, joins)
+    (base, joinSegs(segs.tail))
+  }
+
+  private val JoinSeg = """(?is)\s*(\w+)\s+ON\s+(.+?)\s*""".r
+
+  /** `table ON condition` segments (a join tree split at its top-level
+    * JOIN keywords) as (table, condition) pairs. */
+  private def joinSegs(segs: Seq[String]): Seq[(String, String)] = segs.map {
+    case JoinSeg(t, cond) => (t, cond)
+    case other => throw new IllegalArgumentException(
+      s"malformed JOIN clause '${other.trim.take(40)}' — expected 'table ON condition'")
   }
 
   /** Split `s` at every top-level occurrence of keyword `kw` (outside
@@ -1567,9 +1580,10 @@ object SqlRouter {
     }
   }
 
-  // the statement-level splitter, shared with the instance method via
-  // duplication-free delegation (object-side so parseSumList is
-  // testable without a SparkSession)
+  /** Split `s` on top-level `sep` (ignores separators inside (), ''
+    * and "" — enough for argument lists whose elements are SQL
+    * expressions; quote escaping is SQL-style doubled quotes, which
+    * re-enter quote state and stay harmless to depth tracking). */
   private def splitTopLevel(s: String, sep: Char): Seq[String] = {
     val out = Seq.newBuilder[String]
     val cur = new StringBuilder
@@ -1632,14 +1646,8 @@ object SqlRouter {
     def aggList(k: String): Seq[(String, String)] =
       m.get(k).filter(_.trim.nonEmpty).map(parseSumList).getOrElse(Nil)
     // joins default empty so pre-join-view sidecars still load
-    val joins = m.get("joins").filter(_.trim.nonEmpty).map { blob =>
-      val JoinSeg = """(?is)\s*(\w+)\s+ON\s+(.+?)\s*""".r
-      splitAtKeyword(blob, "JOIN").map {
-        case JoinSeg(t, cond) => (t, cond)
-        case other => throw new IllegalArgumentException(
-          s"MV sidecar: malformed joins segment '${other.trim.take(40)}'")
-      }
-    }.getOrElse(Nil)
+    val joins = m.get("joins").filter(_.trim.nonEmpty)
+      .map(blob => joinSegs(splitAtKeyword(blob, "JOIN"))).getOrElse(Nil)
     MvSpec(need("name"), need("over"), root,
       need("keys").split(',').map(_.trim).toSeq, need("count"),
       aggList("sums"), aggList("mins"), aggList("maxs"), aggList("avgs"),

@@ -367,10 +367,13 @@ object ManagedTable {
   /** Read a snapshot (latest, or time-travel to `asOf`). The scan is a
     * plain multi-file parquet read — pushdown/pruning apply as usual.
     */
-  def read(spark: SparkSession, root: String, asOf: Option[Int] = None): DataFrame = {
-    val snap = resolve(spark, root, asOf)
+  def read(spark: SparkSession, root: String, asOf: Option[Int] = None): DataFrame =
+    read(spark, root, resolve(spark, root, asOf))
+
+  /** Read `snap`, a snapshot of the table at `root` that
+    * [[latest]] or [[snapshotAt]] returned. */
+  def read(spark: SparkSession, root: String, snap: Snapshot): DataFrame =
     scanFiles(spark, snap, root, snap.files)
-  }
 
   /** The CDC READ side: keyed row changes between two snapshot
     * versions — `(keys..., change, content columns...)` with change in

@@ -75,7 +75,7 @@ class LakeIndexSpec extends AnyFunSuite {
         }
       }
       assert(roots.nonEmpty && roots.forall(_.contains(mv)), roots)
-      assert(rows(df) == rows(spark.sql(q)))
+      assert(rows(df) == rows(TestSpark.recompute(r, q)))
     }
     def pointLookups(expectFiles: Int): Unit = {
       // (1) bloom-pruned point lookups: near-single-file plans, exact rows
@@ -168,7 +168,7 @@ class LakeIndexSpec extends AnyFunSuite {
         }
       }
       assert(roots.nonEmpty && roots.forall(_.contains(jv)), roots)
-      assert(rows(df) == rows(spark.sql(q)))
+      assert(rows(df) == rows(TestSpark.recompute(r, q)))
     }
     def tsLookup(expectFiles: Int): Unit = {
       val point = s"timestamp_micros(${1700000000000000L + 1001L * 60000000L})"

@@ -313,8 +313,9 @@ class ManagedTableSpec extends AnyFunSuite {
       ingest(Seq((10L * b, s"s${b % 3}", b.toLong), (2000L + b, s"s${b % 3}", 1L)))
       assert(liveFiles(s"$dir/v").size == 1, s"batch $b")
     }
-    assert(spark.sql("SELECT g, n, sv FROM pv_by_g").collect().map(_.toSeq).toSet ==
-      spark.sql("SELECT g, count(*), sum(v) FROM pv GROUP BY g").collect().map(_.toSeq).toSet)
+    assert(TestSpark.recompute(router, "SELECT g, n, sv FROM pv_by_g").collect().map(_.toSeq).toSet ==
+      TestSpark.recompute(router, "SELECT g, count(*), sum(v) FROM pv GROUP BY g")
+        .collect().map(_.toSeq).toSet)
   }
 
   test("packing: a rewrite of N bytes yields ceil(N / maxPartitionBytes) files") {
@@ -388,6 +389,10 @@ class ManagedTableSpec extends AnyFunSuite {
     assert(ManagedTable.read(spark, root, asOf = Some(3)).count() == 3)
     ManagedTable.insert(spark, root, rows((6L, "b", 6.0)))
     assert(ManagedTable.latest(spark, root).version == 6)
+    // so does attaching it to a router
+    assert(new graft.server.SqlRouter(spark)
+      .execute(s"OPEN MANAGED TABLE head_only LOCATION '$root'")
+      .collect().head.getAs[Int]("version") == 6)
     // a reader that does open it is loud and names the file
     val e = intercept[IllegalArgumentException](ManagedTable.history(spark, root))
     assert(e.getMessage.contains("v00000000.json"), e.getMessage)

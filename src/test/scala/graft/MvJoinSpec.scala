@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import graft.server.SqlRouter
+import graft.sources.ManagedTable
 
 /** Materialized views OVER JOINS (the star-schema rollup): a view
   * declared `OVER fact JOIN dim ON cond` bootstraps from the join,
@@ -37,7 +38,8 @@ class MvJoinSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq.toSeq).toSeq.sortBy(_.mkString("|"))
 
-  private def expect(sql: String): Seq[Seq[Any]] = rows(spark.sql(sql))
+  private def expect(r: SqlRouter, sql: String): Seq[Seq[Any]] =
+    rows(TestSpark.recompute(r, sql))
 
   /** fact f_<id>(k, sk, amount, price) ⋈ dim d_<id>(sk, city, tier),
     * view keyed (f.k, d.city) maintaining COUNT/SUM/MIN/MAX/AVG. */
@@ -74,13 +76,13 @@ class MvJoinSpec extends AnyFunSuite {
       where + s" GROUP BY $f.k, $d.city"
 
   private def viewState(r: SqlRouter, id: String): Seq[Seq[Any]] =
-    rows(spark.table(id).select("k", "city", "n", "s_amt", "mn_amt",
+    rows(ManagedTable.read(spark, r.registered(id)).select("k", "city", "n", "s_amt", "mn_amt",
       "mx_amt", "a_price"))
 
   test("bootstrap equals the join recompute; spec round-trips the join tree") {
     val (r, f, d, _) = fixture()
     val vName = "v_" + f.stripPrefix("f_")
-    assert(viewState(r, vName) == expect(recompute(f, d)))
+    assert(viewState(r, vName) == expect(r, recompute(f, d)))
     val shown = r.execute("SHOW MATERIALIZED VIEWS")
       .filter(s"name = '$vName'").collect().head
     assert(shown.getAs[String]("over_table") == s"$f JOIN $d ON $f.sk = $d.sk")
@@ -91,11 +93,11 @@ class MvJoinSpec extends AnyFunSuite {
     val vName = "v_" + f.stripPrefix("f_")
     r.execute(s"INSERT INTO $f VALUES (9, 0, 50, 1.0), (9, 5, 60, 2.0), " +
       s"(9, 99, 70, 3.0)") // sk=99 has no dim row: must not appear
-    assert(viewState(r, vName) == expect(recompute(f, d)))
+    assert(viewState(r, vName) == expect(r, recompute(f, d)))
     r.execute(s"DELETE FROM $f WHERE amount < 30")
-    assert(viewState(r, vName) == expect(recompute(f, d)))
+    assert(viewState(r, vName) == expect(r, recompute(f, d)))
     r.execute(s"UPDATE $f SET amount = amount + 10000 WHERE k = 2")
-    assert(viewState(r, vName) == expect(recompute(f, d)))
+    assert(viewState(r, vName) == expect(r, recompute(f, d)))
   }
 
   test("DML on the DIMENSION maintains incrementally == recompute") {
@@ -103,13 +105,13 @@ class MvJoinSpec extends AnyFunSuite {
     val vName = "v_" + f.stripPrefix("f_")
     // re-labelling a dim attribute MOVES whole groups
     r.execute(s"UPDATE $d SET city = 'porto' WHERE sk = 0")
-    assert(viewState(r, vName) == expect(recompute(f, d)))
+    assert(viewState(r, vName) == expect(r, recompute(f, d)))
     // deleting a dim row drops every joined fact row from the view
     r.execute(s"DELETE FROM $d WHERE sk = 3")
-    assert(viewState(r, vName) == expect(recompute(f, d)))
+    assert(viewState(r, vName) == expect(r, recompute(f, d)))
     // a new dim row brings previously-dangling facts in
     r.execute(s"INSERT INTO $d VALUES (3, 'oslo', 'gold')")
-    assert(viewState(r, vName) == expect(recompute(f, d)))
+    assert(viewState(r, vName) == expect(r, recompute(f, d)))
   }
 
   test("MIN/MAX delete-repair fires on join views (extremum removed)") {
@@ -117,21 +119,21 @@ class MvJoinSpec extends AnyFunSuite {
     val vName = "v_" + f.stripPrefix("f_")
     // delete the global max rows — their groups must re-derive extrema
     r.execute(s"DELETE FROM $f WHERE amount >= 590")
-    assert(viewState(r, vName) == expect(recompute(f, d)))
+    assert(viewState(r, vName) == expect(r, recompute(f, d)))
   }
 
   test("filtered join view (predicate on a DIM attribute) maintains == recompute") {
     val (r, f, d, _) = fixture(goldOnly = true)
     val vName = "v_" + f.stripPrefix("f_")
     val where = s"WHERE $d.tier = 'gold' "
-    assert(viewState(r, vName) == expect(recompute(f, d, where)))
+    assert(viewState(r, vName) == expect(r, recompute(f, d, where)))
     r.execute(s"INSERT INTO $f VALUES (7, 0, 11, 0.5), (7, 1, 13, 0.5)")
-    assert(viewState(r, vName) == expect(recompute(f, d, where)))
+    assert(viewState(r, vName) == expect(r, recompute(f, d, where)))
     // a dim row entering/leaving the predicate moves its whole slice
     r.execute(s"UPDATE $d SET tier = 'base' WHERE sk = 0")
-    assert(viewState(r, vName) == expect(recompute(f, d, where)))
+    assert(viewState(r, vName) == expect(r, recompute(f, d, where)))
     r.execute(s"UPDATE $d SET tier = 'gold' WHERE sk = 1")
-    assert(viewState(r, vName) == expect(recompute(f, d, where)))
+    assert(viewState(r, vName) == expect(r, recompute(f, d, where)))
   }
 
   test("REFRESH recomputes a join view; sidecar restart resumes maintenance") {
@@ -152,8 +154,8 @@ class MvJoinSpec extends AnyFunSuite {
       s"ON $f.sk = $d.sk KEY ($f.k, $d.city) COUNT n " +
       s"SUM ($f.amount AS s_amt) LOCATION '$base/mv_$id'")
     val vName = s"v_$id"
-    def state() = rows(spark.table(vName).select("k", "city", "n", "s_amt"))
-    def truth() = expect(s"SELECT $f.k, $d.city, count(*) AS n, " +
+    def state() = rows(ManagedTable.read(spark, r.registered(vName)).select("k", "city", "n", "s_amt"))
+    def truth() = expect(r, s"SELECT $f.k, $d.city, count(*) AS n, " +
       s"sum($f.amount) AS s_amt FROM $f JOIN $d ON $f.sk = $d.sk " +
       s"GROUP BY $f.k, $d.city")
     r.execute(s"REFRESH MATERIALIZED VIEW $vName").collect()
@@ -179,25 +181,25 @@ class MvJoinSpec extends AnyFunSuite {
       s"FROM $f a JOIN $d b ON a.sk = b.sk GROUP BY a.k, b.city"
     val df1 = r.execute(q1)
     assert(servedBy(df1, mv), scanRoots(df1))
-    assert(rows(df1) == expect(q1))
+    assert(rows(df1) == expect(r, q1))
     // join order flipped (dim first): same condition set, still served
     val q2 = s"SELECT $f.k, count(*) AS n, sum($f.amount) AS s " +
       s"FROM $d JOIN $f ON $f.sk = $d.sk GROUP BY $f.k"
     val df2 = r.execute(q2)
     assert(servedBy(df2, mv), scanRoots(df2))
-    assert(rows(df2) == expect(q2))
+    assert(rows(df2) == expect(r, q2))
     // global rollup
     val q3 = s"SELECT count(*) AS n, avg($f.price) AS ap " +
       s"FROM $f JOIN $d ON $f.sk = $d.sk"
     val df3 = r.execute(q3)
     assert(servedBy(df3, mv), scanRoots(df3))
-    assert(rows(df3) == expect(q3))
+    assert(rows(df3) == expect(r, q3))
     // WHERE on a view key re-applies over the view
     val q4 = s"SELECT $d.city, count(*) AS n FROM $f JOIN $d " +
       s"ON $f.sk = $d.sk WHERE $f.k IN (1, 2) GROUP BY $d.city"
     val df4 = r.execute(q4)
     assert(servedBy(df4, mv), scanRoots(df4))
-    assert(rows(df4) == expect(q4))
+    assert(rows(df4) == expect(r, q4))
   }
 
   test("rewrite stays exact across DML on either side") {
@@ -208,7 +210,7 @@ class MvJoinSpec extends AnyFunSuite {
       s"FROM $f JOIN $d ON $f.sk = $d.sk GROUP BY $d.city"
     val df = r.execute(q)
     assert(servedBy(df, mv), scanRoots(df))
-    assert(rows(df) == expect(q))
+    assert(rows(df) == expect(r, q))
   }
 
   test("refusal shapes scan the base join, never a wrong serve") {
@@ -235,7 +237,7 @@ class MvJoinSpec extends AnyFunSuite {
         scanRoots(df).exists(p => p.contains("fact_") || p.contains("dim_")),
         s"$q -> ${scanRoots(df)}")
       assert(!scanRoots(df).exists(_.contains("mv_")), q)
-      assert(rows(df) == expect(q), q)
+      assert(rows(df) == expect(r, q), q)
     }
   }
 
@@ -247,7 +249,7 @@ class MvJoinSpec extends AnyFunSuite {
       s"ON $f.sk = $d.sk GROUP BY $d.sk"
     val df = r.execute(q)
     assert(!scanRoots(df).exists(_.contains("mv_")), scanRoots(df))
-    assert(rows(df) == expect(q))
+    assert(rows(df) == expect(r, q))
   }
 
   test("schema evolution refuses on columns any MEMBER contributes to the view") {

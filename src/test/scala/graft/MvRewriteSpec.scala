@@ -55,8 +55,8 @@ class MvRewriteSpec extends AnyFunSuite {
 
   /** The ground truth: recompute on the base table directly (never
     * routed, never rewritten). */
-  private def expect(sql: String): Seq[Seq[Any]] =
-    spark.sql(sql).collect().map(_.toSeq.toSeq).toSeq.sortBy(_.mkString("|"))
+  private def expect(r: SqlRouter, sql: String): Seq[Seq[Any]] =
+    TestSpark.recompute(r, sql).collect().map(_.toSeq.toSeq).toSeq.sortBy(_.mkString("|"))
 
   private def got(df: DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq.toSeq).toSeq.sortBy(_.mkString("|"))
@@ -68,7 +68,7 @@ class MvRewriteSpec extends AnyFunSuite {
       s"FROM $t GROUP BY k, region"
     val df = r.execute(q)
     assert(servedBy(df, mv), scanRoots(df))
-    assert(got(df) == expect(q))
+    assert(got(df) == expect(r, q))
     assert(df.columns.toSeq == Seq("k", "region", "n", "s", "mn", "mx", "ap"))
   }
 
@@ -79,7 +79,7 @@ class MvRewriteSpec extends AnyFunSuite {
       s"FROM $t GROUP BY region"
     val df = r.execute(q)
     assert(servedBy(df, mv), scanRoots(df))
-    assert(got(df) == expect(q))
+    assert(got(df) == expect(r, q))
   }
 
   test("global aggregate (no GROUP BY) rolls up from the view") {
@@ -87,7 +87,7 @@ class MvRewriteSpec extends AnyFunSuite {
     val q = s"SELECT count(*) AS n, sum(amount) AS s, avg(price) AS ap FROM $t"
     val df = r.execute(q)
     assert(servedBy(df, mv), scanRoots(df))
-    assert(got(df) == expect(q))
+    assert(got(df) == expect(r, q))
   }
 
   test("HAVING and ORDER BY above the rewritten aggregate still resolve") {
@@ -97,7 +97,7 @@ class MvRewriteSpec extends AnyFunSuite {
     val df = r.execute(q)
     assert(servedBy(df, mv), scanRoots(df))
     assert(df.collect().map(_.toSeq.toSeq).toSeq ==
-      spark.sql(q).collect().map(_.toSeq.toSeq).toSeq) // order preserved
+      TestSpark.recompute(r, q).collect().map(_.toSeq.toSeq).toSeq) // order preserved
   }
 
   test("rewrite tracks DML through incremental maintenance") {
@@ -109,7 +109,7 @@ class MvRewriteSpec extends AnyFunSuite {
       s"max(amount) AS mx FROM $t GROUP BY k, region"
     val df = r.execute(q)
     assert(servedBy(df, mv), scanRoots(df))
-    assert(got(df) == expect(q))
+    assert(got(df) == expect(r, q))
   }
 
   test("shapes the view cannot serve pass through to the base") {
@@ -125,7 +125,7 @@ class MvRewriteSpec extends AnyFunSuite {
     ).foreach { q =>
       val df = r.execute(q)
       assert(servedBy(df, s"base_"), s"$q -> ${scanRoots(df)}")
-      assert(got(df) == expect(q), q)
+      assert(got(df) == expect(r, q), q)
     }
   }
 
@@ -138,6 +138,17 @@ class MvRewriteSpec extends AnyFunSuite {
     val q = s"SELECT k, region, count(*) AS n FROM $other AS $t GROUP BY k, region"
     val df = r.execute(q)
     assert(got(df) == Seq(Seq(1L, "east", 1L)))
+    // nor does a CTE of the base's name
+    val cte = r.execute(s"WITH $t AS (SELECT * FROM $other) " +
+      s"SELECT k, region, count(*) AS n FROM $t GROUP BY k, region")
+    assert(got(cte) == Seq(Seq(1L, "east", 1L)))
+    // nor the base at an older version: the view holds the current one
+    r.execute(s"INSERT INTO $t VALUES (1, 'east', 5000, 0.5)")
+    val old = r.execute(s"SELECT k, region, count(*) AS n FROM $t VERSION AS OF 1 " +
+      "GROUP BY k, region")
+    assert(servedBy(old, "base_"), scanRoots(old))
+    assert(got(old) == got(r.execute(
+      s"SELECT k, region, count(*) AS n FROM $t WHERE amount < 1000 GROUP BY k, region")))
   }
 
   test("empty base passes through untouched (empty reads are not file scans)") {
@@ -172,7 +183,7 @@ class MvRewriteSpec extends AnyFunSuite {
     val q = s"SELECT k FROM $t GROUP BY k"
     val df = r.execute(q)
     assert(servedBy(df, mv), scanRoots(df))
-    assert(got(df) == expect(q))
+    assert(got(df) == expect(r, q))
   }
 
   test("WHERE on view keys is served from the view — equality, IN, range, both grains") {
@@ -200,7 +211,7 @@ class MvRewriteSpec extends AnyFunSuite {
     ).foreach { q =>
       val df = r.execute(q)
       assert(servedBy(df, mv), s"$q -> ${scanRoots(df)}")
-      assert(got(df) == expect(q), q)
+      assert(got(df) == expect(r, q), q)
     }
   }
 
@@ -226,7 +237,7 @@ class MvRewriteSpec extends AnyFunSuite {
       s"FROM $t WHERE region IN ('east', 'north') GROUP BY k, region"
     val df = r.execute(q)
     assert(servedBy(df, mv), scanRoots(df))
-    assert(got(df) == expect(q))
+    assert(got(df) == expect(r, q))
   }
 
   /** sales table plus a FILTERED view over `region = 'east' AND
@@ -250,7 +261,7 @@ class MvRewriteSpec extends AnyFunSuite {
   test("filtered view: bootstrap equals a filtered recompute; spec round-trips the predicate") {
     val (r, t, mv) = filteredFixture()
     val viewRows = r.execute(s"SELECT k, n, s_amt FROM v_$t ORDER BY k")
-    val truth = expect(s"SELECT k, count(*) AS n, sum(amount) AS s_amt FROM $t " +
+    val truth = expect(r, s"SELECT k, count(*) AS n, sum(amount) AS s_amt FROM $t " +
       "WHERE region = 'east' AND amount >= 100 GROUP BY k ORDER BY k")
     assert(got(viewRows) == truth)
     val shown = r.execute("SHOW MATERIALIZED VIEWS").collect()
@@ -266,25 +277,25 @@ class MvRewriteSpec extends AnyFunSuite {
       "WHERE region = 'east' AND amount >= 100 GROUP BY k"
     val df1 = r.execute(q1)
     assert(servedBy(df1, mv), scanRoots(df1))
-    assert(got(df1) == expect(q1))
+    assert(got(df1) == expect(r, q1))
     // conjuncts in the OTHER order still match (set matching)
     val q2 = s"SELECT k, count(*) AS n FROM $t " +
       "WHERE amount >= 100 AND region = 'east' GROUP BY k"
     val df2 = r.execute(q2)
     assert(servedBy(df2, mv), scanRoots(df2))
-    assert(got(df2) == expect(q2))
+    assert(got(df2) == expect(r, q2))
     // extra KEY-ONLY conjuncts ride along over the view
     val q3 = s"SELECT k, sum(amount) AS s FROM $t " +
       "WHERE region = 'east' AND amount >= 100 AND k IN (1, 3) GROUP BY k"
     val df3 = r.execute(q3)
     assert(servedBy(df3, mv), scanRoots(df3))
-    assert(got(df3) == expect(q3))
+    assert(got(df3) == expect(r, q3))
     // rollup grain (global aggregate) under the matching predicate
     val q4 = s"SELECT count(*) AS n, min(amount) AS mn FROM $t " +
       "WHERE region = 'east' AND amount >= 100"
     val df4 = r.execute(q4)
     assert(servedBy(df4, mv), scanRoots(df4))
-    assert(got(df4) == expect(q4))
+    assert(got(df4) == expect(r, q4))
   }
 
   test("filtered view refuses queries that do NOT imply its predicate") {
@@ -293,18 +304,18 @@ class MvRewriteSpec extends AnyFunSuite {
     val q1 = s"SELECT k, count(*) AS n FROM $t GROUP BY k"
     val df1 = r.execute(q1)
     assert(!servedBy(df1, mv), scanRoots(df1))
-    assert(got(df1) == expect(q1))
+    assert(got(df1) == expect(r, q1))
     // only half the view predicate
     val q2 = s"SELECT k, count(*) AS n FROM $t WHERE region = 'east' GROUP BY k"
     val df2 = r.execute(q2)
     assert(!servedBy(df2, mv), scanRoots(df2))
-    assert(got(df2) == expect(q2))
+    assert(got(df2) == expect(r, q2))
     // a DIFFERENT predicate on the same columns
     val q3 = s"SELECT k, count(*) AS n FROM $t " +
       "WHERE region = 'west' AND amount >= 100 GROUP BY k"
     val df3 = r.execute(q3)
     assert(!servedBy(df3, mv), scanRoots(df3))
-    assert(got(df3) == expect(q3))
+    assert(got(df3) == expect(r, q3))
   }
 
   test("filtered view maintains exactly across DML, incl. rows entering/leaving the predicate") {
@@ -318,7 +329,7 @@ class MvRewriteSpec extends AnyFunSuite {
     r.execute(s"INSERT INTO $t VALUES (9, 'east', 250, 1.0), (9, 'west', 999, 2.0), (9, 'east', 50, 3.0)")
     // the maintained view equals a cold filtered recompute
     val viewRows = got(r.execute(s"SELECT k, n, s_amt, mn_amt FROM v_$t"))
-    val truth = expect(s"SELECT k, count(*) AS n, sum(amount) AS s_amt, " +
+    val truth = expect(r, s"SELECT k, count(*) AS n, sum(amount) AS s_amt, " +
       s"min(amount) AS mn_amt FROM $t WHERE region = 'east' AND amount >= 100 GROUP BY k")
     assert(viewRows == truth)
     // and the rewrite still serves, exactly
@@ -326,7 +337,7 @@ class MvRewriteSpec extends AnyFunSuite {
       "WHERE region = 'east' AND amount >= 100 GROUP BY k"
     val df = r.execute(q)
     assert(servedBy(df, mv), scanRoots(df))
-    assert(got(df) == expect(q))
+    assert(got(df) == expect(r, q))
     // the persisted spec round-trips the predicate (restart path):
     // the sidecar text carries the WHERE clause verbatim
     val sidecar = new String(java.nio.file.Files.readAllBytes(

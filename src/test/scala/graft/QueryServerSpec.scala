@@ -94,6 +94,13 @@ class QueryServerSpec extends AnyFunSuite {
     assert(d.body().contains("\"managed\":true"), d.body())
     assert(d.body().contains("\"version\":1"), d.body())
     assert(d.body().contains("\"op\":\"insert\""), d.body())
+    // a time-travel read leaves no name behind in either listing
+    assert(post("/query", "SELECT id FROM http_meta VERSION AS OF 1").statusCode() == 200)
+    val listed = client.send(HttpRequest.newBuilder(URI.create(base + "/tables")).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(listed.body().contains("\"http_meta\"") && !listed.body().contains("http_meta__v"),
+      listed.body())
+    assert(!spark.catalog.listTables().collect().exists(_.name.contains("http_meta__v")))
   }
 
   test("managed tables survive a server restart via the durable catalog") {

@@ -24,6 +24,9 @@ class SqlRouterSpec extends AnyFunSuite {
     val got = router.execute("SELECT id, name, score FROM rt ORDER BY id").collect()
     assert(got.map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq ==
       Seq((1L, "alpha", 1.5), (2L, "beta", 2.5)))
+    // DESCRIBE on a managed name lists its columns
+    assert(router.execute("DESCRIBE rt").collect().map(r => (r.getString(0), r.getString(1)))
+      .toSeq == Seq(("id", "bigint"), ("name", "string"), ("score", "double")))
   }
 
   test("CTAS: CREATE MANAGED TABLE ... AS SELECT infers schema, writes rows, registers") {
@@ -476,9 +479,9 @@ class SqlRouterSpec extends AnyFunSuite {
     router.execute("CREATE MATERIALIZED VIEW mfj OVER mf JOIN mfd ON mf.g = mfd.g " +
       s"KEY (mfd.region) COUNT n SUM (mf.v AS sv) LOCATION '$dir/vj'")
     def rows(sql: String) = router.execute(sql).collect().map(_.toSeq).toSet
-    // the recompute goes straight to spark.sql over the tables' temp
-    // views: routed, it would be answered from the very view it checks
-    def recomputed(sql: String) = spark.sql(sql).collect().map(_.toSeq).toSet
+    // the recompute reads the tables' snapshots outside the router:
+    // routed, it would be answered from the very view it checks
+    def recomputed(sql: String) = TestSpark.recompute(router, sql).collect().map(_.toSeq).toSet
     val views = Seq(
       "mfv" -> ("SELECT g, n, sv FROM mfv",
         "SELECT g, count(*), sum(v) FROM mf GROUP BY g"),
@@ -588,8 +591,8 @@ class SqlRouterSpec extends AnyFunSuite {
       assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get <= 16, s"one ingest ran ${jobs.get} Spark jobs")
-    // the recompute goes straight to spark.sql: routed, the view would answer it
-    def rowsOf(sql: String) = spark.sql(sql).collect().map(_.toSeq).toSet
+    // the recompute bypasses the router: routed, the view would answer it
+    def rowsOf(sql: String) = TestSpark.recompute(router, sql).collect().map(_.toSeq).toSet
     assert(rowsOf("SELECT g, n, sv FROM ij_by_g") ==
       rowsOf("SELECT g, count(*), sum(v) FROM ij GROUP BY g"))
   }
@@ -644,6 +647,31 @@ class SqlRouterSpec extends AnyFunSuite {
     assert(router.execute("SELECT count(*) c FROM tx_e")
       .collect().head.getLong(0) == 1)
     assert(ManagedTable.history(spark, r1).map(_.op) == Seq("create", "insert"))
+  }
+
+  test("a reader beside BEGIN...COMMIT never sees the batch's staged rows") {
+    val (r1, r2) = (freshRoot(), freshRoot())
+    router.execute(s"CREATE MANAGED TABLE iso_a (id BIGINT) LOCATION '$r1'")
+    router.execute(s"CREATE MANAGED TABLE iso_b (id BIGINT) LOCATION '$r2'")
+    router.execute("INSERT INTO iso_a VALUES (1)")
+    // the batch's second statement holds inside iso_hold until released
+    spark.udf.register("iso_hold", (x: Long) => { SqlRouterSpec.hold(); x })
+    SqlRouterSpec.entered = new java.util.concurrent.CountDownLatch(1)
+    SqlRouterSpec.release = new java.util.concurrent.CountDownLatch(1)
+    val batch = new Thread(() => router.execute(
+      "BEGIN; INSERT INTO iso_a VALUES (2); " +
+        "INSERT INTO iso_b SELECT iso_hold(id) FROM range(1); COMMIT").collect(): Unit)
+    batch.start()
+    def count(t: String) = router.execute(s"SELECT count(*) FROM $t").collect().head.getLong(0)
+    try {
+      assert(SqlRouterSpec.entered.await(120, java.util.concurrent.TimeUnit.SECONDS))
+      // iso_a's second row is staged, not published
+      assert(count("iso_a") == 1)
+      assert(router.execute("SELECT id FROM iso_a a JOIN iso_a b USING (id)").count() == 1)
+    } finally SqlRouterSpec.release.countDown()
+    batch.join(120000)
+    assert(!batch.isAlive)
+    assert(count("iso_a") == 2 && count("iso_b") == 1)
   }
 
   test("bare txn keywords and read-only batches are refused loudly") {
@@ -817,6 +845,12 @@ class SqlRouterSpec extends AnyFunSuite {
     val e = intercept[Exception](
       router.execute("SELECT * FROM no_such VERSION AS OF 1"))
     assert(e.getMessage != null)
+    // a CTE of the same name shadows the managed table
+    assert(vals("WITH tt AS (SELECT 9L AS id, 'cte' AS v) SELECT id, v FROM tt") ==
+      Set((9L, "cte")))
+    // the phrase inside a string literal is data, not a time-travel clause
+    assert(router.execute("SELECT 'tt VERSION AS OF 1' AS s").collect().head.getString(0) ==
+      "tt VERSION AS OF 1")
     router.execute("DROP MANAGED TABLE tt2 PURGE")
     router.execute("DROP MANAGED TABLE tt PURGE")
   }
@@ -864,5 +898,16 @@ class SqlRouterSpec extends AnyFunSuite {
         r.execute("SHOW FILES FOR nosuch_graft_tbl"))
       assert(g.getMessage.contains("no managed table"), g.getMessage)
     } finally spark.sql("DROP TABLE IF EXISTS alter_passthru")
+  }
+}
+
+object SqlRouterSpec {
+  // the transaction-isolation test's gate: the UDF runs in a task, so it
+  // reaches the latches through this object, not through its closure
+  @volatile var entered = new java.util.concurrent.CountDownLatch(0)
+  @volatile var release = new java.util.concurrent.CountDownLatch(0)
+  def hold(): Unit = if (entered.getCount > 0) {
+    entered.countDown()
+    release.await(120, java.util.concurrent.TimeUnit.SECONDS): Unit
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Path}
-import org.apache.spark.sql.SparkSession
+import java.nio.file.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.server.SqlRouter
+import graft.sources.ManagedTable
 
 /** One shared local session for the whole test run (session startup is
   * ~9s; per-suite sessions would dominate test time). */
@@ -18,24 +20,19 @@ object TestSpark {
   }
   val sf0001 = "/root/testdata/sf0.001"
 
-  private val scratch = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
-  private lazy val cleanup: Unit = sys.addShutdownHook {
-    scratch.forEach { d =>
-      if (Files.exists(d)) {
-        val walk = Files.walk(d)
-        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => try Files.deleteIfExists(p): Unit catch { case _: java.io.IOException => })
-        finally walk.close()
-      }
+  /** `sql` over the latest snapshots of the managed tables of `router`
+    * that it names, planned in a session of its own: a ground-truth
+    * recompute that the router's view rewrite never serves. */
+  def recompute(router: SqlRouter, sql: String): DataFrame = {
+    val s = spark.newSession()
+    router.registered.foreach { case (name, root) =>
+      if (s"(?i)\\b${java.util.regex.Pattern.quote(name)}\\b".r.findFirstIn(sql).isDefined)
+        ManagedTable.read(s, root).createOrReplaceTempView(name)
     }
-  }: Unit
+    s.sql(sql)
+  }
 
   /** A fresh scratch directory under the system temp dir, deleted with
     * everything in it when the (forked) test JVM exits. */
-  def tempDir(prefix: String): Path = {
-    cleanup
-    val d = Files.createTempDirectory(prefix)
-    scratch.add(d)
-    d
-  }
+  def tempDir(prefix: String): Path = graft.util.Scratch.tempDir(prefix)
 }
